@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_BENCH_RUNS` times each (default 3),
@@ -15,18 +14,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(parallelism = cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // reference semantics: nil/infinity, not runtime aborts (GraftSession)
-      .config("spark.sql.legacy.sizeOfNull", "false") // size(null) stays null, not legacy -1
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // unions concatenate, never zip (GraftSession rationale)
-      .config("spark.sql.unionOutputPartitioning", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: absorb first-job costs (codegen/scan-strategy init, parquet

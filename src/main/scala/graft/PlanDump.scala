@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named SparkEntry queries to files —
   * the optimization rounds' before/after plan artifacts
-  * (`plans/r<N>/<query>_<suffix>.txt`). Session config mirrors
-  * [[Bench]] so the dumped plan is the one the bench actually runs.
+  * (`plans/r<N>/<query>_<suffix>.txt`). The session is [[Bench]]'s
+  * ([[GraftSession]] confs) so the dumped plan is the one the bench runs.
   * `runMain graft.PlanDump <outDir> <suffix> <sfDir> <query...>`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -13,16 +11,10 @@ object PlanDump {
     val suffix = args(1)
     val sfDir = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(parallelism = cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.sizeOfNull", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.unionOutputPartitioning", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

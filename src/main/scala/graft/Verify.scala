@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,10 @@ object Verify {
     val picked =
       if (rest.nonEmpty) SparkEntry.queries.filter(kv => rest.contains(kv._1))
       else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(parallelism = cpus)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // reference semantics: nil/infinity, not runtime aborts (GraftSession)
-      .config("spark.sql.legacy.sizeOfNull", "false") // size(null) stays null, not legacy -1
       .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark has no ns timestamps
-      // (SURVEY §1.2) — read as long (ns since epoch), convert at facade.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // unions concatenate, never zip (GraftSession rationale)
-      .config("spark.sql.unionOutputPartitioning", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -299,7 +299,7 @@ case class VectorCosine(left: Expression, right: Expression)
   * difference; the bit-identity claim above is per-field, conditional
   * on a non-null input.
   *
-  * Why native (r16, found by IvfRouteWidthStudy): in the HOF form the
+  * Why native (r16, scaling/ivf_route_width.json): in the HOF form the
   * `scale` operand of the per-element divide is the whole O(d) absMax
   * aggregate, and the interpreted lambda path re-evaluates it for EVERY
   * element — O(d²) per row. Quantizing 50k d = 4096 vectors ran ~20

@@ -79,11 +79,7 @@ object Manifest {
     * later read failed "no manifest" on a table that logically still
     * exists, empty). A direct write lands a schema-only parquet file even
     * at zero rows, so the layout stays readable. */
-  // private[graft]: graft.ManifestFoldStudy synthesizes parts directly
-  // to measure compactManifest's driver fold at row counts (300k-1M)
-  // where building the table for real would measure file creation, not
-  // the fold. Not API — mutations go through the appenders/deleteKeys.
-  private[graft] def writePart(rows: DataFrame, url: String,
+  private def writePart(rows: DataFrame, url: String,
       segment: String, commit: Long): Unit =
     rows.coalesce(1)
       .withColumn("__commit", F.lit(commit))
@@ -947,9 +943,9 @@ object Manifest {
     // every maintenance verb pays (zero Spark jobs): small manifests
     // fold on the driver (one collect, job-light — the Delta-checkpoint
     // posture, and the path every in-line streaming compaction takes);
-    // big ones fold DISTRIBUTED — ManifestFoldStudy at 1M rows: driver
-    // fold ~9 s at ~2 GB of collect-inflated heap vs distributed ~3.9 s
-    // with the driver doing only O(parts) footer reads + renames.
+    // big ones fold DISTRIBUTED — scaling/manifest_fold.json at 1M rows:
+    // driver fold ~9 s at ~2 GB of collect-inflated heap vs distributed
+    // ~3.9 s with the driver doing only O(parts) footer reads + renames.
     val hconf = spark.sparkContext.hadoopConfiguration
     // ONE listing feeds both the route decision and (on the distributed
     // path) the footer commit reads — object-storage LIST economics, the
@@ -1105,7 +1101,7 @@ object Manifest {
     * identical (see [[manifest]]). Live count is read from the written
     * part's own footer (row count minus the carried tombstones' null
     * count) on the full-fold path; a retention fold pays one count job.
-    * ManifestFoldStudy at 1M rows: ~3.9 s here vs the driver fold's
+    * scaling/manifest_fold.json at 1M rows: ~3.9 s here vs the driver fold's
     * ~9 s, with no row-bound driver materialization. */
   /** (segment, commit) per part from parquet footer stats — zero Spark
     * jobs, over the FileStatuses the routing pass already listed. The

@@ -172,10 +172,11 @@ object Shards {
     // union children, folded as a BALANCED tree: a left-deep
     // `reduce(_ unionAll _)` re-analyzes the growing prefix at every
     // step — O(n²) driver analysis, measured bending the per-shard plan
-    // cost 20 ms → 35 ms between 256 and 1024 shards (ShardPlanStudy) —
-    // while pairing neighbors re-analyzes each leaf only O(log n) times
-    // and Catalyst's CombineUnions flattens the tree back to one n-ary
-    // Union before execution, so the physical plan (and partition order:
+    // cost 20 ms → 35 ms between 256 and 1024 shards
+    // (scaling/shard_plan.json) — while pairing neighbors re-analyzes
+    // each leaf only O(log n) times and Catalyst's CombineUnions flattens
+    // the tree back to one n-ary Union before execution, so the physical
+    // plan (and partition order:
     // union concatenates children left-to-right at every level) is
     // identical. The remaining plan cost is the linear per-shard
     // relation build (~20 ms/shard local; measured in

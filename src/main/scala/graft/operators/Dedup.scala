@@ -1189,7 +1189,7 @@ object Dedup {
     * SEGMENT pair, degrading toward per-segment granularity as segments
     * accumulate. At high segment counts, compact ([[compactMinhashIndex]])
     * — the same posture as any LSM-shaped index. Measured trigger
-    * (`graft.SegmentStudy`, scaling/mh_segments.json): at 20k docs probe
+    * (scaling/mh_segments.json): at 20k docs probe
     * latency is flat through ~16 segments and ~75% over the floor by 64
     * (per-segment posting rows + file-listing overhead); compaction cost
     * ~1.8 s and restored the floor, paying for itself within a handful
@@ -1366,7 +1366,7 @@ object Dedup {
     * [[compactMinhashIndex]], whose full fold restores the exact
     * fresh-build cap semantics). Driven per trigger by a stream, the
     * amortized cost is O(batch · log(corpus/batch)) — flat in the base
-    * size ([[graft.TieredCompactStudy]], scaling/tiered_compact.json) —
+    * size (scaling/tiered_compact.json) —
     * where the full fold per trigger was O(index).
     *
     * Contract per fold: the tier segment is ROW-IDENTICAL to the folded

@@ -481,7 +481,7 @@ object Embeddings {
     * phases are laid out for contiguous row access (loop-interchanged
     * tred2 accumulation; QL rotations on a transposed vectors-as-rows
     * matrix), so neither hits Jacobi's cache wall at transformer widths.
-    * Measured (PcaDimStudy, scaling/pca_dim*.json): d = 1024 Jacobi
+    * Measured (scaling/pca_dim*.json): d = 1024 Jacobi
     * 196 s → 1.45 s (135×); d = 2048 13.1 s, an 8-9× step per doubling
     * — the d³ constant, no wall. fitPca uses this; [[jacobiEigen]]
     * stays as the independent cross-check implementation the spec
@@ -549,7 +549,7 @@ object Embeddings {
     // INTERCHANGED from the textbook j-then-k order: the inner sweeps
     // walk z's ROWS (contiguous in a row-major array) instead of
     // striding down columns, which past ~1k costs a cache miss per
-    // element (the same wall PcaDimStudy caught in Jacobi; measured on
+    // element (the same wall Jacobi hit, scaling/pca_dim.json; measured on
     // this phase + the transposed QL below: 142 s → 13.1 s at d = 2048).
     // Summation order changes (k-major), still fixed → deterministic.
     val gs = new Array[Double](n)

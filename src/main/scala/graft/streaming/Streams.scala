@@ -211,33 +211,27 @@ object Streams {
           excludeSegment = Some(seg), indexFrames = idxFrames)
       val survivors = deduped.persist()
       try {
-        phased(s"$name b$batchId survivors-write") {
-          survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
-        }
+        survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
         // append from the probe's own cached signatures — row-identical
         // to the from-text append, minus a second shingling + minhashing
-        // pass over the batch (r17 optimization; the phase timers put
-        // that repeat at roughly half the append phase per trigger). The
-        // probe's own-segment exclusion is passed through and ENFORCED
-        // (r18): the append's correctness under plan re-execution
-        // depends on it.
-        phased(s"$name b$batchId index-append") {
-          graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
-            id, indexPath, seg, probeExcludedSegment = Some(seg))
-        }
+        // pass over the batch (r17 optimization; that repeat measured at
+        // roughly half the append phase per trigger). The probe's
+        // own-segment exclusion is passed through and ENFORCED (r18): the
+        // append's correctness under plan re-execution depends on it.
+        graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
+          id, indexPath, seg, probeExcludedSegment = Some(seg))
       } finally {
         survivors.unpersist(false)
         release()
       }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        phased(s"$name b$batchId compact") {
-          if (tieredCompaction)
-            graft.operators.Dedup.tierCompactMinhashIndex(spark, indexPath,
-              excludeSegment = Some(seg))
-          else
-            graft.operators.Dedup.compactMinhashIndex(spark, indexPath,
-              excludeSegment = Some(seg))
-        }
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
+        if (tieredCompaction)
+          graft.operators.Dedup.tierCompactMinhashIndex(spark, indexPath,
+            excludeSegment = Some(seg))
+        else
+          graft.operators.Dedup.compactMinhashIndex(spark, indexPath,
+            excludeSegment = Some(seg))
+      }
     }
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
@@ -424,9 +418,9 @@ object Streams {
         // consumers — the outPath write and the index append — and
         // without the cache the SECOND consumer re-executes the entire
         // probe pipeline (index scan, cosine ranking, rescore refine)
-        // inside the append write. Measured per batch (stream-phase
-        // timers): the append phase carried 1.4-2.5 s of repeated probe
-        // work at sf0.1 — at production batch sizes the probe is the
+        // inside the append write. Measured per batch: the append phase
+        // carried 1.4-2.5 s of repeated probe work at sf0.1 — at
+        // production batch sizes the probe is the
         // dominant per-trigger cost and would simply double. The dedup
         // twin below has always persisted its survivors; this aligns
         // the embed stream.
@@ -435,34 +429,29 @@ object Streams {
           .select(F.col("__vid").as("vec_id"), F.col("__v").as("embedding"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          phased(s"$name b$batchId probe+survivors-write") {
-            survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
-          }
-          phased(s"$name b$batchId index-append") {
-            pcaModel match {
-              case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
-                graft.operators.Embeddings.pcaProject(survivors,
-                  F.col("embedding"), m, "__wv", whiten = true),
-                F.col("vec_id"), F.col("__wv"), indexPath, seg,
-                expectWhitened = true,
-                expectedModelFp = Some(m.fingerprint))
-              case None => graft.operators.Similarity.appendToIvfIndex(
-                survivors, F.col("vec_id"), F.col("embedding"), indexPath, seg)
-            }
+          survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
+          pcaModel match {
+            case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
+              graft.operators.Embeddings.pcaProject(survivors,
+                F.col("embedding"), m, "__wv", whiten = true),
+              F.col("vec_id"), F.col("__wv"), indexPath, seg,
+              expectWhitened = true,
+              expectedModelFp = Some(m.fingerprint))
+            case None => graft.operators.Similarity.appendToIvfIndex(
+              survivors, F.col("vec_id"), F.col("embedding"), indexPath, seg)
           }
         } finally {
           survivors.unpersist(false)
           ()
         }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          phased(s"$name b$batchId compact") {
-            if (tieredCompaction)
-              graft.operators.Similarity.tierCompactIvfIndex(spark,
-                indexPath, excludeSegment = Some(seg))
-            else
-              graft.operators.Similarity.compactIvfIndex(spark, indexPath,
-                excludeSegment = Some(seg))
-          }
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
+          if (tieredCompaction)
+            graft.operators.Similarity.tierCompactIvfIndex(spark,
+              indexPath, excludeSegment = Some(seg))
+          else
+            graft.operators.Similarity.compactIvfIndex(spark, indexPath,
+              excludeSegment = Some(seg))
+        }
       } finally {
         batch.unpersist(false)
         ()
@@ -643,18 +632,6 @@ object Streams {
     prefix
   }
 
-  /** Phase timer for the ingest loops' per-batch work — prints to stderr
-    * only under SPARK_GRAFT_STREAM_DEBUG (builder profiling; a production
-    * run pays one env check). */
-  private def phased[A](label: String)(body: => A): A =
-    if (!sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[stream-phase] $label ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
-
   /** Truncated SHA-256 of the checkpoint path, not String.hashCode: a
     * 32-bit hash collision between two runs' checkpoints would make the
     * new run's seg b0 dynamic-overwrite (silently DELETE) the earlier
@@ -685,24 +662,10 @@ object Streams {
     // state commits on /tmp, ~0 on /dev/shm). A production sink would point
     // this at durable storage; the memory sink is already non-durable.
     val ckpt = checkpointDir(name)
-    // Opt-in RocksDB state store: the production choice once state exceeds
-    // executor heap (HDFS-backed state is an in-memory map). Measured at
-    // harness SF it is 4-5x SLOWER (per-row native put overhead, 40k-row
-    // state), so heap-backed stays the default here.
-    if (sys.env.contains("SPARK_GRAFT_ROCKSDB"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val q = stream.writeStream.outputMode(mode)
       .option("checkpointLocation", ckpt.toString)
       .format("memory").queryName(name).start()
     q.processAllAvailable()
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(
-        s"[stream] $name batch ${p.batchId} rows ${p.numInputRows} " +
-          s"ms ${p.batchDuration} durations ${p.durationMs} " +
-          s"state ${Option(p.stateOperators).toSeq.flatten.map(s =>
-            s"rows=${s.numRowsTotal} upd=${s.numRowsUpdated} " +
-              s"rm=${s.numRowsRemoved} commit=${s.commitTimeMs}ms").mkString("; ")}"))
     q.stop()
     spark.table(name)
   }

@@ -288,6 +288,28 @@ class GdfSpec extends SparkSpec {
     assert(c("spark.sql.unionOutputPartitioning") == "false")
   }
 
+  test("the spec session runs under every GraftSession recommended conf") {
+    GraftSession.recommendedConfs(4).foreach { case (k, v) =>
+      assert(spark.conf.getOption(k).contains(v),
+        s"$k = ${spark.conf.getOption(k)}, recommended $v")
+    }
+  }
+
+  test("GraftSession is the only session builder under src/") {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get("src")
+    val self = "main/scala/graft/GraftSession.scala"
+    assert(java.nio.file.Files.exists(src.resolve(self)),
+      s"no $self under ${src.toAbsolutePath}")
+    // split so this file does not match itself
+    val call = "SparkSession" + ".builder"
+    val hits = java.nio.file.Files.walk(src).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains(call))
+      .map(p => src.relativize(p).toString).toSeq.sorted
+    assert(hits == Seq(self), hits)
+  }
+
   test("concat_rows of SinglePartition frames keeps frame order and " +
       "partition concatenation (the Spark 4 union zip stays off)") {
     val a = Gdf(Seq(1L, 2L).toDF("v").coalesce(1))

@@ -1875,7 +1875,7 @@ class IOStreamsSpec extends SparkSpec {
   test("training shards: balanced union fold keeps shard order and the " +
       "round trip at a non-power-of-two shard count") {
     // readShards folds the per-shard scans as a balanced tree (the
-    // left-deep reduce was O(n²) driver analysis — ShardPlanStudy);
+    // left-deep reduce was O(n²) driver analysis — scaling/shard_plan.json);
     // 5 shards exercises the odd-tail groupings at every fold level,
     // which must still concatenate strictly left-to-right
     val dir = tmp("graft_shards_odd")

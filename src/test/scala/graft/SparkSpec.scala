@@ -6,20 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs run
-  * in a single forked JVM, see build.sbt `Test / fork`). */
+  * in a single forked JVM, see build.sbt `Test / fork`), built from
+  * [[GraftSession]] so specs run under the confs Bench and Verify use. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder("graft-test", parallelism = 4)
     .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // reference semantics: nil/infinity, not runtime aborts (GraftSession)
-      .config("spark.sql.legacy.sizeOfNull", "false") // size(null) stays null, not legacy -1
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // unions concatenate, never zip (GraftSession rationale: concat_rows
-    // frame order + readShards partition-per-shard)
-    .config("spark.sql.unionOutputPartitioning", "false")
     .getOrCreate()
 }
 
