@@ -109,24 +109,9 @@ object Dedup {
     * blowup — the standard guardrail at scale. */
   def minhashLshCandidates(df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      maxBucket: Int = 1000): DataFrame = {
-    // fully fused native shingling + minhash + banding — one eval per row
-    // emitting the band bucket hashes directly (see TextExprs); the
-    // signature array never materializes as a column
-    val banded = df.select(asLongId(id).as("id"), F.posexplode(
-      graft.functions.TextExprs.minhashBandHashes(
-        text, shingleSize, numHashes, bands)).as(Seq("band", "bucket")))
-    // capped saturating collect (see [[graft.functions.CappedSortedIds]]):
-    // same [2, maxBucket] band semantics as collect_list + size filter, but
-    // a degenerate bucket buffers and ships <= maxBucket+1 ids instead of
-    // its whole posting list
-    banded.groupBy("band", "bucket")
-      .agg(graft.functions.AggExprs.cappedSortedIds(F.col("id"), maxBucket)
-        .as("ids"))
-      .filter(F.col("ids").isNotNull)
-      .select(F.explode(bucketPairs(F.col("ids"))).as("p"))
-      .select("p.*").distinct()
-  }
+      maxBucket: Int = 1000): DataFrame =
+    lshCandidatesFromHashes(hashedShingles(df, id, text, shingleSize),
+      numHashes, bands, maxBucket)
 
   /** Band planner for MinHash LSH (the MMDS §3.4.3 s-curve rule): among
     * the (bands, rowsPerBand) factorizations of `numHashes`, pick the one
@@ -150,101 +135,105 @@ object Dedup {
       .minBy { case (_, _, mid) => math.abs(mid - threshold) }
   }
 
-  /** LSH candidate pairs from a pre-hashed shingle frame (`id` bigint,
-    * `sh` array<bigint> — [[shingleHashes]] output): band hashes derive
-    * FROM the stored hashes ([[graft.functions.TextExprs
-    * .minhashBandHashesFromHashes]] ≡ [[graft.functions.TextExprs
-    * .minhashBandHashes]]-over-text, the identity the index compactor's
-    * row-identity spec pins), so a caller that already paid the corpus
-    * text pass never re-normalizes/re-tokenizes (r18 optimization — the
-    * pair family processed the corpus text once for candidates and twice
-    * more for verification). */
-  private def lshCandidatesFromHashes(hashed: DataFrame, numHashes: Int,
-      bands: Int, maxBucket: Int): DataFrame =
-    hashed.select(F.col("id"), F.posexplode(
+  /** The MinHash band fold every LSH path shares: `(id, sh)` rows (`sh`
+    * the [[shingleHashes]] array) to `(band, bucket, ids)`. Band hashes
+    * derive from the stored shingle hashes
+    * ([[graft.functions.TextExprs.minhashBandHashesFromHashes]], equal to
+    * [[graft.functions.TextExprs.minhashBandHashes]] over the text — MinHash
+    * is duplicate-insensitive — so no caller re-tokenizes text it already
+    * hashed). The capped saturating collect
+    * ([[graft.functions.CappedSortedIds]]) drops buckets above `maxBucket`
+    * without buffering their posting lists. `minSize` 2 for live candidate
+    * generation (a singleton pairs nothing), 1 for index postings (a
+    * future batch doc may land in the bucket). */
+  private def bandFold(feats: DataFrame, numHashes: Int, bands: Int,
+      maxBucket: Int, minSize: Int): DataFrame =
+    feats.select(F.col("id"), F.posexplode(
         graft.functions.TextExprs.minhashBandHashesFromHashes(
           F.col("sh"), numHashes, bands)).as(Seq("band", "bucket")))
       .groupBy("band", "bucket")
-      .agg(graft.functions.AggExprs.cappedSortedIds(F.col("id"), maxBucket)
-        .as("ids"))
+      .agg(graft.functions.AggExprs.cappedSortedIds(F.col("id"), maxBucket,
+        minSize).as("ids"))
       .filter(F.col("ids").isNotNull)
+
+  /** LSH candidate pairs `(id_a < id_b)` from a pre-hashed shingle frame
+    * (`id` bigint, `sh` array<bigint>): the [[bandFold]] buckets expanded
+    * bucket-locally and deduplicated across bands. */
+  private def lshCandidatesFromHashes(hashed: DataFrame, numHashes: Int,
+      bands: Int, maxBucket: Int): DataFrame =
+    bandFold(hashed, numHashes, bands, maxBucket, minSize = 2)
       .select(F.explode(bucketPairs(F.col("ids"))).as("p"))
       .select("p.*").distinct()
 
-  /** The shared one-text-pass scan of the pair family (r18): the corpus is
-    * normalized + tokenized + shingle-hashed ONCE and cached; candidates
-    * band-hash from the cache and verification joins it — the same shape
-    * (and the same trade) as the r17 index build. MEMORY_AND_DISK: at
-    * corpus scale the hash arrays spill rather than evict. */
+  /** `(id, sh)`: the caller's id widened to bigint ([[asLongId]]) and the
+    * text's [[shingleHashes]] — the input of every band fold and of
+    * Jaccard verification. Deliberately uncached: a shuffle above a cached
+    * scan is never reused under AQE (its table-cache query stage
+    * canonicalizes by stage id), so a cached frame would make every
+    * consumer of the candidate table re-run the band fold and LSH shuffle.
+    * Uncached, exchange reuse runs the candidate subtree once; the
+    * verifier shingles only the candidate docs ([[verifyPairs]]). */
   private def hashedShingles(df: DataFrame, id: Column, text: Column,
       shingleSize: Int): DataFrame =
-    df.select(asLongId(id).as("id"),
-        shingleHashes(text, shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.select(asLongId(id).as("id"), shingleHashes(text, shingleSize).as("sh"))
 
   /** Near-dedup via MinHash LSH + exact Jaccard verification: candidates
-    * from the shared shingle-hash scan (one text-processing pass — see
-    * [[hashedShingles]]), verified against true shingle-set Jaccard ≥
-    * threshold. Returns (id_a, id_b, jaccard) confirmed pairs. */
+    * band-folded from the corpus shingle hashes ([[hashedShingles]]),
+    * verified against true shingle-set Jaccard ≥ threshold
+    * ([[verifyPairs]]). Returns (id_a, id_b, jaccard) confirmed pairs. */
   def minhashDuplicatePairs(df: DataFrame, id: Column, text: Column,
       threshold: Double, shingleSize: Int = 3, numHashes: Int = 32,
       bands: Int = 8): DataFrame = {
-    val hashed = hashedShingles(df, id, text, shingleSize)
-    val cands = lshCandidatesFromHashes(hashed, numHashes, bands,
+    val cands = lshCandidatesFromHashes(
+      hashedShingles(df, id, text, shingleSize), numHashes, bands,
       maxBucket = 1000)
-    verifyJaccardHashed(hashed, cands, threshold)
+    verifyJaccard(df.select(asLongId(id), text), cands, threshold,
+      shingleSize)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against a cached
-    * shingle-hash frame ([[hashedShingles]]). Hash arrays are pulled ONLY
-    * for docs appearing in a candidate pair (semi-join pruning) — at scale
-    * the candidate set is orders of magnitude smaller than the corpus —
-    * and no text is touched at all: the hashes come from the shared scan
-    * the candidate generation already paid for. */
-  private def verifyJaccardHashed(hashed: DataFrame, cands0: DataFrame,
-      threshold: Double): DataFrame = {
-    // the candidate table is consumed twice (id pruning + the pair join);
-    // without persisting, the whole candidate-generation subtree (banding,
-    // LSH shuffle) would execute twice. It is the small end of the
-    // pipeline by construction — pairs of ids — so it caches cheaply
-    // even at corpus scale. The explicit repartition PINS the cached
-    // partitioning: without it, whichever consumer materializes the cache
-    // first decides it, and when the broadcast-subquery thread (computing
-    // the id-pruning side) wins the race it bakes its
-    // coalesced-for-broadcast layout (~2 partitions) into the cache — the
-    // downstream verification joins then run near-single-threaded
-    // (measured: bimodal 5 s / 42 s on identical input). The partition
-    // COUNT must be explicit: a column-only repartition is advisory
-    // (REPARTITION_BY_COL — AQE may still coalesce it), an explicit count
-    // is binding. Hashing on (id_a, id_b) also co-locates the pair join's
-    // probe side.
-    val nPart = cands0.sparkSession.sessionState.conf.numShufflePartitions
-    val cands = cands0
-      .repartition(nPart, F.col("id_a"), F.col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** Exact verification of candidate pairs `(id_a, id_b)` against a
+    * two-column side frame `(id, input)` — the pair family's
+    * filter-then-verify tail, the shape of "Distributed Similarity Joins
+    * over Top-K Rankings" (EDBT 2020). The side is semi-joined to the
+    * candidate ids (at scale the candidates touch a small fraction of the
+    * corpus), THEN mapped through `value` (shingle hashes of the text;
+    * identity for vectors) — so only candidate docs pay it — joined to the
+    * pairs once per pair side, scored by `score`, and filtered at
+    * `threshold`. Returns `(id_a, id_b, <name>)`.
+    *
+    * No cache and no forced repartition: every consumer of the candidate
+    * table sits inside ONE action's DAG, so exchange reuse
+    * (ReusedExchange / AQE stage reuse) computes it once, and AQE orients
+    * the joins on real sizes. That holds only while no cached scan sits
+    * below the candidates ([[hashedShingles]]). A cached candidate table
+    * would need its partitioning pinned: whichever consumer materializes
+    * an InMemoryRelation first decides its layout (SCALING.md, the
+    * cached-partitioning race). */
+  private def verifyPairs(side: DataFrame, cands: DataFrame, name: String,
+      threshold: Double)(value: Column => Column,
+      score: (Column, Column) => Column): DataFrame = {
     val candIds = cands.select(F.explode(F.array(
       F.col("id_a"), F.col("id_b"))).as("id")).distinct()
-    // the hash side gets the same binding repartition AND its own persist:
-    // it feeds BOTH pair-join sides (sh_a, sh_b), and without the cache
-    // the corpus-scale hashed frame would be re-scanned + semi-joined
-    // twice (the r17 plans showed two full shingle subtrees here). It is
-    // candidate-scale, so it caches cheaply. The binding repartition
-    // matters as before: the pair join is borderline-broadcastable from
-    // EITHER side, and whichever side AQE probes from must not inherit a
-    // near-single-partition layout on a 32-core executor.
-    val verifySh = hashed
+    val pruned = side.toDF("id", "input")
       .join(candIds, Seq("id"), "left_semi")
-      .repartition(nPart, F.col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(F.col("id"), value(F.col("input")).as("v"))
     cands
-      .join(verifySh.withColumnsRenamed(Map("id" -> "id_a", "sh" -> "sh_a")), "id_a")
-      .join(verifySh.withColumnsRenamed(Map("id" -> "id_b", "sh" -> "sh_b")), "id_b")
-      .withColumn("jaccard",
-        F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast(DoubleType) /
-          F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .join(pruned.select(F.col("id").as("id_a"), F.col("v").as("__va")),
+        "id_a")
+      .join(pruned.select(F.col("id").as("id_b"), F.col("v").as("__vb")),
+        "id_b")
+      .withColumn(name, score(F.col("__va"), F.col("__vb")))
+      .filter(F.col(name) >= threshold)
+      .select("id_a", "id_b", name)
   }
+
+  /** [[verifyPairs]] by exact shingle-set Jaccard of the texts. */
+  private def verifyJaccard(texts: DataFrame, cands: DataFrame,
+      threshold: Double, shingleSize: Int): DataFrame =
+    verifyPairs(texts, cands, "jaccard", threshold)(
+      shingleHashes(_, shingleSize),
+      (a, b) => F.size(F.array_intersect(a, b)).cast(DoubleType) /
+        F.size(F.array_union(a, b)))
 
   /** Exact n-gram Jaccard similarity for all pairs sharing a rare shingle —
     * the non-probabilistic variant: inverted index on shingles (explode +
@@ -259,12 +248,10 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, threshold: Double = 0.5,
       maxDf: Int = 20, minCooccur: Int = 2): DataFrame = {
-    // one text pass (r18): postings explode from the shared cached
-    // shingle-hash scan and verification joins the same cache
-    val hashed = hashedShingles(df, id, text, shingleSize)
     // postings carry the 8-byte shingle hash, not the string — the shuffle
     // and groupBy key stays fixed-width regardless of shingle length
-    val postings = hashed.select(F.col("id"), F.explode(F.col("sh")).as("g"))
+    val postings = hashedShingles(df, id, text, shingleSize)
+      .select(F.col("id"), F.explode(F.col("sh")).as("g"))
     // saturating collect: common shingles (df ≫ maxDf — boilerplate) never
     // materialize their posting lists; see CappedSortedIds
     val rare = postings.groupBy("g")
@@ -277,7 +264,8 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).as("__cooccur"))
       .filter(F.col("__cooccur") >= minCooccur)
       .select("id_a", "id_b")
-    verifyJaccardHashed(hashed, cands, threshold)
+    verifyJaccard(df.select(asLongId(id), text), cands, threshold,
+      shingleSize)
   }
 
   /** Candidate-volume diagnostics for [[ngramJaccardPairs]]: one row per
@@ -820,51 +808,17 @@ object Dedup {
       (-checkedNonNegId(refId, "dedupAgainstNear: ref id") - 1).as("__uid"),
       refText.as("__ut"))
     val union = newSide.unionAll(refSide)
-    // one text pass over the union (r18): candidates band-hash from the
-    // shared cached shingle scan, verification joins the same cache
-    val hashed = hashedShingles(union, F.col("__uid"), F.col("__ut"),
-      shingleSize)
-    val cross = lshCandidatesFromHashes(hashed, numHashes, bands, maxBucket)
+    val cross = lshCandidatesFromHashes(
+        hashedShingles(union, F.col("__uid"), F.col("__ut"), shingleSize),
+        numHashes, bands, maxBucket)
       // pairs come out sorted (id_a < id_b): a cross-side pair is exactly
       // "negative (reference) first, non-negative (new) second"
       .filter(F.col("id_a") < 0 && F.col("id_b") >= 0)
-    val contaminated = verifyJaccardHashed(hashed, cross, threshold)
+    val contaminated = verifyJaccard(union, cross, threshold, shingleSize)
       .select(F.col("id_b").as("__loser")).distinct()
     df.join(contaminated, asLongId(id) === F.col("__loser"), "left_anti")
   }
 
-  /** Write a reusable ON-DISK MinHash LSH index over the accepted corpus —
-    * the index-once/dedup-many posture for incremental ingest (the minhash
-    * twin of [[Similarity]]'s cell-partitioned IVF disk index, d43).
-    * [[dedupAgainstNear]] re-scans and re-shingles the FULL accepted corpus
-    * for every incoming batch; at large scale the accepted side dwarfs any
-    * batch, so its scan must be paid once and persisted:
-    *
-    *  - `path/features`: `(id, sh: array<bigint>)` in `seg=<segment>`
-    *    partitions (`seg=base` from this writer; appends add their own) —
-    *    each doc's distinct shingle hashes, written from the index
-    *    build's single corpus scan. Candidate verification joins THIS
-    *    table, so verification stays EXACT Jaccard (identical semantics
-    *    to [[verifyJaccard]]) without ever touching corpus text again;
-    *  - `path/postings`: `(bucket, ids: array<bigint>, seg, band)`
-    *    written `partitionBy("seg", "band")` (segment partitions make
-    *    [[appendToMinhashIndex]] retry-idempotent via dynamic partition
-    *    overwrite) — LSH band buckets from the same fused
-    *    native shingle→minhash→band expression the live path scans with
-    *    ([[graft.functions.TextExprs.minhashBandHashes]] — writer and
-    *    prober share the expression, which is all bucket agreement
-    *    requires), saturating-capped at `maxBucket` (boilerplate buckets
-    *    are dropped as pair noise, exactly the live path's guardrail) but
-    *    KEEPING singleton buckets: a future batch doc may land in one.
-    *    Band partitioning makes `probeBands` (below) a static partition
-    *    filter — the IVF `nprobe` analogue;
-    *  - `path/meta`: one row of build parameters, so readers never have
-    *    to repeat them (a mismatched shingle size would silently produce
-    *    disjoint bucket spaces).
-    *
-    * Build cost: two native-speed corpus scans (features, postings) —
-    * deliberately NOT fused via a corpus-scale persist, which would be
-    * the wrong trade on an accepted corpus far larger than memory. */
   private case class IndexMeta(shingleSize: Int, numHashes: Int,
       bands: Int, maxBucket: Int)
 
@@ -898,6 +852,37 @@ object Dedup {
     })
   }
 
+  /** Write a reusable ON-DISK MinHash LSH index over the accepted corpus —
+    * the index-once/dedup-many posture for incremental ingest (the minhash
+    * twin of [[Similarity]]'s cell-partitioned IVF disk index, d43).
+    * [[dedupAgainstNear]] re-scans and re-shingles the FULL accepted corpus
+    * for every incoming batch; at large scale the accepted side dwarfs any
+    * batch, so its scan must be paid once and persisted:
+    *
+    *  - `path/features`: `(id, sh: array<bigint>)` in `seg=<segment>`
+    *    partitions (`seg=base` from this writer; appends add their own) —
+    *    each doc's distinct shingle hashes, written from the index
+    *    build's single corpus scan. Candidate verification joins THIS
+    *    table, so verification stays EXACT Jaccard (the semantics of
+    *    [[dedupAgainstNear]]) without ever touching corpus text again;
+    *  - `path/postings`: `(bucket, ids: array<bigint>, seg, band)`
+    *    written `partitionBy("seg", "band")` (segment partitions make
+    *    [[appendToMinhashIndex]] retry-idempotent via dynamic partition
+    *    overwrite) — LSH band buckets band-folded ([[bandFold]]) from the
+    *    stored shingle hashes with the band expression the prober also
+    *    uses (which is all bucket agreement requires), saturating-capped
+    *    at `maxBucket` (boilerplate buckets are dropped as pair noise,
+    *    exactly the live path's guardrail) but KEEPING singleton buckets:
+    *    a future batch doc may land in one. Band partitioning makes
+    *    `probeBands` (below) a static partition filter — the IVF `nprobe`
+    *    analogue;
+    *  - `path/meta`: one row of build parameters, so readers never have
+    *    to repeat them (a mismatched shingle size would silently produce
+    *    disjoint bucket spaces).
+    *
+    * Build cost: one corpus text pass (the features write); postings
+    * band-fold from the written features ([[writeSegment]]), so no
+    * corpus-scale cache is held. */
   def writeMinhashIndex(corpus: DataFrame, id: Column, text: Column,
       path: String, shingleSize: Int = 3, numHashes: Int = 32,
       bands: Int = 8, maxBucket: Int = 1000): Unit = {
@@ -922,43 +907,12 @@ object Dedup {
     }
     val target = if (hasLayout) Similarity.stageDir(spark, path, "__rebuild")
       else path
-    val base = corpus.select(asLongId(id).as("id"), text.as("__t"))
     // seg=base: both tables are SEGMENT-partitioned so incremental appends
     // ([[appendToMinhashIndex]]) land as their own dynamically-overwritten
     // partitions — a retried ingest batch rewrites its segment instead of
-    // double-appending (the exactly-once half the streaming path needs).
-    // ONE text-processing pass (r17 optimization): the shingle hashes are
-    // computed once, cached across the two table writes, and postings
-    // band-hash FROM THE HASHES ([[graft.functions.TextExprs
-    // .minhashBandHashesFromHashes]]) — the identity the compactor's
-    // row-identity spec already pins (MinHash over stored distinct
-    // shingle hashes equals MinHash over text). The previous shape
-    // normalized + tokenized + hashed the whole corpus text twice.
-    val feats = base
-      .select(F.col("id"), shingleHashes(F.col("__t"), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      feats
-        .withColumn("seg", F.lit("base"))
-        .write.mode("overwrite").partitionBy("seg")
-        .parquet(s"$target/features")
-      feats
-        .select(F.col("id"),
-          F.posexplode(graft.functions.TextExprs
-            .minhashBandHashesFromHashes(F.col("sh"), numHashes, bands))
-            .as(Seq("band", "bucket")))
-        .groupBy("band", "bucket")
-        .agg(graft.functions.AggExprs
-          .cappedSortedIds(F.col("id"), maxBucket, minSize = 1).as("ids"))
-        .filter(F.col("ids").isNotNull)
-        .select(F.col("band"), F.col("bucket"), F.col("ids"),
-          F.lit("base").as("seg"))
-        .write.mode("overwrite").partitionBy("seg", "band")
-        .parquet(s"$target/postings")
-    } finally {
-      feats.unpersist(false)
-      ()
-    }
+    // double-appending (the exactly-once half the streaming path needs)
+    writeSegment(hashedShingles(corpus, id, text, shingleSize), target,
+      "base", IndexMeta(shingleSize, numHashes, bands, maxBucket))
     // one-row meta, driver-side (zero jobs — r17 optimization)
     graft.io.GraftIO.writeSmallParquet(spark,
       org.apache.spark.sql.types.StructType(Seq(
@@ -975,6 +929,49 @@ object Dedup {
       s"$target/meta")
     if (hasLayout)
       Similarity.swapLayout(spark, path, target, "rebuild")
+  }
+
+  /** Schema of a written `features` segment, so [[writeSegment]] reads its
+    * own output back without a schema-inference job. */
+  private val featureSchema = StructType(Seq(
+    StructField("id", LongType), StructField("sh", ArrayType(LongType))))
+
+  /** Write one index segment: `feats` `(id, sh)` to
+    * `root/features/seg=<segment>`, then that segment's postings, band-folded
+    * ([[bandFold]]) from the WRITTEN feature files read back, to
+    * `root/postings/seg=<segment>/band=*`.
+    *
+    * The read-back is the point: `feats` is evaluated exactly once, by the
+    * features write. An input whose lazy plan reads this same index (a
+    * probe result, the canonical probe → append sequence) is therefore
+    * never re-executed against the listing the features write refreshed —
+    * a re-execution that would see the new segment, self-match at
+    * Jaccard 1 and write empty postings — and the two tables share one
+    * text pass without a cache.
+    *
+    * `base` (the full build) overwrites both tables whole; any other
+    * segment is a dynamically-overwritten partition, so a retried append
+    * replaces its own segment instead of double-appending. */
+  private def writeSegment(feats: DataFrame, root: String, segment: String,
+      meta: IndexMeta): Unit = {
+    val spark = feats.sparkSession
+    def write(df: DataFrame, table: String, partitions: String*): Unit = {
+      val w = df.withColumn("seg", F.lit(segment)).write.mode("overwrite")
+      (if (segment == "base") w
+       else w.option("partitionOverwriteMode", "dynamic"))
+        .partitionBy(partitions: _*).parquet(s"$root/$table")
+    }
+    write(feats.select("id", "sh"), "features", "seg")
+    // an empty input writes no segment directory
+    val dir = new org.apache.hadoop.fs.Path(s"$root/features/seg=$segment")
+    val written =
+      if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+        spark.read.schema(featureSchema).parquet(dir.toString)
+      else spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        featureSchema)
+    write(bandFold(written, meta.numHashes, meta.bands, meta.maxBucket,
+      minSize = 1), "postings", "seg", "band")
   }
 
   /** Near-dedup an incoming batch against a persisted [[writeMinhashIndex]]
@@ -1096,78 +1093,43 @@ object Dedup {
       batch, () => { batch.unpersist(false); () })
   }
 
+  /** Append segments must be filesystem-safe labels other than `base`. */
+  private def requireAppendSegment(segment: String): Unit =
+    require(segment.nonEmpty && segment != "base" &&
+      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
+      s"segment '$segment' must be a filesystem-safe label != 'base'")
+
   /** Append an ingest batch's SURVIVORS to the index from the probe's own
     * cached signature frame ([[dedupAgainstIndexWithSigs]]) — row-identical
     * to `appendToMinhashIndex(survivors, id, text, …)` by construction
-    * (`bsh`/`__bb` are the very expressions the text append computes, built
-    * from the same meta parameters), minus the second shingling +
-    * minhashing pass over the batch text. Private plumbing for the
-    * streaming ingest loop: `sigs` must come from the same batch `survivors`
-    * was filtered from, and the sigs cache must still be alive.
+    * (`bsh` is the very expression the text append computes, built from
+    * the same meta parameters), minus the second shingling pass over the
+    * batch text. Private plumbing for the streaming ingest loop: `sigs`
+    * must come from the same batch `survivors` was filtered from, and the
+    * sigs cache must still be alive.
     *
     * `probeExcludedSegment` is the exclusion the PROBE that produced
     * `sigs`/`survivors` ran with, REQUIRED to equal `segment` (r17 ADVICE):
     * `survivors` reads the index through the probe's anti-join, so any
-    * re-execution against the listing this append refreshes must still
-    * exclude the segment being written — a caller without the exclusion
-    * would self-match at Jaccard 1 and write features with empty postings,
-    * the silent-index-corruption hazard [[appendToMinhashIndex]]'s
-    * in-body comment documents. Enforced, not conventional. */
+    * re-execution of it against the listing this append refreshes (the
+    * caller's own re-read, a refreshed cache) must still exclude the
+    * segment being written — a probe without the exclusion would
+    * self-match at Jaccard 1 against it. Enforced, not conventional. */
   private[graft] def appendSurvivorsFromSigs(sigs: DataFrame,
       survivors: DataFrame, id: Column, path: String,
       segment: String, probeExcludedSegment: Option[String]): Unit = {
-    require(segment.nonEmpty && segment != "base" &&
-      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"segment '$segment' must be a filesystem-safe label != 'base'")
+    requireAppendSegment(segment)
     require(probeExcludedSegment.contains(segment),
       s"appendSurvivorsFromSigs: the probe that produced the survivors " +
         s"must have excluded the segment being written (excluded " +
         s"$probeExcludedSegment, writing '$segment') — without the " +
         "exclusion a plan re-execution against the refreshed listing " +
         "self-matches at Jaccard 1 and corrupts the index")
-    val spark = sigs.sparkSession
-    val IndexMeta(_, _, _, maxBucket) = readIndexMeta(spark, path)
-    // survivor ids pinned OUTSIDE the CacheManager before any index write
-    // (r18, closing the r17 ADVICE residue): `survivors`' plan reads the
-    // index through the probe's anti-join, so the features insert's
-    // refreshByPath clears its cache entry and the postings pass would
-    // RE-EXECUTE the entire probe (pruned index scan, banding join, exact
-    // Jaccard) against the refreshed listing — correct under the enforced
-    // exclusion, but a full repeat of the dominant per-trigger cost. A
-    // localCheckpoint is invisible to the refresh and O(survivor ids);
-    // handle-exact release (Scratch) because checkpoint blocks live
-    // outside the CacheManager.
-    val (survIds, releaseIds) = graft.Scratch.snapshotManaged(
-      survivors.select(asLongId(id).as("bid")))
-    // the semi-joined signature frame feeds BOTH table writes; persist it
-    // so the second write replays cached rows instead of re-running the
-    // semi-join (and its AQE materializations — measured +5 driver jobs
-    // per trigger on the dedup ingest stream). Its plan holds only the
-    // sigs cache and the checkpointed ids — no file source under `path` —
-    // so the features insert's refresh cannot touch it.
-    val s = sigs.join(survIds, Seq("bid"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      s.select(F.col("bid").as("id"), F.col("bsh").as("sh"),
-          F.lit(segment).as("seg"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg").parquet(s"$path/features")
-      s.select(F.col("bid").as("id"),
-          F.posexplode(F.col("__bb")).as(Seq("band", "bucket")))
-        .groupBy("band", "bucket")
-        .agg(graft.functions.AggExprs
-          .cappedSortedIds(F.col("id"), maxBucket, minSize = 1).as("ids"))
-        .filter(F.col("ids").isNotNull)
-        .select(F.col("band"), F.col("bucket"), F.col("ids"),
-          F.lit(segment).as("seg"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("seg", "band").parquet(s"$path/postings")
-    } finally {
-      s.unpersist(false)
-      releaseIds()
-    }
+    writeSegment(
+      sigs.join(survivors.select(asLongId(id).as("bid")), Seq("bid"),
+          "left_semi")
+        .select(F.col("bid").as("id"), F.col("bsh").as("sh")),
+      path, segment, readIndexMeta(sigs.sparkSession, path))
   }
 
   /** Append newly-accepted docs to a persisted [[writeMinhashIndex]] index —
@@ -1196,50 +1158,16 @@ object Dedup {
     * of probes — compact when the segment count reaches the tens, or on
     * a cadence cheap relative to the batch rate. Build parameters come from
     * `path/meta`, by field name, so an appender can never silently
-    * diverge from the writer's bucket space. */
+    * diverge from the writer's bucket space.
+    *
+    * `batch` may be a lazy probe result over this same index: its text is
+    * evaluated once, by the features write ([[writeSegment]]). */
   def appendToMinhashIndex(batch: DataFrame, id: Column, text: Column,
       path: String, segment: String): Unit = {
-    require(segment.nonEmpty && segment != "base" &&
-      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"segment '$segment' must be a filesystem-safe label != 'base'")
-    val spark = batch.sparkSession
-    val IndexMeta(shingleSize, numHashes, bands, maxBucket) =
-      readIndexMeta(spark, path)
-    // DELIBERATELY two independent from-text passes — do NOT "optimize"
-    // this into a persist-once shape (r17 finding, reproduced in
-    // IOStreamsSpec's lazy-probe parity assert): callers legitimately
-    // pass a LAZY probe result over THIS SAME index (probe → append is
-    // the canonical sequence), and caching a frame derived from that
-    // input pins it into the CacheManager, whose write-triggered refresh
-    // (`refreshByPath` at the end of the features insert) RE-EXECUTES the
-    // cached plan against the refreshed file listing — the probe then
-    // sees the segment this very append just wrote, self-matches at
-    // Jaccard 1, and the postings pass writes an empty (or the caller's
-    // later re-read returns a self-killed) survivor set. The streaming
-    // loop avoids the double text pass differently and safely:
-    // [[appendSurvivorsFromSigs]] writes from the probe's own already-
-    // materialized signature cache.
-    val base = batch.select(asLongId(id).as("id"), text.as("__t"))
-    base
-      .select(F.col("id"), shingleHashes(F.col("__t"), shingleSize).as("sh"),
-        F.lit(segment).as("seg"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("seg").parquet(s"$path/features")
-    base
-      .select(F.col("id"),
-        F.posexplode(graft.functions.TextExprs.minhashBandHashes(
-          F.col("__t"), shingleSize, numHashes, bands))
-          .as(Seq("band", "bucket")))
-      .groupBy("band", "bucket")
-      .agg(graft.functions.AggExprs
-        .cappedSortedIds(F.col("id"), maxBucket, minSize = 1).as("ids"))
-      .filter(F.col("ids").isNotNull)
-      .select(F.col("band"), F.col("bucket"), F.col("ids"),
-        F.lit(segment).as("seg"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("seg", "band").parquet(s"$path/postings")
+    requireAppendSegment(segment)
+    val meta = readIndexMeta(batch.sparkSession, path)
+    writeSegment(hashedShingles(batch, id, text, meta.shingleSize), path,
+      segment, meta)
   }
 
   /** Compact a segmented [[writeMinhashIndex]] index back to ONE base
@@ -1336,17 +1264,8 @@ object Dedup {
       var feats = spark.read.parquet(s"$path/features")
       excludeSegment.foreach(ex =>
         feats = feats.filter(F.col("seg") =!= ex))
-      val rebuilt = feats.drop("seg")
-        .select(F.col("id"),
-          F.posexplode(graft.functions.TextExprs
-            .minhashBandHashesFromHashes(F.col("sh"), numHashes, bands))
-            .as(Seq("band", "bucket")))
-        .groupBy("band", "bucket")
-        .agg(graft.functions.AggExprs
-          .cappedSortedIds(F.col("id"), maxBucket, minSize = 1).as("ids"))
-        .filter(F.col("ids").isNotNull)
-        .select(F.col("band"), F.col("bucket"), F.col("ids"),
-          F.lit("base").as("seg"))
+      val rebuilt = bandFold(feats, numHashes, bands, maxBucket, minSize = 1)
+        .withColumn("seg", F.lit("base"))
       keptPostings.fold(rebuilt)(kp => rebuilt.unionByName(
           kp.select("band", "bucket", "ids", "seg")))
         .write.mode("overwrite").partitionBy("seg", "band").parquet(out)
@@ -1445,15 +1364,8 @@ object Dedup {
         // exactly the fold set), through the same stored-hash band fold
         // as the full compaction — cap on the MERGED bucket, the
         // single-segment-append contract
-        spark.read.parquet(stagedFeatures.toString)
-          .select(F.col("id"),
-            F.posexplode(graft.functions.TextExprs
-              .minhashBandHashesFromHashes(F.col("sh"), numHashes, bands))
-              .as(Seq("band", "bucket")))
-          .groupBy("band", "bucket")
-          .agg(graft.functions.AggExprs
-            .cappedSortedIds(F.col("id"), maxBucket, minSize = 1).as("ids"))
-          .filter(F.col("ids").isNotNull)
+        bandFold(spark.read.parquet(stagedFeatures.toString), numHashes,
+            bands, maxBucket, minSize = 1)
           .write.mode("overwrite").partitionBy("band")
           .parquet(stagedPostings.toString)
         TierCompact.commitFold(fs, root, fold,
@@ -1517,7 +1429,7 @@ object Dedup {
     // candidate generation buckets carry ONLY ids (8 bytes/row, same
     // discipline as the minhash path) — collecting the vectors themselves
     // would put maxBucket × dims floats in every aggregation buffer
-    val cands0 = df.select(asLongId(id).as("id"), sig.as("sig"))
+    val cands = df.select(asLongId(id).as("id"), sig.as("sig"))
       .select(F.col("id"),
         F.posexplode(F.array((0 until bands).map(b =>
           F.shiftrightunsigned(F.col("sig"), b * bandBits)
@@ -1529,35 +1441,7 @@ object Dedup {
       .filter(F.col("ids").isNotNull)
       .select(F.explode(bucketPairs(F.col("ids"))).as("p"))
       .select("p.*").distinct()
-    // exact verification: semi-join-prune the corpus to candidate ids, then
-    // join the vectors back per pair side (verifyJaccard pattern) — but
-    // deliberately WITHOUT verifyJaccard's persist + binding repartitions.
-    // Those exist to make a cross-consumer CACHE layout deterministic (the
-    // cached-partitioning race, SCALING.md); here every consumer of the
-    // candidate table sits inside ONE action's DAG, so Spark's exchange
-    // reuse (ReusedExchange / AQE stage reuse) already runs the expensive
-    // subtree — signatures, banding shuffle, pair distinct — exactly once,
-    // with no InMemoryRelation whose layout a racing materializer could
-    // decide. Verified in round 7: the unconditional pins cost d13 an
-    // extra ~2.3× on the driver VM (three exchanges + two forced
-    // sort-merge joins on a pairs-scale table) while buying nothing —
-    // hash(id_a,id_b) satisfies neither join's hash(id_a)/hash(id_b)
-    // requirement anyway. Verification work here is a per-pair cosine on
-    // pruned vectors (light), not verifyJaccard's per-doc shingling
-    // (heavy), so AQE's size-based orientation is safe at every scale:
-    // tiny sides broadcast, big sides shuffle on real stats.
-    val cands = cands0
-    val candIds = cands.select(F.explode(F.array(
-      F.col("id_a"), F.col("id_b"))).as("vid")).distinct()
-    val vecs = df.select(id.as("vid"), vec.as("vv"))
-      .join(candIds, Seq("vid"), "left_semi")
-    cands
-      .join(vecs.select(F.col("vid").as("id_a"), F.col("vv").as("__va")),
-        Seq("id_a"))
-      .join(vecs.select(F.col("vid").as("id_b"), F.col("vv").as("__vb")),
-        Seq("id_b"))
-      .withColumn("cosine", Similarity.cosine(F.col("__va"), F.col("__vb")))
-      .filter(F.col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    verifyPairs(df.select(asLongId(id), vec), cands, "cosine", threshold)(
+      identity, Similarity.cosine)
   }
 }

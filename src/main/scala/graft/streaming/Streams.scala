@@ -189,18 +189,23 @@ object Streams {
     // in-flight segment is immutable between folds, so each segment is
     // snapshotted once and reused until its file identity changes (the
     // tier fold and a replayed batch's own-segment rewrite both
-    // invalidate exactly the segments they touched). localCheckpoint
-    // blocks are immune to the appends' refreshByPath — the hazard that
-    // made a CacheManager-based variant unsafe (appendToMinhashIndex's
-    // in-body note).
-    val featCache = new SegmentScanCache(spark, s"$indexPath/features")
-    val postCache = new SegmentScanCache(spark, s"$indexPath/postings")
+    // invalidate exactly the segments they touched), wherever the
+    // compaction posture keeps segments alive across triggers
+    // ([[snapshotsPay]]). localCheckpoint blocks are immune to the
+    // appends' refreshByPath, which re-executes CacheManager entries
+    // against the refreshed listing.
+    val caches = if (snapshotsPay(compactEvery, tieredCompaction))
+        Some((new SegmentScanCache(spark, s"$indexPath/features"),
+          new SegmentScanCache(spark, s"$indexPath/postings")))
+      else None
     val step: (DataFrame, Long) => Unit = (batchDf, batchId) => {
       val seg = s"${prefix}_b$batchId"
-      val idxFrames = for {
-        f <- featCache.frame(Some(seg))
-        p <- postCache.frame(Some(seg))
-      } yield (f, p)
+      val idxFrames = caches.flatMap { case (featCache, postCache) =>
+        for {
+          f <- featCache.frame(Some(seg))
+          p <- postCache.frame(Some(seg))
+        } yield (f, p)
+      }
       // every cache a batch pins is released through the DATASET API once
       // its two writes are done — Dataset.unpersist drops the
       // CacheManager entry too, where an RDD-level sweep frees blocks but
@@ -213,9 +218,9 @@ object Streams {
       try {
         survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
         // append from the probe's own cached signatures — row-identical
-        // to the from-text append, minus a second shingling + minhashing
-        // pass over the batch (r17 optimization; that repeat measured at
-        // roughly half the append phase per trigger). The probe's
+        // to the from-text append, minus a second shingling pass over the
+        // batch (r17 optimization; that repeat measured at roughly half
+        // the append phase per trigger). The probe's
         // own-segment exclusion is passed through and ENFORCED (r18): the
         // append's correctness under plan re-execution depends on it.
         graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
@@ -241,11 +246,21 @@ object Streams {
       q.processAllAvailable()
       q.stop()
     } finally {
-      featCache.close()
-      postCache.close()
+      caches.foreach { case (featCache, postCache) =>
+        featCache.close()
+        postCache.close()
+      }
     }
     prefix
   }
+
+  /** Whether cross-trigger [[SegmentScanCache]] snapshots pay for a
+    * stream's compaction posture: a full fold per cadence (`compactEvery`
+    * > 0 without tiering) rewrites the whole index every cadence, which
+    * would thrash the snapshots instead of reusing them. */
+  private def snapshotsPay(compactEvery: Int,
+      tieredCompaction: Boolean): Boolean =
+    compactEvery == 0 || tieredCompaction
 
   /** Incremental EMBEDDING ingest — the vector-side twin of
     * [[ingestDedupStream]], over the persisted IVF index
@@ -323,13 +338,12 @@ object Streams {
       else None
     // cross-trigger snapshots of the index's committed segments (r18,
     // [[SegmentScanCache]] — see ingestDedupStream's note). Used ONLY
-    // where it pays: the probe must read every cell (nprobe ≥ nlist, the
-    // streams' exact posture — a selective probe keeps the parquet cell
-    // pruning), and a full-fold-per-cadence run (compactEvery > 0 without
-    // tiering) rewrites the whole table every trigger, which would thrash
-    // the snapshots instead of reusing them.
+    // where it pays: the compaction posture keeps segments alive across
+    // triggers ([[snapshotsPay]]), and the probe reads every cell
+    // (nprobe ≥ nlist, the streams' exact posture — a selective probe
+    // keeps the parquet cell pruning).
     val assignedCache =
-      if ((compactEvery == 0 || tieredCompaction) &&
+      if (snapshotsPay(compactEvery, tieredCompaction) &&
           nprobe.getOrElse(Int.MaxValue) >=
             graft.operators.Similarity.ivfIndexNlist(spark, indexPath))
         Some(new SegmentScanCache(spark, s"$indexPath/assigned"))

@@ -43,7 +43,12 @@ class ExtensionsSpec extends SparkSpec {
                 strip_accents('café naïve') AS sa,
                 count_regex_matches('a1b22c333', '[0-9]+') AS crm,
                 shingle_hashes('a b c d', 2) AS sg,
-                minhash_signature('a b c d e', 2, 16) AS mh""").collect().head
+                minhash_signature('a b c d e', 2, 16) AS mh,
+                minhash_band_hashes('the cat sat on the mat the cat sat',
+                  3, 64, 16) AS bt,
+                minhash_band_hashes_from_hashes(shingle_hashes(
+                  'the cat sat on the mat the cat sat', 3), 64, 16) AS bh"""
+      ).collect().head
     val twin = spark.range(1).select(
       TextExprs.simhash64(F.lit("the quick brown fox")).as("sh"),
       TextExprs.stripAccents(F.lit("café naïve")).as("sa"),
@@ -57,6 +62,10 @@ class ExtensionsSpec extends SparkSpec {
     assert(r.getSeq[Long](3) == twin.getSeq[Long](3) &&
       r.getSeq[Long](3).size == 3)
     assert(r.getSeq[Long](4) == twin.getSeq[Long](4))
+    // band hashes over the text == band hashes over its stored shingle
+    // hashes: the identity every MinHash index path builds postings on
+    assert(r.getSeq[Long](5) == r.getSeq[Long](6) &&
+      r.getSeq[Long](5).size == 16)
   }
 
   test("unicode_normalize: NFC composes, NFKC folds compatibility forms, " +

@@ -129,29 +129,102 @@ class PlanGuardSpec extends SparkSpec {
         s"vector payload inside the candidate distinct:\n$d")
   }
 
-  test("d13 embedding near-dup: cache-free single-DAG verification — no " +
-      "InMemoryTableScan, no binding repartition, candidate subtree " +
-      "shared via exchange/stage reuse (r6 verdict: the unconditional " +
-      "pins cost d13 2.3x for nothing)") {
-    val df = SparkEntry.queries("d13_embedding_neardup")(spark, dir)
-    // execute THIS QueryExecution so AQE finalizes it — stage reuse is
-    // a runtime decision (df.write would plan a fresh clone and leave
-    // df's own plan isFinalPlan=false)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("InMemoryTableScan"),
-      s"d13 verification path went through a cache:\n$plan")
-    assert(!plan.contains("REPARTITION_BY_NUM"),
-      s"d13 still carries a binding repartition:\n$plan")
-    // the banded candidate subtree is consumed from multiple places in
-    // ONE DAG; it must be computed once — visible as a ReusedExchange
-    // (static planning) or a repeated ShuffleQueryStage id (AQE)
-    val stageIds = raw"ShuffleQueryStage (\d+)".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    val reused = plan.contains("ReusedExchange") ||
-      stageIds.distinct.size < stageIds.size
-    assert(reused, s"d13 candidate subtree not reused:\n$plan")
+  /** Executed plans of every action `body` runs. Listener events arrive
+    * asynchronously, in order: a trailing sentinel action marks the end. */
+  private def actionPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def sentinelSeen = seen.asScala.exists(
+      _.analyzed.output.exists(_.name == "__plan_sentinel"))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("__plan_sentinel").collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(sentinelSeen, "query execution listener events never arrived")
+    seen.asScala.map(_.executedPlan).toSeq
   }
+
+  /** Cached-relation scans of an executed plan, through AQE query stages
+    * and into the cached plans themselves. */
+  private def cacheScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec] = {
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p match {
+      case a: AdaptiveSparkPlanExec => cacheScans(a.executedPlan)
+      case s: QueryStageExec => cacheScans(s.plan)
+      case m: InMemoryTableScanExec => m +: cacheScans(m.relation.cachedPlan)
+      case o => o.children.flatMap(cacheScans)
+    }
+  }
+
+  /** The executed plan of a pair query's verification, after the query
+    * ran: the frame's own plan, or for d16 (dedupNear) the plan of the
+    * pair table duplicateClusters caches — its verification runs inside
+    * duplicateClusters' eager checkpoints, never in the returned frame. */
+  private def verificationPlan(name: String): String =
+    if (name != "d16_dedup_near") {
+      val df = SparkEntry.queries(name)(spark, dir)
+      // execute THIS QueryExecution so AQE finalizes it — stage reuse is
+      // a runtime decision (df.write would plan a fresh clone and leave
+      // df's own plan isFinalPlan=false)
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    } else
+      actionPlans(SparkEntry.queries(name)(spark, dir).collect())
+        .flatMap(cacheScans).map(_.relation)
+        .find(_.output.map(_.name) == Seq("id_a", "id_b", "jaccard"))
+        .getOrElse(fail("d16 ran no plan over the cached pair table"))
+        .cachedPlan.toString
+
+  /** Cache-free single-DAG verification (r6 verdict: the unconditional
+    * pins cost d13 2.3x for nothing); the MinHash and n-gram pair queries
+    * share the verifier. */
+  private val cacheFree = "cache-free single-DAG verification — no " +
+    "InMemoryTableScan, no binding repartition, candidate subtree shared " +
+    "via exchange/stage reuse"
+  private val verifierGuarded = Seq(
+    "d13_embedding_neardup" -> (s"d13 embedding near-dup: $cacheFree " +
+      "(r6 verdict: the unconditional pins cost d13 2.3x for nothing)"),
+    "d05_minhash_pairs" -> s"d05 MinHash pairs: $cacheFree",
+    "d07_ngram_jaccard" -> s"d07 n-gram Jaccard pairs: $cacheFree",
+    "d16_dedup_near" -> s"d16 dedupNear pairs: $cacheFree")
+
+  for ((name, title) <- verifierGuarded)
+    test(title) {
+      val plan = verificationPlan(name)
+      assert(!plan.contains("InMemoryTableScan"),
+        s"$name verification path went through a cache:\n$plan")
+      assert(!plan.contains("REPARTITION_BY_NUM"),
+        s"$name still carries a binding repartition:\n$plan")
+      // the banded candidate subtree is consumed from multiple places in
+      // ONE DAG; it must be computed once — visible as a ReusedExchange
+      // (static planning) or a repeated ShuffleQueryStage id (AQE)
+      val stage = raw"ShuffleQueryStage (\d+)".r
+      val stageIds = stage.findAllMatchIn(plan).map(_.group(1)).toSeq
+      val reused = plan.contains("ReusedExchange") ||
+        stageIds.distinct.size < stageIds.size
+      assert(reused, s"$name candidate subtree not reused:\n$plan")
+      // ...and the band/posting fold under it runs as ONE shuffle stage
+      val lines = plan.linesIterator.toArray
+      val foldStages = lines.indices
+        .filter(i => i + 2 < lines.length &&
+          lines(i + 2).contains("partial_capped_sorted_ids"))
+        .flatMap(i => stage.findFirstMatchIn(lines(i)).map(_.group(1)))
+        .distinct
+      assert(foldStages.size == 1,
+        s"$name band fold runs in stages ${foldStages.mkString(", ")}:\n$plan")
+    }
 
   test("d09 lshTopK: candidate table cached once (column pruning " +
       "specializes the three consumer copies, defeating exchange reuse — " +
