@@ -1,18 +1,21 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.jdk.CollectionConverters._
 
 /** Run statistics for one SparkEntry query (tooling, not driver contract):
   * runs it N times and prints, per run, the wall time, the number of
   * driver-scheduled jobs and every completed stage's task count, wall
   * span, executor run/CPU time and shuffle write/read. For the last run it
-  * also lists every job's span and driver call site, grouped by site — the
-  * map from "N jobs" to "N jobs from WHERE". Stage lines separate "same
-  * plan, different wall-clock" cases (parked executors show as span >>
-  * run); job counts expose per-micro-batch driver-floor work that stage
-  * timings hide. Session confs are [[GraftSession]]'s, as in [[Bench]].
+  * also lists every job's span grouped by the SQL execution that ran it
+  * (the `spark.sql.execution.id` job property, which AQE's pool-thread
+  * jobs inherit), labelled with the execution's description; jobs outside
+  * SQL show their result stage's name. Stage lines separate "same plan,
+  * different wall-clock" cases (parked executors show as span >> run);
+  * job counts expose per-micro-batch driver-floor work that stage timings
+  * hide. Session confs are [[GraftSession]]'s, as in [[Bench]].
   * `runMain graft.RunStats <query> <sfDir> [n]` (n defaults to 3). */
 object RunStats {
   def main(args: Array[String]): Unit = {
@@ -25,18 +28,31 @@ object RunStats {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // per run: job id -> (call site, submit ms), job id -> end ms, and the
-    // formatted stage lines, all from the one listener below
+    // per run, from one listener: job id -> (label, submit ms) and end ms,
+    // stage id -> label, execution id -> label (posted before its jobs)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val stageGroups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val execs = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val desc = s.description.linesIterator.map(_.trim).filter(_.nonEmpty)
+          execs.put(s.executionId.toString,
+            s"sql ${s.executionId}: ${desc.mkString(" ")}"); ()
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        // the result stage is named after the job's call site (a job over
-        // zero partitions has no stages)
-        val site = j.stageInfos.maxByOption(_.stageId).map(_.name)
-          .getOrElse("?")
-        starts.put(j.jobId, (site, j.time)); ()
+        // outside a SQL execution the result stage is named after the
+        // job's call site (a job over zero partitions has no stages)
+        val group = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .map(id => execs.getOrDefault(id, s"sql $id"))
+          .getOrElse("no sql execution: " + j.stageInfos
+            .maxByOption(_.stageId).map(_.name).getOrElse("?"))
+        j.stageIds.foreach(stageGroups.put(_, group))
+        starts.put(j.jobId, (group, j.time)); ()
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         ends.put(j.jobId, j.time); ()
@@ -53,12 +69,13 @@ object RunStats {
         stages.add(
           f"    stage ${i.stageId}%4d tasks=${i.numTasks}%4d span=$span%7.2fs " +
           f"run=$run%8.2fs cpu=$cpu%8.2fs shW=$shw%7.1fMB shR=$shr%7.1fMB " +
-          i.name.takeWhile(_ != '\n'))
+          stageGroups.getOrDefault(i.stageId, i.name.takeWhile(_ != '\n')))
       }
     })
     val fn = SparkEntry.queries(query)
     for (r <- 1 to n) {
-      starts.clear(); ends.clear(); stages.clear()
+      starts.clear(); ends.clear(); stageGroups.clear(); execs.clear()
+      stages.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
@@ -68,18 +85,18 @@ object RunStats {
       println(f"run $r: wall=$dt%.2fs jobs=${starts.size}")
       stages.forEach(s => println(s))
       if (r == n) {
-        val rows = starts.asScala.toSeq.map { case (id, (site, t0j)) =>
+        val rows = starts.asScala.toSeq.map { case (id, (group, t0j)) =>
           val span = ends.asScala.get(id).map(e => (e - t0j) / 1000.0)
-          (id, site, span.getOrElse(-1.0))
+          (id, group, span.getOrElse(-1.0))
         }.sortBy(_._1)
-        rows.foreach { case (id, site, span) =>
-          println(f"  job $id%4d $span%7.3fs  $site") }
-        println("  --- by call site ---")
+        rows.foreach { case (id, label, span) =>
+          println(f"  job $id%4d $span%7.3fs  $label") }
+        println("  --- by SQL execution ---")
         rows.groupBy(_._2).toSeq
-          .map { case (site, rs) => (site, rs.size, rs.map(_._3).sum) }
+          .map { case (label, rs) => (label, rs.size, rs.map(_._3).sum) }
           .sortBy(-_._3)
-          .foreach { case (site, cnt, tot) =>
-            println(f"  $cnt%4d jobs $tot%7.3fs  $site") }
+          .foreach { case (label, cnt, tot) =>
+            println(f"  $cnt%4d jobs $tot%7.3fs  $label") }
       }
     }
     spark.stop()

@@ -936,6 +936,11 @@ object Dedup {
   private val featureSchema = StructType(Seq(
     StructField("id", LongType), StructField("sh", ArrayType(LongType))))
 
+  /** Schema of a written `postings` segment ([[bandFold]]'s output). */
+  private val postingsSchema = StructType(Seq(
+    StructField("band", IntegerType), StructField("bucket", LongType),
+    StructField("ids", ArrayType(LongType))))
+
   /** Write one index segment: `feats` `(id, sh)` to
     * `root/features/seg=<segment>`, then that segment's postings, band-folded
     * ([[bandFold]]) from the WRITTEN feature files read back, to
@@ -1018,15 +1023,10 @@ object Dedup {
     * carried a full repeat of the batch's text processing per trigger).
     * The sigs frame is backed by the SAME cache the release thunk frees:
     * consume it before calling release. */
-  /** `indexFrames`: pre-scanned (features, postings) frames — the ingest
-    * loop's cross-trigger segment snapshots ([[graft.streaming
-    * .SegmentScanCache]], r18), row-identical to the plain reads minus
-    * the excluded segment. None keeps the per-call parquet reads. */
   private[graft] def dedupAgainstIndexWithSigs(df: DataFrame, id: Column,
       text: Column, path: String, threshold: Double,
       probeBands: Option[Int] = None,
-      excludeSegment: Option[String] = None,
-      indexFrames: Option[(DataFrame, DataFrame)] = None)
+      excludeSegment: Option[String] = None)
       : (DataFrame, DataFrame, () => Unit) = {
     val spark = df.sparkSession
     val IndexMeta(shingleSize, numHashes, bands, maxBucket) =
@@ -1067,20 +1067,22 @@ object Dedup {
     // written segment from the failed attempt — probing it would make
     // batch docs candidates against themselves (self-Jaccard 1 ⇒ every
     // doc dies). The in-flight segment is excluded from both tables; both
-    // filters are partition pruning.
-    def dropSeg(t: DataFrame): DataFrame =
+    // filters are partition pruning. Both tables are read under the
+    // schemas [[writeSegment]] writes, so neither read runs a
+    // schema-inference job; a layout of other types fails at scan time.
+    def read(table: String, schema: StructType): DataFrame = {
+      val t = spark.read.schema(schema.add("seg", StringType))
+        .parquet(s"$path/$table")
       excludeSegment.fold(t)(s => t.filter(F.col("seg") =!= s))
-    val postings = dropSeg(indexFrames.map(_._2)
-        .getOrElse(spark.read.parquet(s"$path/postings")))
+    }
+    val postings = read("postings", postingsSchema)
       .filter(F.col("band") < probe) // static partition pruning
     val cands = batchBuckets.join(postings, Seq("band", "bucket"))
       .filter(F.size(F.col("bids")) + F.size(F.col("ids")) <= maxBucket)
       .select(F.explode(F.col("bids")).as("bid"), F.col("ids"))
       .select(F.col("bid"), F.explode(F.col("ids")).as("iid"))
       .distinct()
-    val feats = dropSeg(indexFrames.map(_._1)
-        .getOrElse(spark.read.parquet(s"$path/features")))
-      .drop("seg")
+    val feats = read("features", featureSchema).drop("seg")
     val losers = cands
       .join(feats.withColumnsRenamed(Map("id" -> "iid", "sh" -> "ish")), "iid")
       .join(batch.select("bid", "bsh"), "bid")

@@ -1052,22 +1052,13 @@ object Similarity {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** `assignedOverride`: a pre-scanned `assigned` frame — the ingest
-    * loop's cross-trigger segment snapshots ([[graft.streaming
-    * .SegmentScanCache]], r18), row-identical to the plain read. Callers
-    * pass it ONLY when the probe reads every cell (nprobe ≥ nlist — the
-    * ingest streams' exact posture), where the plain read's static cell
-    * pruning has nothing to prune; a selective probe keeps the parquet
-    * partition filter instead. */
   private[graft] def searchIvfIndexImpl(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, queryId: Column, queryVec: Column,
       k: Int, nprobe: Int, excludeSegment: Option[String],
       localizeQueries: Boolean, expectWhitened: Boolean,
       expectedModelFp: Option[Long] = None,
-      rescore: Option[RescoreSource] = None,
-      routeEnabled: Boolean = true,
-      assignedOverride: Option[DataFrame] = None): DataFrame = {
+      rescore: Option[RescoreSource] = None): DataFrame = {
     val meta = readIvfMeta(spark, path)
     requireSpace(meta.whitened, expectWhitened, path, "searchIvfIndex")
     requireModelFp(meta.modelFp, expectedModelFp, path, "searchIvfIndex")
@@ -1080,8 +1071,7 @@ object Similarity {
     // refines off driver-collected candidates (pushed-`In` source scan),
     // distributed refines with a semi-join prune and a per-query window
     // — no query-scale collect anywhere on that path
-    var assigned = assignedOverride
-      .getOrElse(spark.read.parquet(s"$path/assigned"))
+    var assigned = spark.read.parquet(s"$path/assigned")
     excludeSegment.foreach(sg =>
       assigned = assigned.filter(F.col("seg") =!= sg))
     // an SQ8 layout dequantizes SCAN-SIDE, fused into the candidate read
@@ -1097,8 +1087,7 @@ object Similarity {
     // the quantized (or float) ranking at `kq` per query — the rescore
     // path asks for k·factor candidates, the plain path for k
     def ranked(kq: Int): DataFrame =
-      if (routeEnabled &&
-          shouldRouteBrute(nprobe, nlist, widthB, localizeQueries)) {
+      if (shouldRouteBrute(nprobe, nlist, widthB, localizeQueries)) {
         // wide-probe route (r14 verdict #1; width-aware since r16):
         // past [[bruteRouteFraction]] of this layout's candidate WIDTH
         // the probe machinery costs more than it prunes — scan
@@ -1111,8 +1100,8 @@ object Similarity {
         bruteForceTopK(assigned, F.col("corpus_id"), F.col("cv"),
           queries, queryId, queryVec, kq)
       } else {
-        if (routeEnabled && !localizeQueries && shouldRouteBrute(nprobe,
-            nlist, widthB, localizeQueries = true))
+        if (!localizeQueries && shouldRouteBrute(nprobe, nlist, widthB,
+            localizeQueries = true))
           // frac says route, but the query side is declared NOT
           // driver-small (localizeQueries = false) — brute force would
           // broadcast it; warn instead of silently paying the cliff.

@@ -183,29 +183,8 @@ object Streams {
     // overwrite, as designed); a new run gets a new prefix (appends).
     // Returned so callers can address this run's segments (e.g. replay).
     val prefix = segmentPrefix(ckpt)
-    // cross-trigger snapshots of the index's committed segments (r18,
-    // [[SegmentScanCache]]): the probe previously re-listed, re-inferred
-    // and re-read BOTH index tables every micro-batch; all but the
-    // in-flight segment is immutable between folds, so each segment is
-    // snapshotted once and reused until its file identity changes (the
-    // tier fold and a replayed batch's own-segment rewrite both
-    // invalidate exactly the segments they touched), wherever the
-    // compaction posture keeps segments alive across triggers
-    // ([[snapshotsPay]]). localCheckpoint blocks are immune to the
-    // appends' refreshByPath, which re-executes CacheManager entries
-    // against the refreshed listing.
-    val caches = if (snapshotsPay(compactEvery, tieredCompaction))
-        Some((new SegmentScanCache(spark, s"$indexPath/features"),
-          new SegmentScanCache(spark, s"$indexPath/postings")))
-      else None
     val step: (DataFrame, Long) => Unit = (batchDf, batchId) => {
       val seg = s"${prefix}_b$batchId"
-      val idxFrames = caches.flatMap { case (featCache, postCache) =>
-        for {
-          f <- featCache.frame(Some(seg))
-          p <- postCache.frame(Some(seg))
-        } yield (f, p)
-      }
       // every cache a batch pins is released through the DATASET API once
       // its two writes are done — Dataset.unpersist drops the
       // CacheManager entry too, where an RDD-level sweep frees blocks but
@@ -213,7 +192,7 @@ object Streams {
       // batch on a 24/7 stream
       val (deduped, sigs, release) = graft.operators.Dedup
         .dedupAgainstIndexWithSigs(batchDf, id, text, indexPath, threshold,
-          excludeSegment = Some(seg), indexFrames = idxFrames)
+          excludeSegment = Some(seg))
       val survivors = deduped.persist()
       try {
         survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
@@ -242,25 +221,10 @@ object Streams {
       .option("checkpointLocation", ckpt)
       .foreachBatch(step)
       .start()
-    try {
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      caches.foreach { case (featCache, postCache) =>
-        featCache.close()
-        postCache.close()
-      }
-    }
+    q.processAllAvailable()
+    q.stop()
     prefix
   }
-
-  /** Whether cross-trigger [[SegmentScanCache]] snapshots pay for a
-    * stream's compaction posture: a full fold per cadence (`compactEvery`
-    * > 0 without tiering) rewrites the whole index every cadence, which
-    * would thrash the snapshots instead of reusing them. */
-  private def snapshotsPay(compactEvery: Int,
-      tieredCompaction: Boolean): Boolean =
-    compactEvery == 0 || tieredCompaction
 
   /** Incremental EMBEDDING ingest — the vector-side twin of
     * [[ingestDedupStream]], over the persisted IVF index
@@ -336,18 +300,6 @@ object Streams {
       if (graft.operators.Similarity.ivfIndexIsWhitened(spark, indexPath))
         Some(graft.operators.Embeddings.readPcaModel(spark, indexPath))
       else None
-    // cross-trigger snapshots of the index's committed segments (r18,
-    // [[SegmentScanCache]] — see ingestDedupStream's note). Used ONLY
-    // where it pays: the compaction posture keeps segments alive across
-    // triggers ([[snapshotsPay]]), and the probe reads every cell
-    // (nprobe ≥ nlist, the streams' exact posture — a selective probe
-    // keeps the parquet cell pruning).
-    val assignedCache =
-      if (snapshotsPay(compactEvery, tieredCompaction) &&
-          nprobe.getOrElse(Int.MaxValue) >=
-            graft.operators.Similarity.ivfIndexNlist(spark, indexPath))
-        Some(new SegmentScanCache(spark, s"$indexPath/assigned"))
-      else None
     val step: (DataFrame, Long) => Unit = (batchDf, batchId) =>
         graft.Scratch.scoped {
       val seg = s"${prefix}_b$batchId"
@@ -420,8 +372,7 @@ object Streams {
           localizeQueries = batchRows <= localizeCutoff,
           expectWhitened = pcaModel.isDefined,
           expectedModelFp = pcaModel.map(_.fingerprint),
-          rescore = rescore,
-          assignedOverride = assignedCache.flatMap(_.frame(Some(seg))))
+          rescore = rescore)
         val dead = best.filter(F.col("cosine") >= threshold)
           .select(F.col("query_id").as("__dead"))
         // no forced broadcast: dead is bounded by the micro-batch size,
@@ -475,10 +426,8 @@ object Streams {
       .option("checkpointLocation", ckpt)
       .foreachBatch(step)
       .start()
-    try {
-      q.processAllAvailable()
-      q.stop()
-    } finally assignedCache.foreach(_.close())
+    q.processAllAvailable()
+    q.stop()
     prefix
   }
 

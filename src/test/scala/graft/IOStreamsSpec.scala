@@ -13,21 +13,6 @@ class IOStreamsSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** One single-file micro-batch of a stream feed, mtime-pinned so the
-    * file source's batch order is deterministic (mirrors SparkEntry's
-    * feed builder). */
-  private def shipFeed(df: org.apache.spark.sql.DataFrame,
-      feed: java.io.File, k: Int, tmpDir: String): Unit = {
-    df.coalesce(1).write.parquet(tmpDir)
-    val part = new java.io.File(tmpDir).listFiles()
-      .find(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(feed, s"b$k.parquet")
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    assert(dst.setLastModified(
-      System.currentTimeMillis() - 600000L + k * 2000L))
-  }
-
   test("csv round trip with options") {
     val dir = tmp("graft_csv") + "/out"
     val d = Gdf(Seq((1L, "a;x", 1.5), (2L, "b", 2.5)).toDF("i", "s", "v"))

@@ -154,18 +154,20 @@ class PlanGuardSpec extends SparkSpec {
     seen.asScala.map(_.executedPlan).toSeq
   }
 
-  /** Cached-relation scans of an executed plan, through AQE query stages
-    * and into the cached plans themselves. */
-  private def cacheScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec] = {
+  /** Every node of an executed plan, through AQE query stages, reused
+    * exchanges, cached relations and subqueries. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive._
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    p match {
-      case a: AdaptiveSparkPlanExec => cacheScans(a.executedPlan)
-      case s: QueryStageExec => cacheScans(s.plan)
-      case m: InMemoryTableScanExec => m +: cacheScans(m.relation.cachedPlan)
-      case o => o.children.flatMap(cacheScans)
-    }
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case o => o.children ++ o.subqueries
+    }).flatMap(planNodes)
   }
 
   /** The executed plan of a pair query's verification, after the query
@@ -182,7 +184,9 @@ class PlanGuardSpec extends SparkSpec {
       df.queryExecution.executedPlan.toString
     } else
       actionPlans(SparkEntry.queries(name)(spark, dir).collect())
-        .flatMap(cacheScans).map(_.relation)
+        .flatMap(planNodes).collect {
+          case m: org.apache.spark.sql.execution.columnar
+            .InMemoryTableScanExec => m.relation }
         .find(_.output.map(_.name) == Seq("id_a", "id_b", "jaccard"))
         .getOrElse(fail("d16 ran no plan over the cached pair table"))
         .cachedPlan.toString
@@ -372,4 +376,111 @@ class PlanGuardSpec extends SparkSpec {
           s"$name expected the routed brute shape (broadcast queries " +
             s"against the corpus scan):\n$plan")
     }
+
+  /** Runs a three-trigger ingest stream and checks how it reads the index:
+    * every scan of `idx/<table>` for each of `tables` is a parquet file
+    * scan pruned by a `seg` partition filter, each trigger's in-flight
+    * segment appears in such a filter, and no scan of an existing RDD
+    * carrying `seg` (a segment snapshot) feeds any plan. foreachBatch
+    * hands each trigger its batch as an existing RDD, which carries no
+    * `seg`. */
+  private def assertSegPrunedProbes(idx: String, tables: Seq[String])(
+      run: => String): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    var prefix = ""
+    val nodes = actionPlans { prefix = run }.flatMap(planNodes)
+    val snapshots = nodes.collect {
+      case r: RDDScanExec if r.output.exists(_.name == "seg") => r }
+    assert(snapshots.isEmpty,
+      s"snapshot scans feed the triggers:\n${snapshots.mkString("\n")}")
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    for (t <- tables) {
+      val root = new org.apache.hadoop.fs.Path(s"$idx/$t").toUri.getPath
+      val probes = scans.filter(_.relation.location.rootPaths
+        .exists(_.toUri.getPath == root))
+      assert(probes.nonEmpty, s"no parquet scan of $root")
+      for (s <- probes)
+        assert(s.partitionFilters.exists(_.references.exists(_.name == "seg")),
+          s"$t scan without a seg partition filter:\n$s")
+      for (k <- 0 until 3) {
+        val seg = s"${prefix}_b$k"
+        assert(probes.exists(_.partitionFilters.mkString.contains(seg)),
+          s"trigger $k did not probe $t through a scan excluding $seg")
+      }
+    }
+  }
+
+  test("ingestDedupStream probes features and postings through seg-pruned " +
+      "parquet scans under explicit schemas, never through snapshots; a " +
+      "type-mismatched layout fails at scan time") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.{functions => F}
+    import spark.implicits._
+    val text = "the quick brown fox jumps over the lazy dog while the sun " +
+      "sets slowly behind the distant purple mountains"
+    val d = java.nio.file.Files.createTempDirectory("graft_probeplan").toString
+    val idx = s"$d/idx"
+    Dedup.writeMinhashIndex(Seq((100L, text)).toDF("doc_id", "text"),
+      F.col("doc_id"), F.col("text"), idx, shingleSize = 3, numHashes = 64,
+      bands = 16)
+    val feed = new java.io.File(s"$d/feed"); feed.mkdirs()
+    val fresh = Seq(
+      "completely unrelated text about database query optimization and " +
+        "distributed systems running on large compute clusters",
+      "short interlude about cooking pasta properly al dente tonight with " +
+        "garlic and fresh basil from the garden",
+      "a travel note on trains crossing alpine passes in winter with snow " +
+        "piled high beside the narrow tracks")
+    val batches = (0 until 3).map(k =>
+      Seq((2L * k, text.replace("slowly", s"slowly $k")),
+        (2L * k + 1, fresh(k))).toDF("doc_id", "text"))
+    batches.zipWithIndex.foreach { case (b, k) =>
+      shipFeed(b, feed, k, s"$d/tmp$k") }
+    assertSegPrunedProbes(idx, Seq("features", "postings")) {
+      graft.streaming.Streams.ingestDedupStream(
+        graft.streaming.Streams.readParquetStream(spark, feed.toString,
+          batches.head.schema),
+        F.col("doc_id"), F.col("text"), idx, s"$d/out", threshold = 0.5,
+        name = "probe_plan_dedup")
+    }
+    assert(col1[Long](spark.read.parquet(s"$d/out").orderBy("doc_id"),
+      "doc_id") === Seq(1L, 3L, 5L))
+    // a features table whose shingle hashes are strings: the explicit
+    // schema does not coerce it, the scan refuses it
+    Seq((7L, Seq("a", "b"))).toDF("id", "sh").withColumn("seg", F.lit("base"))
+      .write.mode("overwrite").partitionBy("seg").parquet(s"$idx/features")
+    val e = intercept[org.apache.spark.SparkException](
+      Dedup.dedupAgainstIndex(batches.head, F.col("doc_id"), F.col("text"),
+        idx, threshold = 0.5).collect())
+    assert(e.getMessage.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH"),
+      e.getMessage)
+  }
+
+  test("ingestEmbedStream probes assigned through seg-pruned parquet " +
+      "scans, never through snapshots") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.{functions => F}
+    import spark.implicits._
+    def axis(i: Int): Seq[Double] =
+      Seq.tabulate(8)(j => if (j == i) 1.0 else 0.01 * (j + 1))
+    val d = java.nio.file.Files.createTempDirectory("graft_eprobeplan").toString
+    val idx = s"$d/idx"
+    Similarity.writeIvfIndex(Seq((100L, axis(0))).toDF("vec_id", "embedding"),
+      F.col("vec_id"), F.col("embedding"), idx, nlist = 2, trainSample = 10)
+    val feed = new java.io.File(s"$d/feed"); feed.mkdirs()
+    val batches = (0 until 3).map(k =>
+      Seq((2L * k, axis(0).map(_ * 2.0)), (2L * k + 1, axis(k + 1)))
+        .toDF("vec_id", "embedding"))
+    batches.zipWithIndex.foreach { case (b, k) =>
+      shipFeed(b, feed, k, s"$d/tmp$k") }
+    assertSegPrunedProbes(idx, Seq("assigned")) {
+      graft.streaming.Streams.ingestEmbedStream(
+        graft.streaming.Streams.readParquetStream(spark, feed.toString,
+          batches.head.schema),
+        F.col("vec_id"), F.col("embedding"), idx, s"$d/out",
+        threshold = 0.999, name = "probe_plan_embed")
+    }
+    assert(col1[Long](spark.read.parquet(s"$d/out").orderBy("vec_id"),
+      "vec_id") === Seq(1L, 3L, 5L))
+  }
 }

@@ -31,6 +31,21 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def col1[T](d: DataFrame, name: String): Seq[T] =
     d.select(name).collect().toSeq.map(_.getAs[T](0))
 
+  /** One single-file micro-batch of a stream feed, mtime-pinned so the
+    * file source's batch order is deterministic (mirrors SparkEntry's
+    * feed builder). */
+  def shipFeed(df: DataFrame, feed: java.io.File, k: Int,
+      tmpDir: String): Unit = {
+    df.coalesce(1).write.parquet(tmpDir)
+    val part = new java.io.File(tmpDir).listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+    val dst = new java.io.File(feed, s"b$k.parquet")
+    java.nio.file.Files.move(part.toPath, dst.toPath)
+    assert(dst.setLastModified(
+      System.currentTimeMillis() - 600000L + k * 2000L))
+  }
+
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
 }

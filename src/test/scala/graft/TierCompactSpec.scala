@@ -11,9 +11,8 @@ import org.apache.spark.sql.{functions => F}
   * IVF's stronger structural search-equality, (3) the base-ratio
   * escalation to the full fold, (4) crash recovery through the intent
   * marker, both roll-forward and roll-back, (5) the stream replay
-  * contract (excludeSegment never folded), (6) the segment writer's
-  * single evaluation of its input, and (7) the ingest streams'
-  * cross-trigger segment snapshots against the plain reads. */
+  * contract (excludeSegment never folded), and (6) the segment writer's
+  * single evaluation of its input. */
 class TierCompactSpec extends SparkSpec {
   import spark.implicits._
 
@@ -205,51 +204,6 @@ class TierCompactSpec extends SparkSpec {
       dir, segment = "b1")
     for (t <- Seq("features", "postings"))
       assert(!new java.io.File(s"$dir/$t/seg=b1").exists(), t)
-  }
-
-  test("SegmentScanCache: frame(Some(seg)) is row-identical to the plain " +
-      "read minus the excluded segment after an append, a replayed " +
-      "segment rewrite and a tier fold; close() releases every snapshot") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_segcache")
-      .toString + "/idx"
-    Dedup.writeMinhashIndex(Seq((10L, boiler), (30L, real)).toDF("id", "text"),
-      F.col("id"), F.col("text"), dir, shingleSize = 3, numHashes = 64,
-      bands = 16)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val caches = Seq("features" -> Seq("seg", "id", "sh"),
-        "postings" -> Seq("seg", "band", "bucket", "ids"))
-      .map { case (t, cols) =>
-        (t, cols, new graft.streaming.SegmentScanCache(spark, s"$dir/$t"))
-      }
-    def rows(d: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
-      d.select(cols.map(F.col): _*).collect().map(_.toString).toSeq.sorted
-    def check(inFlight: String, when: String): Unit =
-      for ((t, cols, cache) <- caches) {
-        val cached = cache.frame(Some(inFlight))
-          .getOrElse(fail(s"$t: no cached frame $when"))
-        assert(rows(cached, cols) === rows(spark.read.parquet(s"$dir/$t")
-          .filter(F.col("seg") =!= inFlight), cols), s"$t $when")
-      }
-    def append(id: Long, text: String, seg: String): Unit =
-      Dedup.appendToMinhashIndex(Seq((id, text)).toDF("id", "text"),
-        F.col("id"), F.col("text"), dir, seg)
-    check("b0", "on the base build")
-    append(40L, real + " one", "b0")
-    check("b1", "after an append")
-    append(41L, real + " two", "b1")
-    check("b1", "with the in-flight segment written")
-    // a replayed b0 rewrites its files (new file identity) with other rows:
-    // a stale snapshot would still hold doc 40
-    append(42L, real + " three", "b0")
-    check("b1", "after a replayed segment rewrite")
-    append(43L, real + " four", "b2")
-    val report = Dedup.tierCompactMinhashIndex(spark, dir,
-      excludeSegment = Some("b2"), fanout = 2, baseFoldRatio = 1e9)
-    assert(report.folds.map(_.sources.toSet) === Seq(Set("b0", "b1")))
-    check("b2", "after a tier fold")
-    assert(spark.sparkContext.getPersistentRDDs.keySet != before)
-    caches.foreach(_._3.close())
-    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("tierCompactIvfIndex: search results identical across tier folds " +
