@@ -353,133 +353,55 @@ object Dedup {
   /** Connected components over a near-duplicate pair table: each doc in a
     * pair gets a `cluster` label = the MINIMUM doc id reachable through the
     * pair graph (so one near-dup "family" shares one label, and the label
-    * itself is the canonical member).
+    * itself is the canonical member). A node that appears only in
+    * self-loop pairs is labeled to itself; pairs with a null side are
+    * ignored.
     *
-    * Algorithm: distributed min-label propagation — every iteration each
-    * vertex takes the min of its own label and its neighbors' labels (one
-    * join + one groupBy per round), until a fixed point. Converges in
-    * O(component diameter) rounds; near-dup components are stars/cliques
-    * around a template (diameter ≤ 2-3 in practice), so 3-4 rounds is
-    * typical. Lineage is cut with an eager `localCheckpoint` every round —
-    * without it the plan doubles per iteration and the job dies long before
-    * 100 TB. For adversarially long chain-shaped graphs swap in
-    * large-star/small-star (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond"), which converges in O(log² n); not needed for
-    * dedup workloads.
-    *
-    * The convergence probe (`isEmpty` on the changed-label set) is one extra
-    * cheap job per round over the LABEL table (pairs-scale, not
-    * corpus-scale). */
-  def duplicateClusters(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // the edges union references `pairs` TWICE — without caching, the whole
-    // upstream pair-generation pipeline (LSH + verification) would execute
-    // twice inside the first job
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = p
-      .select(F.col("id_a").as("src"), F.col("id_b").as("dst"))
-      .union(p.select(F.col("id_b").as("src"), F.col("id_a").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seed with min(id, min(neighbors)) rather than id: star/clique
-    // components — the shape near-dup families take — then converge at
-    // iteration 0 and pay only the confirming round, instead of one full
-    // propagation round to learn what the groupBy already knew
-    // convergence probe: labels are MONOTONE non-increasing per id (next =
-    // min over a union that includes the previous label) over a fixed id
-    // set, so the exact decimal label sum is strictly decreasing until the
-    // fixed point — sum unchanged ⟺ every label unchanged. The sum rides
-    // the SAME job that materializes the round's label table (r18, guide
-    // §5 job floor: `observe` plants a CollectMetrics pass-through whose
-    // accumulator fills during the localCheckpoint action, read back
-    // synchronously from the executed plan) — replacing the separate
-    // aggregate job per round, i.e. ONE scheduled job per iteration
-    // instead of two. Exactness is unchanged: the metric is the same
-    // decimal sum the dedicated job computed.
-    def materializeWithSum(l: DataFrame, tag: String)
-        : (DataFrame, java.math.BigDecimal) = {
-      val named = l.observe(tag,
-        F.sum(F.col("cluster").cast("decimal(38,0)")).as("s"))
-      val ck = named.localCheckpoint() // eager: runs the job, fills the metric
-      val row = named.queryExecution.observedMetrics(tag)
-      (ck, if (row.isNullAt(0)) java.math.BigDecimal.ZERO
-           else row.getDecimal(0))
-    }
-    var (labels, prevSum) = materializeWithSum(
-      edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min(F.col("dst"))).as("cluster"))
-        .withColumnRenamed("src", "id"),
-      "cc_seed") // eager: materializes (and caches) edges + pairs
-    p.unpersist(false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIterations) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(F.col("dst").as("id"), F.col("cluster"))
-      val (next, nextSum) = materializeWithSum(
-        labels.union(neighborMin)
-          .groupBy("id").agg(F.min("cluster").as("cluster")),
-        s"cc_$iter")
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
-    }
-    edges.unpersist()
-    // min-label propagation moves a label one hop per round: a component
-    // with diameter > maxIterations would exit here with WRONG labels and
-    // no symptom — dedupNear would then keep the wrong canonical docs.
-    // Fail loudly instead of returning silently-wrong clusters; the
-    // escape hatch for adversarially chain-shaped graphs is the
-    // large-star/small-star O(log² n) variant cited above.
-    if (!converged)
-      throw new IllegalStateException(
-        s"duplicateClusters did not converge within $maxIterations rounds — " +
-          "the pair graph has a component with diameter > maxIterations. " +
-          "Raise maxIterations, or use a large-star/small-star variant for " +
-          "chain-shaped duplicate graphs.")
-    labels.select(F.col("id"), F.col("cluster"))
-  }
-
-  /** Connected components by alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the O(log² n)-round variant that [[duplicateClusters]]'s scaladoc
-    * cites as the escape hatch for chain-shaped duplicate graphs, where
-    * one-hop min-label propagation needs O(diameter) rounds. Same output
-    * contract as [[duplicateClusters]]: every node of the pair graph
-    * labeled with its component's MINIMUM id.
-    *
-    * Each round is two aggregate+join passes over the edge table (always
-    * pairs-scale, monotonically shrinking toward one star edge per
-    * non-root node):
+    * One operator under two names ([[duplicateClustersStar]] is the same
+    * algorithm with a larger default round budget): alternating
+    * large-star / small-star rounds (Kiveris et al., "Connected Components
+    * in MapReduce and Beyond"), which converge in O(log² n) rounds on ANY
+    * graph shape — chains included, where one-hop label propagation would
+    * need O(diameter) rounds. Each round is two aggregate+join passes over
+    * the edge table (always pairs-scale, monotonically shrinking toward
+    * one star edge per non-root node):
     *  - large-star: every node attaches its LARGER neighbors to the
     *    minimum of its neighborhood (including itself);
     *  - small-star: every node attaches its smaller-or-equal neighbors
     *    (and itself) to that minimum.
-    * Edges stay canonically (hi, lo); a fixed point — reached in
-    * O(log² n) rounds on ANY graph shape — is exactly the star forest
-    * whose centers are the component minima, detected IN the round that
-    * produces it (see the in-loop comment). Per-round `localCheckpoint`
-    * cuts lineage like every iterative operator here. */
+    * Edges stay canonically (hi, lo); a fixed point is exactly the star
+    * forest whose centers are the component minima, detected IN the round
+    * that produces it (see the in-loop comment). A graph that has not
+    * reached it within `maxIterations` rounds throws rather than return
+    * wrong labels.
+    *
+    * The pair input is read ONCE, in the job that checkpoints its
+    * canonical edges, so an expensive pair pipeline (LSH + verification)
+    * runs once with no cache; per-round `localCheckpoint` cuts lineage
+    * like every iterative operator here. */
+  def duplicateClusters(pairs: DataFrame, maxIterations: Int = 20): DataFrame =
+    duplicateClustersStar(pairs, maxIterations)
+
+  /** The connected-components operator documented on [[duplicateClusters]]
+    * (large-star/small-star, same output contract, same loud failure),
+    * with a 30-round default budget; `duplicateClusters` calls it. */
   def duplicateClustersStar(pairs: DataFrame,
       maxIterations: Int = 30): DataFrame = {
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // canonical (hi, lo), deduped, self-loops dropped
-    var edges = p
+    // canonical (hi, lo), deduped, in ONE pass over the pairs; the same
+    // job counts the non-self-loop rows (`observe`: the metric fills
+    // during the eager checkpoint and is read back from its executed plan)
+    val canon = pairs
+      .filter(F.col("id_a").isNotNull && F.col("id_b").isNotNull)
       .select(F.greatest(F.col("id_a"), F.col("id_b")).as("hi"),
         F.least(F.col("id_a"), F.col("id_b")).as("lo"))
-      .filter(F.col("hi") =!= F.col("lo")).distinct()
-      .localCheckpoint()
-    // nodes appearing ONLY in self-loop pairs: the hi =!= lo filter drops
-    // them from the star rounds, but [[duplicateClusters]] labels them to
-    // themselves — honor the same-output contract by unioning them back at
-    // the end. Eager checkpoint: evaluated while `p` is still cached.
-    val selfNodes = p.filter(F.col("id_a") === F.col("id_b"))
-      .select(F.col("id_a").as("id")).distinct()
-      .localCheckpoint()
-    p.unpersist(false)
+      .distinct()
+      .observe("cc_edges", F.count_if(F.col("hi") =!= F.col("lo")).as("n"))
+    val ck = canon.localCheckpoint()
+    val selfNodes = ck.filter(F.col("hi") === F.col("lo"))
+    var edges = ck.filter(F.col("hi") =!= F.col("lo"))
     var iter = 0
-    var converged = edges.isEmpty
+    var converged =
+      canon.queryExecution.observedMetrics("cc_edges").getLong(0) == 0L
     while (!converged && iter < maxIterations) {
       // ---- large-star: attach strictly-larger neighbors to the
       // neighborhood minimum m(u) = min(Γ(u) ∪ {u}). NO intra-round
@@ -527,17 +449,15 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"duplicateClustersStar did not converge within $maxIterations " +
+        s"duplicateClusters did not converge within $maxIterations " +
           "rounds — raise maxIterations (bound is O(log² n) star rounds).")
-    // fixed point = star forest (child, root): children label to their
-    // root, roots label to themselves
-    val labeled = edges
-      .select(F.col("hi").as("id"), F.col("lo").as("cluster"))
+    // fixed point = star forest (child, root) with lo < hi: children label
+    // to their root, roots and self-loop nodes to themselves. A self-loop
+    // node that is also a child keeps its root, the smaller label.
+    edges.select(F.col("hi").as("id"), F.col("lo").as("cluster"))
       .unionAll(edges.select(F.col("lo").as("id"), F.col("lo").as("cluster")))
-      .distinct()
-    labeled.unionAll(
-      selfNodes.join(labeled, Seq("id"), "left_anti")
-        .select(F.col("id"), F.col("id").as("cluster")))
+      .unionAll(selfNodes.select(F.col("hi").as("id"), F.col("hi").as("cluster")))
+      .groupBy("id").agg(F.min("cluster").as("cluster"))
   }
 
   /** End-to-end near-dedup: MinHash-LSH pairs → connected components →

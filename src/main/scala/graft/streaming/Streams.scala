@@ -195,27 +195,32 @@ object Streams {
           excludeSegment = Some(seg))
       val survivors = deduped.persist()
       try {
-        survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
+        phase(spark, "survivor write") {
+          survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
+        }
         // append from the probe's own cached signatures — row-identical
         // to the from-text append, minus a second shingling pass over the
         // batch (r17 optimization; that repeat measured at roughly half
         // the append phase per trigger). The probe's
         // own-segment exclusion is passed through and ENFORCED (r18): the
         // append's correctness under plan re-execution depends on it.
-        graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
-          id, indexPath, seg, probeExcludedSegment = Some(seg))
+        phase(spark, "index append") {
+          graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
+            id, indexPath, seg, probeExcludedSegment = Some(seg))
+        }
       } finally {
         survivors.unpersist(false)
         release()
       }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-        if (tieredCompaction)
-          graft.operators.Dedup.tierCompactMinhashIndex(spark, indexPath,
-            excludeSegment = Some(seg))
-        else
-          graft.operators.Dedup.compactMinhashIndex(spark, indexPath,
-            excludeSegment = Some(seg))
-      }
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+        phase(spark, "fold") {
+          if (tieredCompaction)
+            graft.operators.Dedup.tierCompactMinhashIndex(spark, indexPath,
+              excludeSegment = Some(seg))
+          else
+            graft.operators.Dedup.compactMinhashIndex(spark, indexPath,
+              excludeSegment = Some(seg))
+        }
     }
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
@@ -394,29 +399,34 @@ object Streams {
           .select(F.col("__vid").as("vec_id"), F.col("__v").as("embedding"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
-          pcaModel match {
-            case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
-              graft.operators.Embeddings.pcaProject(survivors,
-                F.col("embedding"), m, "__wv", whiten = true),
-              F.col("vec_id"), F.col("__wv"), indexPath, seg,
-              expectWhitened = true,
-              expectedModelFp = Some(m.fingerprint))
-            case None => graft.operators.Similarity.appendToIvfIndex(
-              survivors, F.col("vec_id"), F.col("embedding"), indexPath, seg)
+          phase(spark, "survivor write") {
+            survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
+          }
+          phase(spark, "index append") {
+            pcaModel match {
+              case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
+                graft.operators.Embeddings.pcaProject(survivors,
+                  F.col("embedding"), m, "__wv", whiten = true),
+                F.col("vec_id"), F.col("__wv"), indexPath, seg,
+                expectWhitened = true,
+                expectedModelFp = Some(m.fingerprint))
+              case None => graft.operators.Similarity.appendToIvfIndex(
+                survivors, F.col("vec_id"), F.col("embedding"), indexPath, seg)
+            }
           }
         } finally {
           survivors.unpersist(false)
           ()
         }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-          if (tieredCompaction)
-            graft.operators.Similarity.tierCompactIvfIndex(spark,
-              indexPath, excludeSegment = Some(seg))
-          else
-            graft.operators.Similarity.compactIvfIndex(spark, indexPath,
-              excludeSegment = Some(seg))
-        }
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          phase(spark, "fold") {
+            if (tieredCompaction)
+              graft.operators.Similarity.tierCompactIvfIndex(spark,
+                indexPath, excludeSegment = Some(seg))
+            else
+              graft.operators.Similarity.compactIvfIndex(spark, indexPath,
+                excludeSegment = Some(seg))
+          }
       } finally {
         batch.unpersist(false)
         ()
@@ -593,6 +603,19 @@ object Streams {
     q.processAllAvailable()
     q.stop()
     prefix
+  }
+
+  /** Run one phase of an ingest trigger under the job description
+    * "<stream's batch description>: <name>", so listeners (RunStats, the
+    * SQL execution events) can tell a trigger's survivor write, index
+    * append and fold apart. Only the description changes: the job group
+    * is the stream's own, which Structured Streaming (cancellation) and
+    * per-stream job attribution rely on. */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(Option(outer).fold(name)(o => s"$o: $name"))
+    try body finally sc.setJobDescription(outer)
   }
 
   /** Truncated SHA-256 of the checkpoint path, not String.hashCode: a

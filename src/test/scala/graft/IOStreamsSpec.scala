@@ -647,6 +647,79 @@ class IOStreamsSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
+  test("ingest streams describe each trigger phase (survivor write, index " +
+      "append, fold) in their SQL executions, under the batch's own " +
+      "description") {
+    import graft.operators.{Dedup, Similarity}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // the descriptions of every SQL execution `body` starts
+    def descriptions(body: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => seen.add(s.description)
+          case _ => ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        spark.sparkContext.setJobDescription("__phase_sentinel")
+        try spark.range(1).collect()
+        finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen.contains("__phase_sentinel") &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(seen.contains("__phase_sentinel"), "listener events never arrived")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    }
+    val dir = tmp("graft_phases")
+    val text = "the quick brown fox jumps over the lazy dog again and again " +
+      "while the sun sets slowly behind the distant purple mountains"
+    Dedup.writeMinhashIndex(Seq((100L, text)).toDF("doc_id", "text"),
+      F.col("doc_id"), F.col("text"), dir + "/idx", shingleSize = 3,
+      numHashes = 64, bands = 16)
+    def axis(d: Int): Seq[Double] =
+      Seq.tabulate(8)(i => if (i == d) 1.0 else 0.01 * (i + 1))
+    Similarity.writeIvfIndex(Seq((100L, axis(0))).toDF("vec_id", "embedding"),
+      F.col("vec_id"), F.col("embedding"), dir + "/eidx", nlist = 2,
+      trainSample = 10)
+    // fresh docs: every trigger has survivors to write and append
+    val texts = Seq(
+      "completely unrelated text about database query optimization and " +
+        "distributed systems running on large compute clusters",
+      "short interlude about cooking pasta properly al dente tonight with " +
+        "garlic and fresh basil from the garden").zipWithIndex.map {
+      case (t, k) => Seq((k.toLong, t)).toDF("doc_id", "text") }
+    val vecs = (0 until 2).map(k =>
+      Seq((k.toLong, axis(k + 1))).toDF("vec_id", "embedding"))
+    val feed = new java.io.File(dir + "/feed"); feed.mkdirs()
+    val efeed = new java.io.File(dir + "/efeed"); efeed.mkdirs()
+    for (k <- 0 until 2) {
+      shipFeed(texts(k), feed, k, s"$dir/tmp$k")
+      shipFeed(vecs(k), efeed, k, s"$dir/etmp$k")
+    }
+    val dedupDescs = descriptions(Streams.ingestDedupStream(
+      Streams.readParquetStream(spark, feed.toString, texts.head.schema,
+        maxFilesPerTrigger = 1),
+      F.col("doc_id"), F.col("text"), dir + "/idx", dir + "/out",
+      threshold = 0.5, name = "t_phases", compactEvery = 1))
+    val embedDescs = descriptions(Streams.ingestEmbedStream(
+      Streams.readParquetStream(spark, efeed.toString, vecs.head.schema,
+        maxFilesPerTrigger = 1),
+      F.col("vec_id"), F.col("embedding"), dir + "/eidx", dir + "/eout",
+      threshold = 0.999, name = "t_ephases", compactEvery = 1))
+    for ((stream, descs) <- Seq("dedup" -> dedupDescs, "embed" -> embedDescs);
+         b <- 0 until 2; p <- Seq("survivor write", "index append", "fold"))
+      assert(descs.exists(d =>
+          d.contains("runId = ") && d.endsWith(s"batch = $b: $p")),
+        s"no $stream SQL execution of batch $b described as '$p' in:\n" +
+          descs.distinct.mkString("\n---\n"))
+  }
+
   test("ingestEmbedStream: survivors grow the IVF index across " +
       "micro-batches; retried segment replaces; self-match hazard pinned " +
       "both ways; fresh-checkpoint rerun appends under a new prefix") {

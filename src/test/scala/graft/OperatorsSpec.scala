@@ -145,6 +145,27 @@ class OperatorsSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
+  test("duplicateClusters evaluates its pair input once per pair row, " +
+      "however often the cluster table is consumed") {
+    // the pair frame is the expensive LSH + verification pipeline in
+    // dedupNear; a counting UDF stands in for it
+    val evals = spark.sparkContext.longAccumulator("cc_pair_evals")
+    val counted = F.udf { (x: Long) => evals.add(1L); x }.asNondeterministic()
+    val pairs = Seq((2L, 1L), (2L, 3L), (9L, 7L), (4L, 4L))
+      .toDF("id_a", "id_b").withColumn("id_a", counted(F.col("id_a")))
+    val clusters = Dedup.duplicateClusters(pairs)
+    // two consumers, as dedupNearKeepBest uses its cluster table: the
+    // winner election over members, then the loser anti-join
+    val members = Seq(1L, 2L, 3L, 4L, 7L, 9L).toDF("id").join(clusters, "id")
+    val winners = members.groupBy("cluster").agg(F.max("id").as("keep"))
+    val losers = clusters
+      .join(winners, F.col("id") === F.col("keep"), "left_anti")
+      .orderBy("id").collect().map(_.getLong(0)).toSeq
+    assert(losers == Seq(1L, 2L, 7L))
+    assert(evals.value == 4L,
+      s"pair input evaluated ${evals.value} times for 4 pair rows")
+  }
+
   test("dedupNear keeps one canonical doc per near-dup family") {
     val base = "the quick brown fox jumps over the lazy dog again and again " +
       "while the sun sets slowly behind the distant purple mountains"

@@ -171,9 +171,10 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   /** The executed plan of a pair query's verification, after the query
-    * ran: the frame's own plan, or for d16 (dedupNear) the plan of the
-    * pair table duplicateClusters caches — its verification runs inside
-    * duplicateClusters' eager checkpoints, never in the returned frame. */
+    * ran: the frame's own plan, or for d16 (dedupNear) the executed action
+    * plan that holds the band fold — its verification runs inside
+    * duplicateClusters' eager edge checkpoint, never in the returned
+    * frame. */
   private def verificationPlan(name: String): String =
     if (name != "d16_dedup_near") {
       val df = SparkEntry.queries(name)(spark, dir)
@@ -184,12 +185,8 @@ class PlanGuardSpec extends SparkSpec {
       df.queryExecution.executedPlan.toString
     } else
       actionPlans(SparkEntry.queries(name)(spark, dir).collect())
-        .flatMap(planNodes).collect {
-          case m: org.apache.spark.sql.execution.columnar
-            .InMemoryTableScanExec => m.relation }
-        .find(_.output.map(_.name) == Seq("id_a", "id_b", "jaccard"))
-        .getOrElse(fail("d16 ran no plan over the cached pair table"))
-        .cachedPlan.toString
+        .map(_.toString).find(_.contains("capped_sorted_ids"))
+        .getOrElse(fail("d16 ran no plan holding the band fold"))
 
   /** Cache-free single-DAG verification (r6 verdict: the unconditional
     * pins cost d13 2.3x for nothing); the MinHash and n-gram pair queries

@@ -190,27 +190,37 @@ class PropertySpec extends SparkSpec {
         assert(got == unionFind(es), s"star clusters differ for $es")
       }
     }
-    // the escape-hatch case: a 40-edge chain (diameter 40). Star rounds
-    // collapse it in O(log² n); one-hop min-label propagation provably
-    // CANNOT within 8 rounds and must throw rather than mislabel.
+    // a 40-edge chain (diameter 40): star rounds collapse it in O(log² n),
+    // well inside both names' default budgets (duplicateClusters' 20
+    // rounds is half the diameter)...
     val chain = (0L until 40L).map(i => (i, i + 1))
     val chainDf = df(schema("id_a" -> LongType, "id_b" -> LongType),
       chain.map(e => Seq(e._1, e._2)): _*)
     val star = operators.Dedup.duplicateClustersStar(chainDf, maxIterations = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == (0L to 40L).map(_ -> 0L).toMap)
+    assert(operators.Dedup.duplicateClusters(chainDf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L to 40L).map(_ -> 0L).toMap)
+    // ...and a budget too small to reach the fixed point throws rather
+    // than return wrong labels
     intercept[IllegalStateException] {
-      operators.Dedup.duplicateClusters(chainDf, maxIterations = 8)
+      operators.Dedup.duplicateClusters(chainDf, maxIterations = 1)
     }
-    // same-output contract on self-loops: a node appearing ONLY as a
-    // self-loop pair must come back labeled to itself from BOTH variants
+    // self-loops: a node appearing ONLY as a self-loop pair comes back
+    // labeled to itself from both names, one that also has an edge keeps
+    // its component's label (2); a pair with a null side is ignored (5 is
+    // absent)
     val withSelf = df(schema("id_a" -> LongType, "id_b" -> LongType),
-      Seq(1L, 2L), Seq(9L, 9L))
+      Seq(1L, 2L), Seq(9L, 9L), Seq(2L, 2L), Seq(5L, null))
     val expect = Map(1L -> 1L, 2L -> 1L, 9L -> 9L)
     assert(operators.Dedup.duplicateClustersStar(withSelf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
     assert(operators.Dedup.duplicateClusters(withSelf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
+    // no pairs (a corpus without near-dups): no clusters
+    assert(operators.Dedup.duplicateClusters(
+      withSelf.filter(F.col("id_a") < 0L)).collect().isEmpty)
   }
 
   test("chunk invariants: full coverage, window sizes, overlap stitching") {
