@@ -391,4 +391,97 @@ object Bridge {
       throw new java.io.IOException(s"writeParquetDriverSide: rename to $fin failed")
     }
   }
+
+  /** The Spark schema a Spark writer recorded in a parquet footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key schema inference
+    * itself prefers), with every field nullable as a file-source read
+    * reports it — one footer read, zero Spark jobs. None for a file
+    * without the key (a foreign writer). */
+  def parquetSparkSchema(conf: org.apache.hadoop.conf.Configuration,
+      st: org.apache.hadoop.fs.FileStatus)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try sparkSchemaOf(r.getFooter.getFileMetaData.getKeyValueMetaData)
+    finally r.close()
+  }
+
+  private def sparkSchemaOf(kv: java.util.Map[String, String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    Option(kv.get(org.apache.spark.sql.execution.datasources.parquet
+        .ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
+      .collect { case s: org.apache.spark.sql.types.StructType => s.asNullable }
+
+  /** Read ONE bounded parquet file on the driver through Spark's own
+    * [[org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport]]
+    * — the read-side twin of [[writeParquetDriverSide]]: same type
+    * mapping and rebase handling as an executor scan, ZERO Spark jobs.
+    * The schema is the footer's Spark schema ([[parquetSparkSchema]]);
+    * rows are copied out of the reader's reused buffer. None when the
+    * footer carries no Spark schema (a foreign writer — the caller keeps
+    * its distributed read). Only for BOUNDED files (mutation-scale
+    * metadata — the caller's contract). */
+  def readParquetDriverSide(session: org.apache.spark.sql.SparkSession,
+      st: org.apache.hadoop.fs.FileStatus)
+      : Option[(org.apache.spark.sql.types.StructType,
+        IndexedSeq[org.apache.spark.sql.Row])] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    import org.apache.spark.sql.internal.SQLConf
+    import scala.jdk.CollectionConverters._
+    val cs = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sqlConf = cs.sessionState.conf
+    val conf = cs.sessionState.newHadoopConf()
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try {
+      val meta = r.getFooter.getFileMetaData
+      val kv = meta.getKeyValueMetaData
+      sparkSchemaOf(kv).map { schema =>
+        // the confs ParquetFileFormat pins into a scan task's
+        // configuration — the schema converter reads them unguarded
+        conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+        conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+        Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+          SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+          SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e =>
+          conf.setBoolean(e.key, sqlConf.getConf(e)))
+        val support = new ParquetReadSupport(None, false,
+          DataSourceUtils.datetimeRebaseSpec(kv.get,
+            sqlConf.getConfString(SQLConf.PARQUET_REBASE_MODE_IN_READ.key)),
+          DataSourceUtils.int96RebaseSpec(kv.get,
+            sqlConf.getConfString(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key)))
+        val fileSchema = meta.getSchema
+        val ctx = support.init(new org.apache.parquet.hadoop.api.InitContext(
+          conf, kv.asScala.map { case (k, v) =>
+            k -> java.util.Collections.singleton(v) }.toMap.asJava, fileSchema))
+        val materializer = support.prepareForRead(conf, kv, fileSchema, ctx)
+        r.setRequestedSchema(ctx.getRequestedSchema)
+        val io = new org.apache.parquet.io.ColumnIOFactory(meta.getCreatedBy)
+          .getColumnIO(ctx.getRequestedSchema, fileSchema, true)
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        val out = IndexedSeq.newBuilder[org.apache.spark.sql.Row]
+        var pages = r.readNextRowGroup()
+        while (pages != null) {
+          val rows = io.getRecordReader(pages, materializer,
+            org.apache.parquet.filter2.compat.FilterCompat.NOOP)
+          var i = 0L
+          while (i < pages.getRowCount) {
+            out += toRow(rows.read().copy()).asInstanceOf[org.apache.spark.sql.Row]
+            i += 1
+          }
+          pages = r.readNextRowGroup()
+        }
+        (schema, out.result())
+      }
+    } finally r.close()
+  }
+
+  /** `schema` with every field nullable — what a file-source read of
+    * data written under `schema` reports (`asNullable` is private[spark]). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

@@ -141,8 +141,13 @@ class ManifestFooterSpec extends SparkSpec {
     // manifest view must fold to zero rows (a part that vanished — the
     // zero-row dynamic-overwrite hazard writePart's doc records — would
     // instead resurrect the two base files).
-    // (readSkipping over the now file-less layout hits a PRE-EXISTING
-    // schema-inference edge — present before this round, out of scope.)
     assert(Manifest.manifest(spark, dir).count() == 0L)
+    // a range read over the now file-less layout: zero rows with the
+    // table's columns (the parts record the data schema)
+    val empty = Manifest.readSkipping(spark, dir, "id", 0L, 100L)
+    assert(empty.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> org.apache.spark.sql.types.LongType,
+        "v" -> org.apache.spark.sql.types.DoubleType))
+    assert(empty.count() == 0L)
   }
 }
