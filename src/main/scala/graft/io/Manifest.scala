@@ -162,48 +162,22 @@ object Manifest {
     * reads pinned to EARLIER commits are unaffected, which is all the
     * monotonicity the contract needs.
     *
-    * Read DRIVER-SIDE from the part files' parquet footer statistics —
-    * `__commit` is constant per part, so every footer's column max IS the
-    * part's commit; one bounded listing + one footer read per part, ZERO
-    * Spark jobs (a naive `agg(max)` measured 3-4 driver-scheduled jobs
-    * per call — per-mutation floor the r12 job trim just paid down). A
-    * footer without statistics (foreign writer) falls back to the
-    * aggregate. */
+    * Read DRIVER-SIDE from the part files' parquet footer statistics
+    * ([[harvestFooterCommits]], the pooled footer reader, over the
+    * listing [[parts]] makes) — `__commit` is constant per part, so every
+    * footer's column max IS the part's commit; ZERO Spark jobs (a naive
+    * `agg(max)` measured 3-4 driver-scheduled jobs per call —
+    * per-mutation floor the r12 job trim just paid down). A footer
+    * without statistics, or a part holding several commits (foreign
+    * writers), falls back to the replayed or aggregated parts. */
   private def nextCommit(spark: SparkSession, url: String): Long = {
-    val dirs = segDirs(spark, partsPath(url))
-    if (dirs.isEmpty) return 0L
-    val hconf = spark.sparkContext.hadoopConfiguration
-    var max = -1L
-    var fallback = false
-    dirs.foreach { d =>
-      val dp = new org.apache.hadoop.fs.Path(d)
-      val fs = dp.getFileSystem(hconf)
-      fs.listStatus(dp).filter(isDataFile)
-        .foreach { st =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, hconf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            r.getFooter.getBlocks.forEach { b =>
-              b.getColumns.forEach { c =>
-                if (c.getPath.toDotString == "__commit") {
-                  val stats = c.getStatistics
-                  if (stats == null || !stats.hasNonNullValue) fallback = true
-                  else max = math.max(max,
-                    stats.genericGetMax.asInstanceOf[java.lang.Long])
-                }
-              }
-            }
-          } finally r.close()
-        }
-    }
-    // the compaction floor participates: an ALL-ROWS-DELETED compaction
-    // leaves a zero-row compact part whose footer carries no stats, and
-    // without the floor the next mutation would restart numbering at 0 —
-    // colliding with compacted-away history
-    val floor = readFloor(spark, url).getOrElse(-1L)
-    if (fallback) {
-      val top = parts(spark, url).replayed match {
+    val files = partFiles(spark, url)
+    if (files.isEmpty) return 0L
+    val (segCommits, fallback) =
+      harvestFooterCommits(spark.sparkContext.hadoopConfiguration, files)
+    val top =
+      if (!fallback) segCommits.map(_._2).maxOption.getOrElse(-1L)
+      else parts(spark, url).replayed match {
         case Some(r) =>
           val i = r.schema.fieldIndex("__commit")
           r.rows.map(_.getLong(i)).maxOption.getOrElse(-1L)
@@ -211,8 +185,11 @@ object Manifest {
           val r = rawParts(spark, url).agg(F.max("__commit")).collect().head
           if (r.isNullAt(0)) -1L else r.getLong(0)
       }
-      math.max(top, floor) + 1L
-    } else math.max(max, floor) + 1L
+    // the compaction floor participates: an ALL-ROWS-DELETED compaction
+    // leaves a zero-row compact part whose footer carries no stats, and
+    // without the floor the next mutation would restart numbering at 0 —
+    // colliding with compacted-away history
+    math.max(top, readFloor(spark, url).getOrElse(-1L)) + 1L
   }
 
   // ---- compaction floor --------------------------------------------------
@@ -365,17 +342,24 @@ object Manifest {
     * manifest exists. */
   private def parts(spark: SparkSession, url: String,
       driverMaxBytes: Long = DriverReplayMaxBytes): Parts = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val files = segDirs(spark, partsPath(url)).map { d =>
-      val dp = new org.apache.hadoop.fs.Path(d)
-      (dp.getName.stripPrefix("seg="),
-        dp.getFileSystem(hconf).listStatus(dp).filter(isDataFile))
-    }.sortBy(_._1)
+    val files = partFiles(spark, url)
     require(files.nonEmpty,
       s"no manifest at $url — write the layout with writeWithManifest")
     val bytes = files.iterator.flatMap(_._2).map(_.getLen).sum
     new Parts(spark, url, files,
       if (bytes > driverMaxBytes) None else replay(spark, files))
+  }
+
+  /** The part files per `seg=` directory of the manifest at `url`,
+    * sorted by segment; empty when there is no manifest. */
+  private def partFiles(spark: SparkSession,
+      url: String): Seq[(String, Array[FileStatus])] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    segDirs(spark, partsPath(url)).map { d =>
+      val dp = new org.apache.hadoop.fs.Path(d)
+      (dp.getName.stripPrefix("seg="),
+        dp.getFileSystem(hconf).listStatus(dp).filter(isDataFile))
+    }.sortBy(_._1)
   }
 
   private def replay(spark: SparkSession,

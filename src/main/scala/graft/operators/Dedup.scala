@@ -851,8 +851,7 @@ object Dedup {
       Similarity.swapLayout(spark, path, target, "rebuild")
   }
 
-  /** Schema of a written `features` segment, so [[writeSegment]] reads its
-    * own output back without a schema-inference job. */
+  /** Schema of a written `features` segment. */
   private val featureSchema = StructType(Seq(
     StructField("id", LongType), StructField("sh", ArrayType(LongType))))
 
@@ -860,6 +859,21 @@ object Dedup {
   private val postingsSchema = StructType(Seq(
     StructField("band", IntegerType), StructField("bucket", LongType),
     StructField("ids", ArrayType(LongType))))
+
+  /** THE reader of an index table: `root/<table>` (`features` or
+    * `postings`) under the schema [[writeSegment]] writes plus its `seg`
+    * partition column, or only `segment`'s directory of it. No read of an
+    * index table runs a schema-inference job, a segment label stays a
+    * string whatever it looks like, and a layout of other types fails at
+    * scan time. */
+  private def readIndexTable(spark: org.apache.spark.sql.SparkSession,
+      root: String, table: String,
+      segment: Option[String] = None): DataFrame = {
+    val r = spark.read.schema((if (table == "features") featureSchema
+      else postingsSchema).add("seg", StringType))
+    segment.fold(r.parquet(s"$root/$table"))(s =>
+      r.option("basePath", s"$root/$table").parquet(s"$root/$table/seg=$s"))
+  }
 
   /** Write one index segment: `feats` `(id, sh)` to
     * `root/features/seg=<segment>`, then that segment's postings, band-folded
@@ -891,7 +905,7 @@ object Dedup {
     val dir = new org.apache.hadoop.fs.Path(s"$root/features/seg=$segment")
     val written =
       if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
-        spark.read.schema(featureSchema).parquet(dir.toString)
+        readIndexTable(spark, root, "features", Some(segment)).drop("seg")
       else spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         featureSchema)
@@ -915,61 +929,28 @@ object Dedup {
   def dedupAgainstIndex(df: DataFrame, id: Column, text: Column,
       path: String, threshold: Double,
       probeBands: Option[Int] = None,
-      excludeSegment: Option[String] = None): DataFrame =
-    dedupAgainstIndexManaged(df, id, text, path, threshold, probeBands,
-      excludeSegment)._1
-
-  /** [[dedupAgainstIndex]] plus a release thunk dropping the internal
-    * one-scan batch cache INCLUDING its CacheManager entry (Dataset-level
-    * unpersist). One-shot callers can ignore it (Verify/Bench clear the
-    * cache per query anyway); a LONG-RUNNING caller — the ingest stream —
-    * must call it after consuming the result, because an RDD-level sweep
-    * frees the blocks but leaves the CacheManager entry pinning the
-    * batch's analyzed plan and file listing forever. */
-  def dedupAgainstIndexManaged(df: DataFrame, id: Column, text: Column,
-      path: String, threshold: Double,
-      probeBands: Option[Int] = None,
-      excludeSegment: Option[String] = None): (DataFrame, () => Unit) = {
-    val (deduped, _, release) = dedupAgainstIndexWithSigs(df, id, text,
-      path, threshold, probeBands, excludeSegment)
-    (deduped, release)
-  }
-
-  /** [[dedupAgainstIndexManaged]] that ALSO exposes the probe's cached
-    * per-doc signature frame (`bid`, `bsh` shingle hashes, `__bb` band
-    * hashes) so the ingest loop's append step can reuse it
-    * ([[appendSurvivorsFromSigs]]) instead of re-shingling and re-hashing
-    * the batch text a second time (r17 optimization — the append phase
-    * carried a full repeat of the batch's text processing per trigger).
-    * The sigs frame is backed by the SAME cache the release thunk frees:
-    * consume it before calling release. */
-  private[graft] def dedupAgainstIndexWithSigs(df: DataFrame, id: Column,
-      text: Column, path: String, threshold: Double,
-      probeBands: Option[Int] = None,
-      excludeSegment: Option[String] = None)
-      : (DataFrame, DataFrame, () => Unit) = {
+      excludeSegment: Option[String] = None): DataFrame = {
     val spark = df.sparkSession
     val IndexMeta(shingleSize, numHashes, bands, maxBucket) =
       readIndexMeta(spark, path)
     val probe = probeBands.getOrElse(bands)
     require(probe >= 1 && probe <= bands,
       s"probeBands $probe out of [1, $bands]")
-    // one batch scan: shingle hashes (verification) and band buckets
-    // (candidates) computed together and persisted — the two consumers
-    // are separate subtrees. Band hashes derive FROM the shingle hashes
-    // (r17: one text normalization/tokenization pass instead of two;
-    // minhashBandHashesFromHashes ≡ minhashBandHashes-over-text is the
+    // shingle hashes (verification) and band buckets (candidates) from
+    // one projection; band hashes derive FROM the shingle hashes
+    // (minhashBandHashesFromHashes ≡ minhashBandHashes-over-text is the
     // identity the compactor's row-identity spec pins). The chained
     // select keeps the hash reuse visible to Catalyst (CollapseProject
     // does not merge projects that would duplicate a non-cheap
-    // expression).
+    // expression). No cache: the two consumers are separate subtrees,
+    // so each shingles the batch once — a batch-sized text pass traded
+    // for the cache's materialization jobs and its release.
     val batch = df
       .select(asLongId(id).as("bid"),
         shingleHashes(text, shingleSize).as("bsh"))
       .select(F.col("bid"), F.col("bsh"),
         graft.functions.TextExprs.minhashBandHashesFromHashes(
           F.col("bsh"), numHashes, bands).as("__bb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // batch side aggregated under the SAME saturating cap as the index
     // side, and the pair drops any bucket whose corpus+batch UNION
     // exceeds maxBucket — the exact semantics of the live path's capped
@@ -987,22 +968,19 @@ object Dedup {
     // written segment from the failed attempt — probing it would make
     // batch docs candidates against themselves (self-Jaccard 1 ⇒ every
     // doc dies). The in-flight segment is excluded from both tables; both
-    // filters are partition pruning. Both tables are read under the
-    // schemas [[writeSegment]] writes, so neither read runs a
-    // schema-inference job; a layout of other types fails at scan time.
-    def read(table: String, schema: StructType): DataFrame = {
-      val t = spark.read.schema(schema.add("seg", StringType))
-        .parquet(s"$path/$table")
+    // filters are partition pruning.
+    def read(table: String): DataFrame = {
+      val t = readIndexTable(spark, path, table)
       excludeSegment.fold(t)(s => t.filter(F.col("seg") =!= s))
     }
-    val postings = read("postings", postingsSchema)
+    val postings = read("postings")
       .filter(F.col("band") < probe) // static partition pruning
     val cands = batchBuckets.join(postings, Seq("band", "bucket"))
       .filter(F.size(F.col("bids")) + F.size(F.col("ids")) <= maxBucket)
       .select(F.explode(F.col("bids")).as("bid"), F.col("ids"))
       .select(F.col("bid"), F.explode(F.col("ids")).as("iid"))
       .distinct()
-    val feats = read("features", featureSchema).drop("seg")
+    val feats = read("features").drop("seg")
     val losers = cands
       .join(feats.withColumnsRenamed(Map("id" -> "iid", "sh" -> "ish")), "iid")
       .join(batch.select("bid", "bsh"), "bid")
@@ -1011,8 +989,7 @@ object Dedup {
           F.size(F.array_union(F.col("ish"), F.col("bsh"))))
       .filter(F.col("jaccard") >= threshold)
       .select(F.col("bid").as("__loser")).distinct()
-    (df.join(losers, asLongId(id) === F.col("__loser"), "left_anti"),
-      batch, () => { batch.unpersist(false); () })
+    df.join(losers, asLongId(id) === F.col("__loser"), "left_anti")
   }
 
   /** Append segments must be filesystem-safe labels other than `base`. */
@@ -1020,39 +997,6 @@ object Dedup {
     require(segment.nonEmpty && segment != "base" &&
       segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
       s"segment '$segment' must be a filesystem-safe label != 'base'")
-
-  /** Append an ingest batch's SURVIVORS to the index from the probe's own
-    * cached signature frame ([[dedupAgainstIndexWithSigs]]) — row-identical
-    * to `appendToMinhashIndex(survivors, id, text, …)` by construction
-    * (`bsh` is the very expression the text append computes, built from
-    * the same meta parameters), minus the second shingling pass over the
-    * batch text. Private plumbing for the streaming ingest loop: `sigs`
-    * must come from the same batch `survivors` was filtered from, and the
-    * sigs cache must still be alive.
-    *
-    * `probeExcludedSegment` is the exclusion the PROBE that produced
-    * `sigs`/`survivors` ran with, REQUIRED to equal `segment` (r17 ADVICE):
-    * `survivors` reads the index through the probe's anti-join, so any
-    * re-execution of it against the listing this append refreshes (the
-    * caller's own re-read, a refreshed cache) must still exclude the
-    * segment being written — a probe without the exclusion would
-    * self-match at Jaccard 1 against it. Enforced, not conventional. */
-  private[graft] def appendSurvivorsFromSigs(sigs: DataFrame,
-      survivors: DataFrame, id: Column, path: String,
-      segment: String, probeExcludedSegment: Option[String]): Unit = {
-    requireAppendSegment(segment)
-    require(probeExcludedSegment.contains(segment),
-      s"appendSurvivorsFromSigs: the probe that produced the survivors " +
-        s"must have excluded the segment being written (excluded " +
-        s"$probeExcludedSegment, writing '$segment') — without the " +
-        "exclusion a plan re-execution against the refreshed listing " +
-        "self-matches at Jaccard 1 and corrupts the index")
-    writeSegment(
-      sigs.join(survivors.select(asLongId(id).as("bid")), Seq("bid"),
-          "left_semi")
-        .select(F.col("bid").as("id"), F.col("bsh").as("sh")),
-      path, segment, readIndexMeta(sigs.sparkSession, path))
-  }
 
   /** Append newly-accepted docs to a persisted [[writeMinhashIndex]] index —
     * the GROW step of incremental ingest: probe a batch
@@ -1127,7 +1071,7 @@ object Dedup {
     * with the stream stopped): compaction folds every segment into
     * `base`, including a not-yet-committed in-flight one — after which a
     * replayed batch's own-segment exclusion
-    * ([[dedupAgainstIndexManaged]]) no longer matches it, and the replay
+    * ([[dedupAgainstIndex]]) no longer matches it, and the replay
     * self-kills its survivors, exactly the hazard the exclusion exists
     * to prevent. The EXCEPTION that makes in-line stream compaction
     * safe (`excludeSegment`, r15 verdict #3): the ingest stream's own
@@ -1171,10 +1115,10 @@ object Dedup {
     // getPersistentRDDs diff, which would free concurrent session
     // users' blocks too)
     val kept = excludeSegment.map(ex => graft.Scratch.snapshotManaged(
-      spark.read.parquet(s"$path/postings").filter(F.col("seg") === ex)))
+      readIndexTable(spark, path, "postings").filter(F.col("seg") === ex)))
     val keptPostings = kept.map(_._1)
     swap("features", out => {
-      val f = spark.read.parquet(s"$path/features")
+      val f = readIndexTable(spark, path, "features")
       (excludeSegment match {
         case None => f.drop("seg").withColumn("seg", F.lit("base"))
         case Some(ex) => f.withColumn("seg",
@@ -1183,7 +1127,7 @@ object Dedup {
       }).write.mode("overwrite").partitionBy("seg").parquet(out)
     })
     swap("postings", out => {
-      var feats = spark.read.parquet(s"$path/features")
+      var feats = readIndexTable(spark, path, "features")
       excludeSegment.foreach(ex =>
         feats = feats.filter(F.col("seg") =!= ex))
       val rebuilt = bandFold(feats, numHashes, bands, maxBucket, minSize = 1)
@@ -1279,15 +1223,14 @@ object Dedup {
           new org.apache.hadoop.fs.Path(stage, "features")
         val stagedPostings =
           new org.apache.hadoop.fs.Path(stage, "postings")
-        spark.read.parquet(s"$path/features")
+        val folded = readIndexTable(spark, path, "features")
           .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
-          .write.mode("overwrite").parquet(stagedFeatures.toString)
-        // postings REBUILT from the staged features (one clean read of
-        // exactly the fold set), through the same stored-hash band fold
-        // as the full compaction — cap on the MERGED bucket, the
+        folded.write.mode("overwrite").parquet(stagedFeatures.toString)
+        // postings REBUILT from the fold set's features (the sources stay
+        // in place until the commit), through the same stored-hash band
+        // fold as the full compaction — cap on the MERGED bucket, the
         // single-segment-append contract
-        bandFold(spark.read.parquet(stagedFeatures.toString), numHashes,
-            bands, maxBucket, minSize = 1)
+        bandFold(folded, numHashes, bands, maxBucket, minSize = 1)
           .write.mode("overwrite").partitionBy("band")
           .parquet(stagedPostings.toString)
         TierCompact.commitFold(fs, root, fold,

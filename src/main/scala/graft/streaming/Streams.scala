@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface. The reference has NO event-time/stateful
@@ -110,10 +110,15 @@ object Streams {
     * each micro-batch is probed against the index
     * ([[graft.operators.Dedup.dedupAgainstIndex]] — candidates from the
     * band-partitioned postings, verification by exact stored-feature
-    * Jaccard), its survivors are appended to `outPath` AND to the index
-    * ([[graft.operators.Dedup.appendToMinhashIndex]]), so a later batch
-    * dedups against every earlier batch's accepted docs without any
-    * corpus re-scan. `foreachBatch` is the sanctioned Structured
+    * Jaccard), so a later batch dedups against every earlier batch's
+    * accepted docs without any corpus re-scan. A trigger is two plain
+    * steps with no cache: write the probe's survivors to
+    * `outPath/batch=<seg>` (the probe runs inside that write), then
+    * append the index segment from the WRITTEN files, read back under the
+    * batch's schema ([[graft.operators.Dedup.appendToMinhashIndex]]).
+    * The append therefore never re-runs the probe against the listing it
+    * refreshes; the price is a second shingling pass over the survivors.
+    * `foreachBatch` is the sanctioned Structured
     * Streaming shape for per-batch logic that needs full batch joins +
     * aggregations (the probe is a join-agg pipeline no continuous-mode
     * operator set expresses).
@@ -185,32 +190,18 @@ object Streams {
     val prefix = segmentPrefix(ckpt)
     val step: (DataFrame, Long) => Unit = (batchDf, batchId) => {
       val seg = s"${prefix}_b$batchId"
-      // every cache a batch pins is released through the DATASET API once
-      // its two writes are done — Dataset.unpersist drops the
-      // CacheManager entry too, where an RDD-level sweep frees blocks but
-      // leaves an entry (analyzed plan + file listing) accreting per
-      // batch on a 24/7 stream
-      val (deduped, sigs, release) = graft.operators.Dedup
-        .dedupAgainstIndexWithSigs(batchDf, id, text, indexPath, threshold,
-          excludeSegment = Some(seg))
-      val survivors = deduped.persist()
-      try {
-        phase(spark, "survivor write") {
-          survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
-        }
-        // append from the probe's own cached signatures — row-identical
-        // to the from-text append, minus a second shingling pass over the
-        // batch (r17 optimization; that repeat measured at roughly half
-        // the append phase per trigger). The probe's
-        // own-segment exclusion is passed through and ENFORCED (r18): the
-        // append's correctness under plan re-execution depends on it.
-        phase(spark, "index append") {
-          graft.operators.Dedup.appendSurvivorsFromSigs(sigs, survivors,
-            id, indexPath, seg, probeExcludedSegment = Some(seg))
-        }
-      } finally {
-        survivors.unpersist(false)
-        release()
+      val out = s"$outPath/batch=$seg"
+      // the probe runs inside the survivor write; the index grows from the
+      // written files, so nothing re-runs the probe and nothing is cached
+      phase(spark, "survivor write") {
+        graft.operators.Dedup.dedupAgainstIndex(batchDf, id, text, indexPath,
+          threshold, excludeSegment = Some(seg))
+          .write.mode("overwrite").parquet(out)
+      }
+      phase(spark, "index append") {
+        graft.operators.Dedup.appendToMinhashIndex(
+          spark.read.schema(batchDf.schema).parquet(out), id, text,
+          indexPath, seg)
       }
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
         phase(spark, "fold") {
@@ -222,12 +213,8 @@ object Streams {
               excludeSegment = Some(seg))
         }
     }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(step)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(stream.writeStream.foreachBatch(step), ckpt,
+      temp = checkpoint.isEmpty)
     prefix
   }
 
@@ -238,10 +225,14 @@ object Streams {
     * (`nprobe = nlist` ⇒ the decision is EXACT max-cosine, not
     * approximate — the oracle-replayable posture; pass a smaller
     * `nprobe` for the recall-trading production variant), vectors whose
-    * best match scores ≥ `threshold` die, survivors land in `outPath`
-    * AND the index ([[graft.operators.Similarity.appendToIvfIndex]]) so
-    * later batches dedup against every earlier batch's accepted vectors
-    * with no corpus re-scan.
+    * best match scores ≥ `threshold` die, and later batches dedup
+    * against every earlier batch's accepted vectors with no corpus
+    * re-scan. As in [[ingestDedupStream]], the survivors are written to
+    * `outPath/batch=<seg>` first (the probe runs inside that write), and
+    * the index append ([[graft.operators.Similarity.appendToIvfIndex]])
+    * reads the written files back, so the probe runs once per trigger
+    * without a survivor cache. The batch itself stays cached: it feeds
+    * the probe and the row count that picks the probe's shape.
     *
     * Exactly-once: same contract as [[ingestDedupStream]] — SHA-256
     * checkpoint-derived segment prefix, per-batch dynamic-overwrite
@@ -314,8 +305,7 @@ object Streams {
       // when the batch's writes are done ([[graft.Scratch]]).
       // localCheckpoint blocks live OUTSIDE the CacheManager, so the
       // scope is the only release path; without it a 24/7 stream on the
-      // distributed posture accretes candidate-scale blocks per trigger
-      // (the same leak class the dedup stream's managed release closes).
+      // distributed posture accretes candidate-scale blocks per trigger.
       // Handle-exact release replaced the r16 getPersistentRDDs diff,
       // which could free CONCURRENT session users' blocks — fatal for a
       // victim's localCheckpoint, whose lineage cannot recompute.
@@ -384,39 +374,28 @@ object Streams {
         // which the trigger usually keeps broadcast-small (auto-broadcast
         // fires), but a backlog-replay batch can be arbitrarily large —
         // let the size estimate decide instead of pinning the driver
-        // PERSIST the survivor set (r17 optimization): it has two
-        // consumers — the outPath write and the index append — and
-        // without the cache the SECOND consumer re-executes the entire
-        // probe pipeline (index scan, cosine ranking, rescore refine)
-        // inside the append write. Measured per batch: the append phase
-        // carried 1.4-2.5 s of repeated probe work at sf0.1 — at
-        // production batch sizes the probe is the
-        // dominant per-trigger cost and would simply double. The dedup
-        // twin below has always persisted its survivors; this aligns
-        // the embed stream.
         val survivors = batch.join(dead,
           F.col("__vid") === F.col("__dead"), "left_anti")
           .select(F.col("__vid").as("vec_id"), F.col("__v").as("embedding"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          phase(spark, "survivor write") {
-            survivors.write.mode("overwrite").parquet(s"$outPath/batch=$seg")
+        val out = s"$outPath/batch=$seg"
+        phase(spark, "survivor write") {
+          survivors.write.mode("overwrite").parquet(out)
+        }
+        // the append reads the written survivors back, so the probe
+        // (index scan, cosine ranking, rescore refine) runs once, inside
+        // the survivor write
+        phase(spark, "index append") {
+          val written = spark.read.schema(survivors.schema).parquet(out)
+          pcaModel match {
+            case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
+              graft.operators.Embeddings.pcaProject(written,
+                F.col("embedding"), m, "__wv", whiten = true),
+              F.col("vec_id"), F.col("__wv"), indexPath, seg,
+              expectWhitened = true,
+              expectedModelFp = Some(m.fingerprint))
+            case None => graft.operators.Similarity.appendToIvfIndex(
+              written, F.col("vec_id"), F.col("embedding"), indexPath, seg)
           }
-          phase(spark, "index append") {
-            pcaModel match {
-              case Some(m) => graft.operators.Similarity.appendToIvfIndexImpl(
-                graft.operators.Embeddings.pcaProject(survivors,
-                  F.col("embedding"), m, "__wv", whiten = true),
-                F.col("vec_id"), F.col("__wv"), indexPath, seg,
-                expectWhitened = true,
-                expectedModelFp = Some(m.fingerprint))
-              case None => graft.operators.Similarity.appendToIvfIndex(
-                survivors, F.col("vec_id"), F.col("embedding"), indexPath, seg)
-            }
-          }
-        } finally {
-          survivors.unpersist(false)
-          ()
         }
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           phase(spark, "fold") {
@@ -432,12 +411,8 @@ object Streams {
         ()
       }
     }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(step)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(stream.writeStream.foreachBatch(step), ckpt,
+      temp = checkpoint.isEmpty)
     prefix
   }
 
@@ -479,17 +454,13 @@ object Streams {
           "new batches would be silently skipped")
     }
     val ckpt = checkpoint.getOrElse(checkpointDir(name).toString)
-    val q = stream
+    drain(stream
       .withColumn("__pdate", graft.io.GraftIO.utcDay(tsNsCol))
       .writeStream
       .format("parquet")
       .option("path", path)
-      .option("checkpointLocation", ckpt)
       .partitionBy("__pdate")
-      .outputMode(OutputMode.Append())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .outputMode(OutputMode.Append()), ckpt, temp = checkpoint.isEmpty)
   }
 
   /** Stream micro-batches into an incrementally-maintained day ROLLUP
@@ -517,12 +488,8 @@ object Streams {
     val step: (DataFrame, Long) => Unit = (batchDf, batchId) =>
       graft.operators.Rollup.appendRollup(batchDf, tsNsCol, keyCols,
         valueCol, path, s"${prefix}_b$batchId")
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(step)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(stream.writeStream.foreachBatch(step), ckpt,
+      temp = checkpoint.isEmpty)
     prefix
   }
 
@@ -596,12 +563,8 @@ object Streams {
           s"${prefix}_c$batchId", keepLast = keepHistory)
       ()
     }
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(step)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(stream.writeStream.foreachBatch(step), ckpt,
+      temp = checkpoint.isEmpty)
     prefix
   }
 
@@ -629,6 +592,25 @@ object Streams {
       .digest(ckpt.getBytes("UTF-8")).take(10)
       .map(b => f"${b & 0xff}%02x").mkString
 
+  /** Run `writer` over its bounded source on checkpoint `ckpt`: start,
+    * process everything available, stop — stopped even when the query
+    * fails. A `temp` checkpoint (one [[checkpointDir]] made because the
+    * caller passed none) is deleted after the stop: nothing can resume
+    * from it, and on tmpfs every leaked one holds RAM until reboot. Its
+    * random name is never reused while it exists, and a reuse after the
+    * delete is a 64-bit random draw, so the segment prefix it seeds
+    * stays unique in practice. */
+  private def drain(writer: DataStreamWriter[_], ckpt: String,
+      temp: Boolean): Unit = {
+    val q = writer.option("checkpointLocation", ckpt).start()
+    try q.processAllAvailable()
+    finally {
+      try q.stop()
+      finally if (temp)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
+  }
+
   private def checkpointDir(name: String): java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
@@ -647,12 +629,8 @@ object Streams {
     // files (measured: a 2-batch stream-stream join spent 17s cumulative in
     // state commits on /tmp, ~0 on /dev/shm). A production sink would point
     // this at durable storage; the memory sink is already non-durable.
-    val ckpt = checkpointDir(name)
-    val q = stream.writeStream.outputMode(mode)
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
+    drain(stream.writeStream.outputMode(mode).format("memory")
+      .queryName(name), checkpointDir(name).toString, temp = true)
     spark.table(name)
   }
 }

@@ -928,6 +928,43 @@ class IOStreamsSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
+  test("a stream run without a checkpoint deletes the temp checkpoint it " +
+      "made (runToMemory, ingestDedupStream)") {
+    import graft.operators.Dedup
+    // the temp checkpoint roots Streams uses: tmpfs when writable, else the
+    // JVM temp dir
+    def checkpoints(name: String): Set[String] =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+        .flatMap(r => Option(new java.io.File(r).listFiles()).toSeq.flatten)
+        .map(_.getPath).filter(p =>
+          new java.io.File(p).getName.startsWith(s"graft_ck_$name")).toSet
+    val dir = tmp("graft_ckclean")
+    val events = Seq(("u1", 1.0), ("u2", 2.0)).toDF("user", "value")
+    events.write.parquet(dir + "/ev")
+    val before = checkpoints("t_ckclean")
+    val res = Streams.runToMemory(
+      Streams.readParquetStream(spark, dir + "/ev", events.schema),
+      "t_ckclean_mem")
+    assert(res.count() == 2)
+    val text = "the quick brown fox jumps over the lazy dog again and again " +
+      "while the sun sets slowly behind the distant purple mountains"
+    Dedup.writeMinhashIndex(Seq((100L, text)).toDF("doc_id", "text"),
+      F.col("doc_id"), F.col("text"), dir + "/idx", shingleSize = 3,
+      numHashes = 64, bands = 16)
+    val feed = new java.io.File(dir + "/feed"); feed.mkdirs()
+    shipFeed(Seq((1L, "short interlude about cooking pasta properly al " +
+      "dente tonight with garlic and fresh basil")).toDF("doc_id", "text"),
+      feed, 0, dir + "/tmp0")
+    Streams.ingestDedupStream(
+      Streams.readParquetStream(spark, feed.toString,
+        new StructType().add("doc_id", LongType).add("text", StringType)),
+      F.col("doc_id"), F.col("text"), dir + "/idx", dir + "/out",
+      threshold = 0.5, name = "t_ckclean_ingest")
+    assert(col1[Long](spark.read.parquet(dir + "/out"), "doc_id") == Seq(1L))
+    val leaked = checkpoints("t_ckclean") -- before
+    assert(leaked.isEmpty, s"temp checkpoints left behind: $leaked")
+  }
+
   test("runningTotals custom state accumulates per key") {
     val dir = tmp("graft_state")
     val events = Seq(("u1", 1.0), ("u1", 2.0), ("u2", 10.0))

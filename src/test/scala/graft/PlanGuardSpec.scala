@@ -480,4 +480,127 @@ class PlanGuardSpec extends SparkSpec {
     assert(col1[Long](spark.read.parquet(s"$d/out").orderBy("vec_id"),
       "vec_id") === Seq(1L, 3L, 5L))
   }
+
+  /** Description and start-time plan of every SQL execution `body` starts
+    * (the plan AQE begins from, which already holds every scan and cache
+    * read). Listener events arrive asynchronously, in order: a trailing
+    * sentinel execution marks the end. */
+  private def describedExecutions(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlanInfo)] = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerSQLExecutionStart]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => seen.add(s)
+        case _ => ()
+      }
+    }
+    def sentinelSeen = seen.asScala.exists(_.description == "__plan_sentinel")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("__plan_sentinel")
+      try spark.range(1).collect()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(sentinelSeen, "listener events never arrived")
+    seen.asScala.filter(_.description != "__plan_sentinel")
+      .map(s => (s.description, s.sparkPlanInfo)).toSeq
+  }
+
+  private def infoNodes(p: org.apache.spark.sql.execution.SparkPlanInfo)
+      : Seq[org.apache.spark.sql.execution.SparkPlanInfo] =
+    p +: p.children.flatMap(infoNodes)
+
+  /** Runs a three-trigger ingest stream and checks each trigger's "index
+    * append" executions: together they scan the survivors the trigger
+    * wrote to `out/batch=<seg>`, and none reads a cache or the
+    * foreachBatch batch itself (an existing-RDD scan) — the probe is never
+    * re-run by the append. Returns every execution the run started. */
+  private def assertAppendsFromWrittenSurvivors(out: String)(run: => String)
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlanInfo)] = {
+    var prefix = ""
+    val execs = describedExecutions { prefix = run }
+    val outPath = new org.apache.hadoop.fs.Path(out).toUri.getPath
+    for (k <- 0 until 3) {
+      val appends = execs.filter(_._1.endsWith(s"batch = $k: index append"))
+        .map(e => infoNodes(e._2))
+      assert(appends.nonEmpty, s"trigger $k ran no index append execution")
+      val written = s"$outPath/batch=${prefix}_b$k"
+      assert(appends.flatten.exists(n =>
+          n.metadata.get("Location").exists(_.contains(written))),
+        s"trigger $k's index append never scans $written:\n" +
+          appends.flatten.map(_.simpleString).mkString("\n"))
+      for (n <- appends.flatten)
+        assert(!n.nodeName.contains("InMemoryTableScan") &&
+          !n.nodeName.contains("ExistingRDD"),
+          s"trigger $k's index append re-reads the batch or a cache: " +
+            n.simpleString)
+    }
+    execs
+  }
+
+  test("ingest triggers are cache-free: the dedup trigger reads no cache, " +
+      "and both streams append the index from the written survivors") {
+    import graft.operators.{Dedup, Similarity}
+    import org.apache.spark.sql.{functions => F}
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_cachefree").toString
+    val text = "the quick brown fox jumps over the lazy dog while the sun " +
+      "sets slowly behind the distant purple mountains"
+    Dedup.writeMinhashIndex(Seq((100L, text)).toDF("doc_id", "text"),
+      F.col("doc_id"), F.col("text"), s"$d/idx", shingleSize = 3,
+      numHashes = 64, bands = 16)
+    val fresh = Seq(
+      "completely unrelated text about database query optimization and " +
+        "distributed systems running on large compute clusters",
+      "short interlude about cooking pasta properly al dente tonight with " +
+        "garlic and fresh basil from the garden",
+      "a travel note on trains crossing alpine passes in winter with snow " +
+        "piled high beside the narrow tracks")
+    val docs = (0 until 3).map(k =>
+      Seq((2L * k, text.replace("slowly", s"slowly $k")),
+        (2L * k + 1, fresh(k))).toDF("doc_id", "text"))
+    def axis(i: Int): Seq[Double] =
+      Seq.tabulate(8)(j => if (j == i) 1.0 else 0.01 * (j + 1))
+    Similarity.writeIvfIndex(Seq((100L, axis(0))).toDF("vec_id", "embedding"),
+      F.col("vec_id"), F.col("embedding"), s"$d/eidx", nlist = 2,
+      trainSample = 10)
+    val vecs = (0 until 3).map(k =>
+      Seq((2L * k, axis(0).map(_ * 2.0)), (2L * k + 1, axis(k + 1)))
+        .toDF("vec_id", "embedding"))
+    val feed = new java.io.File(s"$d/feed"); feed.mkdirs()
+    val efeed = new java.io.File(s"$d/efeed"); efeed.mkdirs()
+    for (k <- 0 until 3) {
+      shipFeed(docs(k), feed, k, s"$d/tmp$k")
+      shipFeed(vecs(k), efeed, k, s"$d/etmp$k")
+    }
+    val dedupExecs = assertAppendsFromWrittenSurvivors(s"$d/out") {
+      graft.streaming.Streams.ingestDedupStream(
+        graft.streaming.Streams.readParquetStream(spark, feed.toString,
+          docs.head.schema),
+        F.col("doc_id"), F.col("text"), s"$d/idx", s"$d/out",
+        threshold = 0.5, name = "cache_free_dedup")
+    }
+    val cached = dedupExecs.filter(e =>
+      infoNodes(e._2).exists(_.nodeName.contains("InMemoryTableScan")))
+    assert(cached.isEmpty, "dedup trigger executions read a cache:\n" +
+      cached.map(_._1).mkString("\n"))
+    assert(col1[Long](spark.read.parquet(s"$d/out").orderBy("doc_id"),
+      "doc_id") === Seq(1L, 3L, 5L))
+    assertAppendsFromWrittenSurvivors(s"$d/eout") {
+      graft.streaming.Streams.ingestEmbedStream(
+        graft.streaming.Streams.readParquetStream(spark, efeed.toString,
+          vecs.head.schema),
+        F.col("vec_id"), F.col("embedding"), s"$d/eidx", s"$d/eout",
+        threshold = 0.999, name = "cache_free_embed")
+    }
+    assert(col1[Long](spark.read.parquet(s"$d/eout").orderBy("vec_id"),
+      "vec_id") === Seq(1L, 3L, 5L))
+  }
 }
