@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
   * handles that created them.
   *
   * Why it exists (r16 ADVICE, medium): the long-running callers — the
-  * 24/7 ingest streams' per-batch cleanup, the in-line index compaction —
-  * previously released batch-scoped blocks by diffing
+  * 24/7 ingest streams' per-batch cleanup, the lake's `deleteKeys` key
+  * frame — previously released batch-scoped blocks by diffing
   * `sparkContext.getPersistentRDDs` before/after the batch. That registry
   * is SESSION-global: any concurrent work sharing the SparkSession (a
   * second ingest stream on another index, a caller caching on another
@@ -21,7 +21,9 @@ import org.apache.spark.sql.DataFrame
   * a foreign thread's state is untouchable by construction.
   *
   * Usage: deep call sites ([[operators.Similarity]]'s distributed-probe
-  * and rescore snapshots) take snapshots through [[snapshot]]; the
+  * and rescore snapshots) take snapshots through [[snapshot]], and a
+  * method that releases its own snapshot ([[io.Manifest]]'s
+  * `deleteKeys`) through [[snapshotManaged]]; the
   * owning driver loop (a stream's `foreachBatch` body) wraps the batch
   * in [[scoped]]. With no scope open, [[snapshot]] degrades to a plain
   * `localCheckpoint` whose blocks fall to the caller's own lifecycle

@@ -832,7 +832,7 @@ object Dedup {
     // partitions — a retried ingest batch rewrites its segment instead of
     // double-appending (the exactly-once half the streaming path needs)
     writeSegment(hashedShingles(corpus, id, text, shingleSize), target,
-      "base", IndexMeta(shingleSize, numHashes, bands, maxBucket))
+      TierCompact.Base, IndexMeta(shingleSize, numHashes, bands, maxBucket))
     // one-row meta, driver-side (zero jobs — r17 optimization)
     graft.io.GraftIO.writeSmallParquet(spark,
       org.apache.spark.sql.types.StructType(Seq(
@@ -896,7 +896,7 @@ object Dedup {
     val spark = feats.sparkSession
     def write(df: DataFrame, table: String, partitions: String*): Unit = {
       val w = df.withColumn("seg", F.lit(segment)).write.mode("overwrite")
-      (if (segment == "base") w
+      (if (segment == TierCompact.Base) w
        else w.option("partitionOverwriteMode", "dynamic"))
         .partitionBy(partitions: _*).parquet(s"$root/$table")
     }
@@ -936,28 +936,19 @@ object Dedup {
     val probe = probeBands.getOrElse(bands)
     require(probe >= 1 && probe <= bands,
       s"probeBands $probe out of [1, $bands]")
-    // shingle hashes (verification) and band buckets (candidates) from
-    // one projection; band hashes derive FROM the shingle hashes
+    // band buckets derive FROM the shingle hashes
     // (minhashBandHashesFromHashes ≡ minhashBandHashes-over-text is the
-    // identity the compactor's row-identity spec pins). The chained
-    // select keeps the hash reuse visible to Catalyst (CollapseProject
-    // does not merge projects that would duplicate a non-cheap
-    // expression). No cache: the two consumers are separate subtrees,
-    // so each shingles the batch once — a batch-sized text pass traded
-    // for the cache's materialization jobs and its release.
-    val batch = df
-      .select(asLongId(id).as("bid"),
-        shingleHashes(text, shingleSize).as("bsh"))
-      .select(F.col("bid"), F.col("bsh"),
-        graft.functions.TextExprs.minhashBandHashesFromHashes(
-          F.col("bsh"), numHashes, bands).as("__bb"))
+    // identity the compactor's row-identity spec pins)
+    val batchBands = df.select(asLongId(id).as("bid"),
+      graft.functions.TextExprs.minhashBandHashesFromHashes(
+        shingleHashes(text, shingleSize), numHashes, bands).as("__bb"))
     // batch side aggregated under the SAME saturating cap as the index
     // side, and the pair drops any bucket whose corpus+batch UNION
     // exceeds maxBucket — the exact semantics of the live path's capped
     // union bucket. Without this, a boilerplate text shared by the whole
     // batch joins a stored ≤ maxBucket posting row into |batch|·maxBucket
     // candidate rows — the quadratic blowup the cap exists to refuse.
-    val batchBuckets = batch.select(F.col("bid"),
+    val batchBuckets = batchBands.select(F.col("bid"),
       F.posexplode(F.col("__bb")).as(Seq("band", "bucket")))
       .filter(F.col("band") < probe)
       .groupBy("band", "bucket")
@@ -981,9 +972,19 @@ object Dedup {
       .select(F.col("bid"), F.explode(F.col("ids")).as("iid"))
       .distinct()
     val feats = read("features").drop("seg")
+    // only candidate docs are shingled for verification: each candidate
+    // pair meets the index features, then the batch doc's TEXT, and is
+    // shingled after that join, once per pair (about 1.3 pairs per
+    // candidate doc on perfbench's feed). Grouping the pairs per doc to
+    // shingle once instead shuffles every candidate's index hashes
+    // through a collect_list. The small candidate side must meet the
+    // index features before the texts: joined after them, the planner
+    // broadcasts the features.
     val losers = cands
       .join(feats.withColumnsRenamed(Map("id" -> "iid", "sh" -> "ish")), "iid")
-      .join(batch.select("bid", "bsh"), "bid")
+      .join(df.select(asLongId(id).as("bid"), text.as("__text")), "bid")
+      .select(F.col("bid"), F.col("ish"),
+        shingleHashes(F.col("__text"), shingleSize).as("bsh"))
       .withColumn("jaccard",
         F.size(F.array_intersect(F.col("ish"), F.col("bsh"))).cast(DoubleType) /
           F.size(F.array_union(F.col("ish"), F.col("bsh"))))
@@ -991,12 +992,6 @@ object Dedup {
       .select(F.col("bid").as("__loser")).distinct()
     df.join(losers, asLongId(id) === F.col("__loser"), "left_anti")
   }
-
-  /** Append segments must be filesystem-safe labels other than `base`. */
-  private def requireAppendSegment(segment: String): Unit =
-    require(segment.nonEmpty && segment != "base" &&
-      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"segment '$segment' must be a filesystem-safe label != 'base'")
 
   /** Append newly-accepted docs to a persisted [[writeMinhashIndex]] index —
     * the GROW step of incremental ingest: probe a batch
@@ -1030,7 +1025,7 @@ object Dedup {
     * evaluated once, by the features write ([[writeSegment]]). */
   def appendToMinhashIndex(batch: DataFrame, id: Column, text: Column,
       path: String, segment: String): Unit = {
-    requireAppendSegment(segment)
+    TierCompact.requireAppendSegment(segment)
     val meta = readIndexMeta(batch.sparkSession, path)
     writeSegment(hashedShingles(batch, id, text, meta.shingleSize), path,
       segment, meta)
@@ -1041,8 +1036,8 @@ object Dedup {
     * maintenance step or at a cadence amortized against the base size;
     * for a 24/7 ingest stream's per-trigger cadence use
     * [[tierCompactMinhashIndex]] (r16 verdict #1), whose size-tiered
-    * folds cost O(new data) per trigger and delegate HERE only when the
-    * accumulated tiers justify a base rewrite. This is the LSM
+    * folds cost O(new data) per trigger and run this same full fold only
+    * when the accumulated tiers justify a base rewrite. This is the LSM
     * compaction step closing the loop on
     * [[appendToMinhashIndex]]'s documented degradation: with many
     * segments the `maxBucket` union-cap is enforced per segment pair, so
@@ -1061,11 +1056,13 @@ object Dedup {
     * resurrect it partially — under-counting the cap in exactly the
     * boilerplate case compaction exists to restore.
     *
-    * Swap is rename-aside (`table` → `table_old`, tmp → `table`, drop
-    * `table_old`) so a crash at any step leaves a recoverable copy; a
-    * production deployment on object storage would write a NEW index
-    * generation and swap a version pointer instead (rename-as-copy + no
-    * atomicity on s3) — same read path, different commit.
+    * The full fold is the top tier fold ([[TierCompact.baseFold]]): its
+    * sources are `base` plus every segment but `excludeSegment`, and it
+    * commits through the intent-marker protocol ([[TierCompact]]) —
+    * staged as a tier, renamed in, sources deleted, promoted to
+    * `seg=base` — so a crash at any step leaves duplicate rows or the
+    * complete new base, never missing rows, and the next compaction
+    * heals it at entry (reported in [[TierCompact.Report.healed]]).
     *
     * Run ONLY while no ingest stream is mid-batch (between triggers, or
     * with the stream stopped): compaction folds every segment into
@@ -1075,70 +1072,45 @@ object Dedup {
     * self-kills its survivors, exactly the hazard the exclusion exists
     * to prevent. The EXCEPTION that makes in-line stream compaction
     * safe (`excludeSegment`, r15 verdict #3): the ingest stream's own
-    * `foreachBatch` IS the single writer between triggers, and passing
-    * its in-flight segment keeps that segment intact through the
-    * rewrite — its features keep their `seg=` label and its postings
-    * rows pass through byte-identical (they are already exactly what
-    * the segment appender wrote; only the OTHER segments' features are
-    * folded and re-banded into the base postings). A batch replayed
-    * after a crash anywhere around the compaction still finds its
-    * earlier attempt as a standalone segment its probe exclusion
-    * matches; the skipped segment folds on the NEXT compaction, so
-    * steady state is base + at most one live segment. */
+    * `foreachBatch` IS the single writer between triggers, and the
+    * in-flight segment it passes is not a fold source — its files are
+    * not read, rewritten or moved. A batch replayed after a crash
+    * anywhere around the compaction still finds its earlier attempt as
+    * a standalone segment its probe exclusion matches; the skipped
+    * segment folds on the NEXT compaction, so steady state is base + at
+    * most one live segment. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, excludeSegment: Option[String] = None): Unit = {
-    val IndexMeta(_, numHashes, bands, maxBucket) =
-      readIndexMeta(spark, path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swap(table: String, write: String => Unit): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$table")
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/__${table}_compact")
-      val old = new org.apache.hadoop.fs.Path(s"$path/__${table}_old")
-      val fs = dir.getFileSystem(hconf)
-      write(tmp.toString) // materializes BEFORE the source moves aside
-      fs.delete(old, true)
-      require(fs.rename(dir, old), s"compact: move-aside failed for $table")
-      require(fs.rename(tmp, dir), s"compact: swap-in failed for $table")
-      fs.delete(old, true)
+      path: String, excludeSegment: Option[String] = None)
+      : TierCompact.Report = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    TierCompact.compactBase(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      indexTables, excludeSegment)(stageFold(spark, path))
+  }
+
+  private val indexTables = Seq("features", "postings")
+
+  /** THE fold body of the MinHash index, for tier and full folds alike:
+    * stage the sources' features unchanged and their postings REBUILT
+    * through the same stored-hash band fold as the writer — the cap on
+    * the MERGED bucket, the single-segment-append contract (a full fold
+    * thereby restores the fresh-build cap semantics). The sources stay
+    * in place until [[TierCompact]] commits the fold. */
+  private def stageFold(spark: org.apache.spark.sql.SparkSession,
+      path: String): TierCompact.Stage = {
+    lazy val meta = readIndexMeta(spark, path)
+    (fold, stage) => {
+      val features = new org.apache.hadoop.fs.Path(stage, "features")
+      val postings = new org.apache.hadoop.fs.Path(stage, "postings")
+      val folded = readIndexTable(spark, path, "features")
+        .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
+      folded.write.mode("overwrite").parquet(features.toString)
+      bandFold(folded, meta.numHashes, meta.bands, meta.maxBucket,
+        minSize = 1)
+        .write.mode("overwrite").partitionBy("band")
+        .parquet(postings.toString)
+      Seq("features" -> features, "postings" -> postings)
     }
-    // the excluded segment's postings must pass through from the OLD
-    // postings table, and the snapshot is materialized EAGERLY, HERE,
-    // before the swap below renames and deletes the source directory —
-    // that eagerness is LOAD-BEARING: Dataset.localCheckpoint executes
-    // the read at the call, so the pass-through rows exist as blocks
-    // when the old table retires. A lazy variant
-    // (localCheckpoint(eager = false)) would read files the swap
-    // already deleted. Released at the end of this method through the
-    // exact RDD handle (localCheckpoint lives outside the CacheManager —
-    // an in-line stream compaction would otherwise accrete one
-    // batch-sized block per trigger; handle-exact beats a
-    // getPersistentRDDs diff, which would free concurrent session
-    // users' blocks too)
-    val kept = excludeSegment.map(ex => graft.Scratch.snapshotManaged(
-      readIndexTable(spark, path, "postings").filter(F.col("seg") === ex)))
-    val keptPostings = kept.map(_._1)
-    swap("features", out => {
-      val f = readIndexTable(spark, path, "features")
-      (excludeSegment match {
-        case None => f.drop("seg").withColumn("seg", F.lit("base"))
-        case Some(ex) => f.withColumn("seg",
-          F.when(F.col("seg") === ex, F.col("seg"))
-            .otherwise(F.lit("base")))
-      }).write.mode("overwrite").partitionBy("seg").parquet(out)
-    })
-    swap("postings", out => {
-      var feats = readIndexTable(spark, path, "features")
-      excludeSegment.foreach(ex =>
-        feats = feats.filter(F.col("seg") =!= ex))
-      val rebuilt = bandFold(feats, numHashes, bands, maxBucket, minSize = 1)
-        .withColumn("seg", F.lit("base"))
-      keptPostings.fold(rebuilt)(kp => rebuilt.unionByName(
-          kp.select("band", "bucket", "ids", "seg")))
-        .write.mode("overwrite").partitionBy("seg", "band").parquet(out)
-    })
-    // release the pass-through snapshot's blocks (consumed by the
-    // postings write above) — by exact handle, never a session sweep
-    kept.foreach(_._2())
   }
 
   /** Size-tiered compaction of a segmented [[writeMinhashIndex]] index —
@@ -1147,9 +1119,9 @@ object Dedup {
     * ([[TierCompact]]): segments whose byte-size class holds ≥ `fanout`
     * members fold into ONE tier segment (cascading until no class is
     * full), and `base` is rewritten ONLY when the accumulated non-base
-    * bytes reach `baseFoldRatio` of it (then this delegates to
-    * [[compactMinhashIndex]], whose full fold restores the exact
-    * fresh-build cap semantics). Driven per trigger by a stream, the
+    * bytes reach `baseFoldRatio` of it (then the full fold of
+    * [[compactMinhashIndex]] runs, restoring the exact fresh-build cap
+    * semantics). Driven per trigger by a stream, the
     * amortized cost is O(batch · log(corpus/batch)) — flat in the base
     * size (scaling/tiered_compact.json) —
     * where the full fold per trigger was O(index).
@@ -1168,7 +1140,7 @@ object Dedup {
     * 64 — stays bounded at fanout · O(log) levels.
     *
     * Crash safety: every fold commits through [[TierCompact]]'s intent
-    * marker protocol; entry-time [[TierCompact.recover]] rolls a crashed
+    * marker protocol; its entry-time recovery rolls a crashed
     * fold forward (tier fully renamed in → finish source deletes) or
     * back (partial tier → drop it; sources untouched). Same single-writer
     * contract as [[compactMinhashIndex]]: run between triggers or
@@ -1191,56 +1163,11 @@ object Dedup {
       path: String, excludeSegment: Option[String] = None,
       fanout: Int = 4, baseFoldRatio: Double = 0.25)
       : TierCompact.Report = {
-    require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    require(baseFoldRatio > 0.0,
-      s"baseFoldRatio must be > 0, got $baseFoldRatio")
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val healed = TierCompact.recover(fs, root, Seq("features", "postings"))
-    val IndexMeta(_, numHashes, bands, maxBucket) =
-      readIndexMeta(spark, path)
-    val exclude = Set("base") ++ excludeSegment
-    def sizes() = TierCompact.segmentBytes(fs,
-      new org.apache.hadoop.fs.Path(root, "features"), exclude)
-    val baseBytes = {
-      val p = new org.apache.hadoop.fs.Path(root, "features/seg=base")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }
-    val current = sizes()
-    if (current.nonEmpty &&
-        current.values.sum >= baseFoldRatio * baseBytes) {
-      compactMinhashIndex(spark, path, excludeSegment)
-      return TierCompact.Report(Seq.empty, baseFolded = true, healed)
-    }
-    val done = scala.collection.mutable.ArrayBuffer.empty[TierCompact.Fold]
-    var round = TierCompact.plan(sizes(), fanout)
-    while (round.nonEmpty) {
-      round.foreach { fold =>
-        val stage = new org.apache.hadoop.fs.Path(root,
-          s"__tierstage_${fold.tier}")
-        fs.delete(stage, true)
-        val stagedFeatures =
-          new org.apache.hadoop.fs.Path(stage, "features")
-        val stagedPostings =
-          new org.apache.hadoop.fs.Path(stage, "postings")
-        val folded = readIndexTable(spark, path, "features")
-          .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
-        folded.write.mode("overwrite").parquet(stagedFeatures.toString)
-        // postings REBUILT from the fold set's features (the sources stay
-        // in place until the commit), through the same stored-hash band
-        // fold as the full compaction — cap on the MERGED bucket, the
-        // single-segment-append contract
-        bandFold(folded, numHashes, bands, maxBucket, minSize = 1)
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(stagedPostings.toString)
-        TierCompact.commitFold(fs, root, fold,
-          Seq("features" -> stagedFeatures, "postings" -> stagedPostings))
-        fs.delete(stage, true)
-        done += fold
-      }
-      round = TierCompact.plan(sizes(), fanout)
-    }
-    TierCompact.Report(done.toSeq, baseFolded = false, healed)
+    TierCompact.compact(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      indexTables, excludeSegment, fanout, baseFoldRatio)(
+      stageFold(spark, path))
   }
 
   /** Membership gate against a reference key set WITHOUT a join: build a

@@ -861,7 +861,8 @@ object Similarity {
       seed: Long, whitened: Boolean, modelFp: Long,
       sq8: Boolean): Unit = {
     import org.apache.spark.sql.types._
-    assignedPayload(idx.assigned, sq8).withColumn("seg", F.lit("base"))
+    assignedPayload(idx.assigned, sq8)
+      .withColumn("seg", F.lit(TierCompact.Base))
       .write.mode("overwrite").partitionBy("seg", "cell")
       .parquet(s"$path/assigned")
     // centroids + meta are DRIVER-RESIDENT (O(nlist) and one row) —
@@ -915,9 +916,7 @@ object Similarity {
       vec: Column, path: String, segment: String,
       expectWhitened: Boolean,
       expectedModelFp: Option[Long] = None): Unit = {
-    require(segment.nonEmpty && segment != "base" &&
-      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
-      s"segment '$segment' must be a filesystem-safe label != 'base'")
+    TierCompact.requireAppendSegment(segment)
     val spark = batch.sparkSession
     val meta = readIvfMeta(spark, path)
     requireSpace(meta.whitened, expectWhitened, path, "appendToIvfIndex")
@@ -1182,38 +1181,6 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String): Int =
     readIvfMeta(spark, path).centroids.length
 
-  /** Rename-aside SINGLE-table swap (crash leaves a recoverable
-    * `__<t>_old` copy, the [[graft.operators.Dedup.compactMinhashIndex]]
-    * posture): each listed table under `staged` replaces its sibling
-    * under `path`. ONLY for swaps where every UNLISTED table is
-    * content-compatible with both the old and new listed tables —
-    * compaction ([[compactIvfIndex]]: assignments and centroids are
-    * untouched, only the file layout of `assigned` collapses). Rebuilds
-    * and retrains, whose tables change TOGETHER, go through
-    * [[swapLayout]] instead: swapping them table-by-table has a crash
-    * window per table boundary in which readers see tables from two
-    * builds (r13 ADVICE — new MinHash postings under old meta band-hash
-    * probes into a disjoint bucket space and near-dups silently pass;
-    * new IVF assigned against old centroids mis-probes the same way). */
-  private[graft] def swapStaged(spark: org.apache.spark.sql.SparkSession,
-      path: String, staged: String, tables: Seq[String],
-      what: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    tables.foreach { table =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$table")
-      val tmp = new org.apache.hadoop.fs.Path(s"$staged/$table")
-      val old = new org.apache.hadoop.fs.Path(s"$path/__${table}_old")
-      val fs = dir.getFileSystem(hconf)
-      fs.delete(old, true)
-      require(!fs.exists(dir) || fs.rename(dir, old),
-        s"$what: move-aside failed for $table")
-      require(fs.rename(tmp, dir), s"$what: swap-in failed for $table")
-      fs.delete(old, true)
-    }
-    val fs = new org.apache.hadoop.fs.Path(staged).getFileSystem(hconf)
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-  }
-
   /** Strip trailing slashes so sibling names (`<path>__rebuild`,
     * `<path>__old`) attach to the directory name, not an empty
     * trailing segment. */
@@ -1302,8 +1269,8 @@ object Similarity {
   /** Fold every append segment into `base` WITHOUT retraining — a FULL
     * rewrite of the assigned table, O(index) per call (for a 24/7
     * stream's per-trigger cadence use [[tierCompactIvfIndex]], r16
-    * verdict #1 — O(new data) folds that delegate here only at the
-    * base-ratio trigger); the maintenance step between
+    * verdict #1 — O(new data) folds that run this same full fold only
+    * at the base-ratio trigger); the maintenance step between
     * [[retrainIvfIndex]] runs. Assignments and
     * centroids are untouched (probe results are segment-layout-independent
     * by construction, so search equality is structural, and the spec pins
@@ -1319,8 +1286,11 @@ object Similarity {
     * scale it even costs a little: tiny per-cell files drop read
     * parallelism; at production cell sizes parquet row-group splitting
     * restores it). The rewrite hash-partitions on `cell`, so each cell
-    * lands in ONE task and emits ONE file; swap is rename-aside like
-    * retrain.
+    * lands in ONE task and emits ONE file. The full fold is the top
+    * tier fold ([[TierCompact.baseFold]]: `base` plus every segment but
+    * `excludeSegment`), committed through the intent-marker protocol and
+    * promoted to `seg=base`; a crash leaves duplicate rows or the
+    * complete new base, healed at the next compaction's entry.
     *
     * Like [[graft.operators.Dedup.compactMinhashIndex]], run ONLY while
     * no ingest stream is mid-batch: folding a not-yet-committed
@@ -1329,9 +1299,9 @@ object Similarity {
     * the replay would self-match at cosine 1.0 and erase its survivors.
     * The EXCEPTION that makes in-line stream compaction safe
     * (`excludeSegment`, r15 verdict #3): the ingest stream's own
-    * `foreachBatch` IS the single writer between triggers, and passing
-    * its in-flight segment keeps that segment's rows under their own
-    * `seg=` label through the rewrite — a batch replayed after a crash
+    * `foreachBatch` IS the single writer between triggers, and the
+    * in-flight segment it passes is not a fold source — its files are
+    * not read, rewritten or moved — so a batch replayed after a crash
     * anywhere around the compaction still finds its earlier attempt as
     * a standalone segment its probe exclusion matches. The skipped
     * segment folds on the NEXT compaction (by then its batch is
@@ -1354,33 +1324,46 @@ object Similarity {
     * assigned table, paid only inside compaction. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, excludeSegment: Option[String] = None,
-      maxCellRowsPerFile: Long = 0L): Unit = {
+      maxCellRowsPerFile: Long = 0L): TierCompact.Report = {
+    val root = new org.apache.hadoop.fs.Path(normPath(path))
+    TierCompact.compactBase(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      Seq("assigned"), excludeSegment)(
+      stageFold(spark, path, maxCellRowsPerFile))
+  }
+
+  /** THE fold body of the IVF index, for tier and full folds alike:
+    * stage the sources' `assigned` rows — payload-agnostic (float `cv`
+    * or SQ8 `scale`+`q` pass through untouched), `cell` partitioning
+    * kept so probe-time cell pruning works on the result exactly as on
+    * base — with the cell-balanced write ([[cellBalancedFold]]) under
+    * `maxCellRowsPerFile` (0 = auto: ~512 MB of candidate payload per
+    * file from the layout's own stored width). Without any repartition
+    * the staged write would emit one file per (scan task × cell),
+    * re-accreting the file count the fold exists to collapse. */
+  private def stageFold(spark: org.apache.spark.sql.SparkSession,
+      path: String, maxCellRowsPerFile: Long): TierCompact.Stage = {
     require(maxCellRowsPerFile >= 0L,
       s"maxCellRowsPerFile must be >= 0, got $maxCellRowsPerFile")
-    val staged = s"$path/__compact"
-    // payload-agnostic rewrite (float cv or SQ8 scale+q pass through
-    // untouched): only the segment layout collapses
-    val folded = excludeSegment match {
-      case None => spark.read.parquet(s"$path/assigned")
-        .drop("seg").withColumn("seg", F.lit("base"))
-      case Some(ex) => spark.read.parquet(s"$path/assigned")
-        .withColumn("seg",
-          F.when(F.col("seg") === ex, F.col("seg")).otherwise(F.lit("base")))
-    }
-    val cap =
+    lazy val cap =
       if (maxCellRowsPerFile > 0L) maxCellRowsPerFile
       else math.max(1L,
         (512L << 20) / candidateWidthBytes(readIvfMeta(spark, path)))
-    val (writable, fileCap) = cellBalancedFold(folded, cap)
-    var writer = writable.write.mode("overwrite")
-    if (fileCap > 0L)
-      writer = writer.option("maxRecordsPerFile", fileCap)
-    writer.partitionBy("seg", "cell").parquet(s"$staged/assigned")
-    swapStaged(spark, path, staged, Seq("assigned"), "compact")
+    (fold, stage) => {
+      val staged = new org.apache.hadoop.fs.Path(stage, "assigned")
+      val folded = spark.read.parquet(s"$path/assigned")
+        .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
+      val (writable, fileCap) = cellBalancedFold(folded, cap)
+      var writer = writable.write.mode("overwrite")
+      if (fileCap > 0L)
+        writer = writer.option("maxRecordsPerFile", fileCap)
+      writer.partitionBy("cell").parquet(staged.toString)
+      Seq("assigned" -> staged)
+    }
   }
 
-  /** The cell-balanced shape of an assigned-table fold write, shared by
-    * [[compactIvfIndex]] and [[tierCompactIvfIndex]]: repartition on
+  /** The cell-balanced shape of an assigned-table fold write
+    * ([[stageFold]], for tier and full folds alike): repartition on
     * `cell` so each cell lands in one task and emits one file (the
     * file-count economics the fold exists for) — UNLESS some cell
     * exceeds `cap` rows, in which case that cell re-splits into
@@ -1421,11 +1404,11 @@ object Similarity {
     * shared machinery in [[TierCompact]]): segments whose byte-size
     * class holds ≥ `fanout` members fold into one tier segment
     * (cascading until no class is full); `base` rewrites only when the
-    * accumulated non-base bytes reach `baseFoldRatio` of it — that full
-    * fold delegates to [[compactIvfIndex]] and inherits its hot-cell
-    * file cap. Per-trigger cost driven by a stream is amortized
-    * O(batch · log(corpus/batch)), flat in the base size
-    * (scaling/tiered_compact.json), where the full fold was O(index).
+    * accumulated non-base bytes reach `baseFoldRatio` of it — then the
+    * full fold of [[compactIvfIndex]] runs. Per-trigger cost driven by a
+    * stream is amortized O(batch · log(corpus/batch)), flat in the base
+    * size (scaling/tiered_compact.json), where the full fold was
+    * O(index).
     *
     * Correctness is STRUCTURAL here, stronger than the MinHash side:
     * assignment is per-vector state and nothing aggregates per segment,
@@ -1433,9 +1416,9 @@ object Similarity {
     * results IDENTICAL (the spec pins it). The fold is payload-agnostic
     * (float `cv` or SQ8 `scale`+`q` pass through untouched) and keeps
     * the `cell` partitioning, so probe-time static cell pruning works
-    * on tier segments exactly as on base. Tier writes are cell-balanced
-    * under the SAME `maxCellRowsPerFile` cap as the base fold (default
-    * auto ~512 MB payload from the layout's stored width) — a tier can
+    * on tier segments exactly as on base. Tier and base folds share one
+    * fold body, cell-balanced under `maxCellRowsPerFile` (default auto
+    * ~512 MB payload from the layout's stored width) — a tier can
     * reach `baseFoldRatio` of the index, big enough for an uncapped
     * hot cell to recreate the scaling/ivf_hotcell.json straggler
     * mid-tier. Crash safety: the
@@ -1454,67 +1437,11 @@ object Similarity {
       path: String, excludeSegment: Option[String] = None,
       fanout: Int = 4, baseFoldRatio: Double = 0.25,
       maxCellRowsPerFile: Long = 0L): TierCompact.Report = {
-    require(fanout >= 2, s"fanout must be >= 2, got $fanout")
-    require(baseFoldRatio > 0.0,
-      s"baseFoldRatio must be > 0, got $baseFoldRatio")
-    require(maxCellRowsPerFile >= 0L,
-      s"maxCellRowsPerFile must be >= 0, got $maxCellRowsPerFile")
     val root = new org.apache.hadoop.fs.Path(normPath(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val healed = TierCompact.recover(fs, root, Seq("assigned"))
-    val exclude = Set("base") ++ excludeSegment
-    def sizes() = TierCompact.segmentBytes(fs,
-      new org.apache.hadoop.fs.Path(root, "assigned"), exclude)
-    val baseBytes = {
-      val p = new org.apache.hadoop.fs.Path(root, "assigned/seg=base")
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }
-    val current = sizes()
-    if (current.nonEmpty &&
-        current.values.sum >= baseFoldRatio * baseBytes) {
-      compactIvfIndex(spark, path, excludeSegment, maxCellRowsPerFile)
-      return TierCompact.Report(Seq.empty, baseFolded = true, healed)
-    }
-    // same auto-derivation as the base fold: ~512 MB of candidate
-    // payload per file from the layout's own stored width
-    val cap =
-      if (maxCellRowsPerFile > 0L) maxCellRowsPerFile
-      else math.max(1L,
-        (512L << 20) / candidateWidthBytes(readIvfMeta(spark, path)))
-    val done = scala.collection.mutable.ArrayBuffer.empty[TierCompact.Fold]
-    var round = TierCompact.plan(sizes(), fanout)
-    while (round.nonEmpty) {
-      round.foreach { fold =>
-        val stage = new org.apache.hadoop.fs.Path(root,
-          s"__tierstage_${fold.tier}")
-        fs.delete(stage, true)
-        val stagedAssigned =
-          new org.apache.hadoop.fs.Path(stage, "assigned")
-        // payload-agnostic: every non-seg column passes through; the
-        // cell partitioning survives the fold so probe pruning is
-        // unchanged on the tier. The write is cell-balanced with the
-        // SAME hot-cell cap as the base fold (scaling/ivf_hotcell.json):
-        // a tier can reach baseFoldRatio of the index, so an uncapped
-        // one-file-per-cell tier write would recreate exactly the
-        // probe/rewrite straggler the cap fixed — and without any
-        // repartition the staged write would instead emit one file per
-        // (scan task × cell), re-accreting the file count the fold
-        // exists to collapse.
-        val folded = spark.read.parquet(s"$path/assigned")
-          .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
-        val (writable, fileCap) = cellBalancedFold(folded, cap)
-        var writer = writable.write.mode("overwrite")
-        if (fileCap > 0L)
-          writer = writer.option("maxRecordsPerFile", fileCap)
-        writer.partitionBy("cell").parquet(stagedAssigned.toString)
-        TierCompact.commitFold(fs, root, fold,
-          Seq("assigned" -> stagedAssigned))
-        fs.delete(stage, true)
-        done += fold
-      }
-      round = TierCompact.plan(sizes(), fanout)
-    }
-    TierCompact.Report(done.toSeq, baseFolded = false, healed)
+    TierCompact.compact(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      Seq("assigned"), excludeSegment, fanout, baseFoldRatio)(
+      stageFold(spark, path, maxCellRowsPerFile))
   }
 
   private final case class Probes(frame: DataFrame, cells: Seq[Int])

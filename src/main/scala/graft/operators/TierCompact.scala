@@ -2,62 +2,85 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Size-tiered fold planning + crash-safe fold commit for the segmented
-  * on-disk indexes (the MinHash index's `features`/`postings`, the IVF
-  * index's `assigned`) — the LSM posture that makes in-line stream
-  * compaction affordable at corpus scale (r16 verdict #1).
+/** Size-tiered fold planning + the ONE crash-safe commit protocol for
+  * the segmented on-disk indexes (the MinHash index's `features`/
+  * `postings`, the IVF index's `assigned`) — the LSM posture that makes
+  * in-line stream compaction affordable at corpus scale (r16 verdict #1).
   *
-  * Why: `compactMinhashIndex`/`compactIvfIndex` are FULL rewrites — they
-  * read the whole table and rewrite `base`. Driven per-trigger by a 24/7
-  * ingest stream (`compactEvery`), that is O(index) work per cadence —
-  * cumulative O(T²/n) writes over the stream's lifetime, unusable once
-  * the base outgrows the batches. The size-tiered shape caps that:
-  * segments group into geometric size CLASSES (class =
-  * ⌊log_fanout(bytes/64 KiB)⌋), and whenever a class holds ≥ `fanout`
-  * members they fold into ONE tier segment (which lands in a higher
-  * class). Each row is folded at most once per level and there are
-  * O(log_fanout(corpus/batch)) levels, so total fold writes are
-  * O(N·log N) and the per-trigger cost is amortized O(batch) — FLAT in
-  * the base size, which is untouched until the accumulated tiers reach
-  * `baseFoldRatio` of it (then one full fold pays O(index) at a cadence
-  * that is itself geometric). Same economics as the lake's manifest LSM
-  * ([[graft.io.Manifest]] `compactEvery` + retention) and every
-  * size-tiered LSM store.
+  * Why: a fold that rewrites `base` is O(index) work. Driven per trigger
+  * by a 24/7 ingest stream (`compactEvery`), that is cumulative O(T²/n)
+  * writes over the stream's lifetime, unusable once the base outgrows
+  * the batches. The size-tiered shape caps that: segments group into
+  * geometric size CLASSES (class = ⌊log_fanout(bytes/64 KiB)⌋), and
+  * whenever a class holds ≥ `fanout` members they fold into ONE tier
+  * segment (which lands in a higher class). Each row is folded at most
+  * once per level and there are O(log_fanout(corpus/batch)) levels, so
+  * total fold writes are O(N·log N) and the per-trigger cost is
+  * amortized O(batch) — FLAT in the base size, which is untouched until
+  * the accumulated tiers reach `baseFoldRatio` of it. The FULL fold
+  * (`compactMinhashIndex`/`compactIvfIndex`, and the base-ratio
+  * escalation) is the same fold one level up: its sources are `base`
+  * plus every non-excluded segment ([[baseFold]]), so an excluded
+  * in-flight segment is never read, rewritten or moved. Same economics
+  * as the lake's manifest LSM ([[graft.io.Manifest]] `compactEvery` +
+  * retention) and every size-tiered LSM store.
   *
-  * This object owns the INDEX-AGNOSTIC parts: byte-size listing, the
-  * fold plan, deterministic tier naming, and the intent-marker commit
-  * protocol that makes a fold crash-recoverable:
+  * This object owns the INDEX-AGNOSTIC parts: the segment-label rule,
+  * byte-size listing, the fold plan, deterministic tier naming, and the
+  * intent-marker commit protocol that makes every fold crash-recoverable
+  * ([[commitFold]] around the index's own staging write, a [[Stage]]):
   *
-  *  1. stage the tier's table dirs COMPLETE (index-specific write),
+  *  1. stage each table's fold content COMPLETE at
+  *     `__tierstage_<tier>/<table>` (index-specific write),
   *  2. write an intent marker `__fold_<tier>` at the index root listing
   *     the source segments,
-  *  3. rename the staged dirs to `table/seg=<tier>`,
+  *  3. rename every staged dir to `<table>/seg=<tier>`,
   *  4. delete the source segments' dirs,
-  *  5. delete the marker.
+  *  5. (full fold only) PROMOTE: rename each `<table>/seg=<tier>` to
+  *     `<table>/seg=base` — the label readers and specs know,
+  *  6. delete the marker.
   *
-  * Recovery ([[recover]], run at every compaction entry): a marker whose
-  * tier dirs are ALL present rolls FORWARD (finish the source deletes);
-  * anything else rolls BACK (drop the partial tier; sources are intact
-  * because deletes only happen after every rename). Between steps 3 and
-  * 5 a crash can leave a probe window where fold sources coexist with
-  * their tier — DUPLICATE rows, not missing ones — which is
-  * decision-identical for the ingest kill rule (MinHash verification
-  * dedups losers; IVF k=1 top-cosine is unchanged by a duplicated
-  * candidate) and healed by the next compaction entry; general k>1
-  * search in that window can list one corpus row at two ranks, the same
-  * fail-soft-until-healed trade every rename-aside swap here makes.
-  * Tier names are a hash of the sorted source set, so a replayed fold
-  * restages the SAME tier and stays idempotent. */
+  * Recovery ([[recover]], run at every compaction entry): a tier fold
+  * whose tier dirs are ALL present rolls FORWARD (finish the source
+  * deletes); a full fold rolls forward when every table has LANDED — its
+  * tier dir exists, or its stage dir is gone (renamed in, then
+  * promoted) — finishing, per table that still holds its tier dir, the
+  * source deletes and the promote. Anything else rolls BACK (drop the
+  * partial tier; sources are intact because deletes only happen after
+  * every rename). Between steps 3 and 6 a crash can leave a probe window
+  * where fold sources coexist with their tier — DUPLICATE rows, never
+  * missing ones — and after step 4 the complete new base sits under its
+  * tier label; both are healed by the next compaction entry. Duplicates
+  * are decision-identical for the ingest kill rule wherever no
+  * `maxBucket` cap differs between the sources and the merged fold
+  * (MinHash verification dedups losers; IVF k=1 top-cosine is unchanged
+  * by a duplicated candidate); general k>1 search in that window can
+  * list one corpus row at two ranks. Tier names are a hash of the sorted
+  * source set, so a replayed fold restages the SAME tier and stays
+  * idempotent. */
 private[graft] object TierCompact {
 
   final case class Fold(sources: Seq[String], tier: String)
 
-  /** What a tiered compaction did: zero or more tier folds (cascaded
-    * until no size class was full), whether the base-ratio trigger
-    * escalated to a full base fold, and any crashed-fold tiers healed
-    * at entry. */
+  /** What a compaction did: zero or more tier folds (cascaded until no
+    * size class was full), whether a full base fold ran, and any
+    * crashed-fold tiers healed at entry. */
   final case class Report(folds: Seq[Fold], baseFolded: Boolean,
       healed: Seq[String])
+
+  /** An index's fold body: write each table's COMPLETE fold content
+    * under the given stage dir and return `table -> staged dir`. */
+  type Stage = (Fold, Path) => Seq[(String, Path)]
+
+  /** The label of the full-corpus segment: what a fresh build writes and
+    * every full fold promotes its result to. */
+  val Base = "base"
+
+  /** Append segments must be filesystem-safe labels other than [[Base]]. */
+  def requireAppendSegment(segment: String): Unit =
+    require(segment.nonEmpty && segment != Base &&
+      segment.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
+      s"segment '$segment' must be a filesystem-safe label != '$Base'")
 
   /** Smallest size class granule: segments under 64 KiB share class 0. */
   private val unitBytes = 64L << 10
@@ -68,6 +91,15 @@ private[graft] object TierCompact {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     "tf" + h.take(6).map(b => f"$b%02x").mkString
   }
+
+  /** The full fold of `base` plus `segments`: committed as a tier named
+    * after its sources, then promoted to [[Base]]. */
+  def baseFold(segments: Seq[String]): Fold = {
+    val sources = (Base +: segments).distinct.sorted
+    Fold(sources, tierName(sources))
+  }
+
+  private def isBaseFold(fold: Fold): Boolean = fold.sources.contains(Base)
 
   def sizeClass(bytes: Long, fanout: Int): Int = {
     val r = math.max(bytes, 1L).toDouble / unitBytes
@@ -90,19 +122,69 @@ private[graft] object TierCompact {
     * listing plus one content summary per segment — no data read. The
     * segment count is bounded by fanout × levels (the invariant this
     * whole mechanism maintains), so this stays a handful of RPCs. */
-  def segmentBytes(fs: FileSystem, tableDir: Path,
-      exclude: Set[String]): Map[String, Long] = {
-    if (!fs.exists(tableDir)) return Map.empty
-    fs.listStatus(tableDir).toSeq
+  private def segmentBytes(fs: FileSystem, tableDir: Path,
+      exclude: Set[String]): Map[String, Long] =
+    segmentDirs(fs, tableDir, exclude)
+      .map { case (n, p) => n -> fs.getContentSummary(p).getLength }.toMap
+
+  private def segmentDirs(fs: FileSystem, tableDir: Path,
+      exclude: Set[String]): Seq[(String, Path)] =
+    if (!fs.exists(tableDir)) Seq.empty
+    else fs.listStatus(tableDir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg="))
       .map(s => s.getPath.getName.stripPrefix("seg=") -> s.getPath)
       .filter { case (n, _) => !exclude.contains(n) }
-      .map { case (n, p) => n -> fs.getContentSummary(p).getLength }
-      .toMap
+
+  /** Bytes of `tableDir`'s [[Base]] segment (0 when it has none). */
+  private def baseBytes(fs: FileSystem, tableDir: Path): Long = {
+    val p = new Path(tableDir, s"seg=$Base")
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+  }
+
+  /** Size-tiered compaction of the index at `root` (its segments listed
+    * from `tables.head`): heal crashed folds, escalate to the full fold
+    * when the non-base bytes reach `baseFoldRatio` of base, else fold
+    * every full size class, cascading until the plan is empty. */
+  def compact(fs: FileSystem, root: Path, tables: Seq[String],
+      excludeSegment: Option[String], fanout: Int, baseFoldRatio: Double)(
+      stage: Stage): Report = {
+    require(fanout >= 2, s"fanout must be >= 2, got $fanout")
+    require(baseFoldRatio > 0.0,
+      s"baseFoldRatio must be > 0, got $baseFoldRatio")
+    val healed = recover(fs, root, tables)
+    val tableDir = new Path(root, tables.head)
+    def sizes() = segmentBytes(fs, tableDir, Set(Base) ++ excludeSegment)
+    val current = sizes()
+    if (current.nonEmpty &&
+        current.values.sum >= baseFoldRatio * baseBytes(fs, tableDir)) {
+      commitFold(fs, root, baseFold(current.keys.toSeq))(stage)
+      return Report(Seq.empty, baseFolded = true, healed)
+    }
+    val done = scala.collection.mutable.ArrayBuffer.empty[Fold]
+    var round = plan(current, fanout)
+    while (round.nonEmpty) {
+      round.foreach { f => commitFold(fs, root, f)(stage); done += f }
+      round = plan(sizes(), fanout)
+    }
+    Report(done.toSeq, baseFolded = false, healed)
+  }
+
+  /** The full fold of the index at `root`: heal crashed folds, then fold
+    * `base` and every segment except `excludeSegment` into a new base. */
+  def compactBase(fs: FileSystem, root: Path, tables: Seq[String],
+      excludeSegment: Option[String])(stage: Stage): Report = {
+    val healed = recover(fs, root, tables)
+    val segments = segmentDirs(fs, new Path(root, tables.head),
+      Set(Base) ++ excludeSegment).map(_._1)
+    commitFold(fs, root, baseFold(segments))(stage)
+    Report(Seq.empty, baseFolded = true, healed)
   }
 
   private def markerPath(root: Path, tier: String): Path =
     new Path(root, s"__fold_$tier")
+
+  private def stagePath(root: Path, tier: String): Path =
+    new Path(root, s"__tierstage_$tier")
 
   /** Step 2 of the protocol: persist the fold intent BEFORE any rename.
     * One small file, newline-separated source labels. */
@@ -113,18 +195,14 @@ private[graft] object TierCompact {
     finally out.close()
   }
 
-  def deleteMarker(fs: FileSystem, root: Path, tier: String): Unit = {
-    fs.delete(markerPath(root, tier), false)
-    ()
-  }
-
   /** Entry-time crash recovery over every `__fold_*` intent marker at
-    * `root`: roll FORWARD (delete the listed sources, then the marker)
-    * when the tier's dirs exist under every `table`, roll BACK (delete
-    * the partial tier dirs, then the marker) otherwise — sources are
-    * guaranteed intact in that case because the protocol deletes them
-    * only after every rename landed. Returns the healed tier names. */
-  def recover(fs: FileSystem, root: Path, tables: Seq[String])
+    * `root`: roll FORWARD ([[finish]]) when every `table` has landed —
+    * for a tier fold its tier dir exists; for a full fold its tier dir
+    * exists or its stage dir is gone (renamed in, maybe promoted) — and
+    * roll BACK (delete the partial tier dirs) otherwise. Sources are
+    * intact in the roll-back case because the protocol deletes them only
+    * after every rename landed. Returns the healed tier names. */
+  private def recover(fs: FileSystem, root: Path, tables: Seq[String])
       : Seq[String] = {
     if (!fs.exists(root)) return Seq.empty
     fs.listStatus(root).toSeq
@@ -137,46 +215,58 @@ private[graft] object TierCompact {
             .getLines().filter(_.nonEmpty).toList
           finally in.close()
         }
-        val tierDirs = tables.map(t => new Path(root, s"$t/seg=$tier"))
-        if (tierDirs.forall(fs.exists)) {
-          // fold was fully renamed in — finish the deletes
-          sources.foreach { s =>
-            tables.foreach(t =>
-              fs.delete(new Path(root, s"$t/seg=$s"), true))
-          }
-        } else {
-          // partial fold — drop it; sources are still whole
-          tierDirs.foreach(fs.delete(_, true))
-        }
+        val fold = Fold(sources, tier)
+        val stage = stagePath(root, tier)
+        def landed(t: String) = fs.exists(tierDir(root, t, tier)) ||
+          (isBaseFold(fold) && !fs.exists(new Path(stage, t)))
+        if (tables.forall(landed)) finish(fs, root, fold, tables)
+        else tables.foreach(t => fs.delete(tierDir(root, t, tier), true))
         // a crashed fold's stage dir would otherwise linger forever
         // (a different source set hashes to a different tier name, so
         // nothing re-stages over it)
-        fs.delete(new Path(root, s"__tierstage_$tier"), true)
+        fs.delete(stage, true)
         fs.delete(st.getPath, false)
         tier
       }
   }
 
-  /** Steps 3–5: commit a staged fold. `stagedTableDirs` maps table name
-    * → the staged dir holding that table's tier content (already
-    * COMPLETE). Any pre-existing tier dir (a crashed identical fold that
-    * recovery rolled back between our staging and here — impossible
-    * under the single-writer contract, but cheap to defend) is replaced. */
-  def commitFold(fs: FileSystem, root: Path, fold: Fold,
-      stagedTableDirs: Seq[(String, Path)]): Unit = {
+  private def tierDir(root: Path, table: String, tier: String): Path =
+    new Path(root, s"$table/seg=$tier")
+
+  /** Steps 4–5, per table that still holds its tier dir: delete the
+    * sources, then (full fold) promote the tier dir to [[Base]]. A table
+    * whose tier dir is gone was already promoted and is left alone. */
+  private def finish(fs: FileSystem, root: Path, fold: Fold,
+      tables: Seq[String]): Unit = {
+    val live = tables.map(tierDir(root, _, fold.tier)).filter(fs.exists)
+    live.foreach(d => fold.sources.foreach(s =>
+      fs.delete(new Path(d.getParent, s"seg=$s"), true)))
+    if (isBaseFold(fold)) live.foreach { d =>
+      val dest = new Path(d.getParent, s"seg=$Base")
+      require(fs.rename(d, dest), s"fold: promote $d -> $dest failed")
+    }
+  }
+
+  /** Run one fold through the whole protocol: `stage` writes it (step
+    * 1), steps 2–6 commit it. Any pre-existing tier dir (a crashed
+    * identical fold that recovery rolled back between our staging and
+    * here — impossible under the single-writer contract, but cheap to
+    * defend) is replaced. */
+  private def commitFold(fs: FileSystem, root: Path, fold: Fold)(
+      stage: Stage): Unit = {
+    val dir = stagePath(root, fold.tier)
+    fs.delete(dir, true)
+    val staged = stage(fold, dir)
     writeMarker(fs, root, fold)
-    stagedTableDirs.foreach { case (table, staged) =>
-      val dest = new Path(root, s"$table/seg=${fold.tier}")
+    staged.foreach { case (table, src) =>
+      val dest = tierDir(root, table, fold.tier)
       fs.delete(dest, true)
       fs.mkdirs(dest.getParent)
-      require(fs.rename(staged, dest),
-        s"tier fold: rename $staged -> $dest failed")
+      require(fs.rename(src, dest), s"fold: rename $src -> $dest failed")
     }
-    fold.sources.foreach { s =>
-      stagedTableDirs.foreach { case (table, _) =>
-        fs.delete(new Path(root, s"$table/seg=$s"), true)
-      }
-    }
-    deleteMarker(fs, root, fold.tier)
+    finish(fs, root, fold, staged.map(_._1))
+    fs.delete(markerPath(root, fold.tier), false)
+    fs.delete(dir, true)
+    ()
   }
 }
