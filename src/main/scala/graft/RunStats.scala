@@ -72,7 +72,8 @@ object RunStats {
           stageGroups.getOrDefault(i.stageId, i.name.takeWhile(_ != '\n')))
       }
     })
-    val fn = SparkEntry.queries(query)
+    // bench-only queries (e.g. d52_index_probe) resolve too, as in Bench
+    val fn = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)(query)
     for (r <- 1 to n) {
       starts.clear(); ends.clear(); stageGroups.clear(); execs.clear()
       stages.clear()

@@ -176,16 +176,70 @@ object Bridge {
       df.schema.add(out, LongType, nullable = false))
   }
 
-  /** The EXACT RDD a `Dataset.localCheckpoint()` materialized — the
-    * handle [[graft.Scratch]] releases blocks through. `unpersist` only
-    * frees anything when called on the very RDD that was persisted, and
-    * a checkpointed Dataset's `.rdd`/`.queryExecution.toRdd` are fresh
-    * DERIVED RDDs, so the releaser must reach the `LogicalRDD` the
-    * checkpoint wrapped (private[sql], hence here). None when `df` is
-    * not a checkpoint result — callers treat that as "nothing to
-    * release" rather than falling back to a session-global sweep, which
-    * would free OTHER threads' blocks (the concurrent-caller hazard this
-    * accessor exists to end). */
+  /** Does every evaluation of `df` yield the same rows? A frame that
+    * feeds two evaluations needs a snapshot only when this is false.
+    * True when the analyzed plan (subqueries included) is
+    * `deterministic`, holds no `Sample` and no `Limit`/`Offset`/`Tail`
+    * over an unsorted child, and every leaf is a file scan, a
+    * `LocalRelation` or `Range`, a `StreamingRelation` over a file
+    * format, a `LogicalRDD` whose RDD is checkpointed, or a `LogicalRDD`
+    * over a `SQLExecutionRDD` with only narrow dependencies down to
+    * `FileScanRDD`s (the frame `foreachBatch` hands a file-source
+    * trigger). Every other leaf fails (`createDataFrame(rdd)`, shuffled
+    * lineage, v2 sources): Spark calls them deterministic, but a
+    * re-evaluation can differ. A `LogicalRDD` hides the expressions of
+    * the plan it came from — a `foreachBatch` frame over `rand()` passes
+    * — so a stream asks this of its own plan, once per run. */
+  def reEvaluatesIdentically(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.{LogicalRDD, SQLExecutionRDD}
+    import org.apache.spark.sql.execution.datasources._
+    def sorted(p: LogicalPlan): Boolean = p match {
+      case s: Sort => s.global
+      case _: Project | _: Filter | _: LocalLimit | _: SubqueryAlias =>
+        sorted(p.children.head)
+      case _ => false
+    }
+    def narrowToFileScans(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+      rdd.isInstanceOf[FileScanRDD] || rdd.dependencies.nonEmpty &&
+        rdd.dependencies.forall {
+          case n: org.apache.spark.NarrowDependency[_] => narrowToFileScans(n.rdd)
+          case _ => false
+        }
+    val plan = df.queryExecution.analyzed
+    plan.deterministic && plan.collectWithSubqueries { case p => p }.forall {
+      case _: Sample => false
+      case p @ (_: GlobalLimit | _: LocalLimit | _: Offset | _: Tail) =>
+        sorted(p.children.head)
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _: LocalRelation | _: Range => true
+      case s: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
+        classOf[FileFormat].isAssignableFrom(s.dataSource.providingClass)
+      case r: LogicalRDD => r.rdd.isCheckpointed ||
+        r.rdd.isInstanceOf[SQLExecutionRDD] && narrowToFileScans(r.rdd)
+      case _: LeafNode => false
+      case _ => true
+    }
+  }
+
+  /** Eager executor-side snapshot (`Dataset.localCheckpoint`) plus an
+    * idempotent thunk that releases ONLY its blocks — never a
+    * session-global sweep, which would free a concurrent caller's blocks
+    * (fatal for a victim's localCheckpoint, whose truncated lineage
+    * cannot recompute). For a frame that fails [[reEvaluatesIdentically]]
+    * but feeds two evaluations inside one call. */
+  def snapshotManaged(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, () => Unit) = {
+    val ck = df.localCheckpoint()
+    val rdd = checkpointedRdd(ck)
+    (ck, () => { rdd.foreach(_.unpersist(false)); () })
+  }
+
+  /** The EXACT RDD a `Dataset.localCheckpoint()` materialized: `unpersist`
+    * frees blocks only on the very RDD that was persisted, and a
+    * checkpointed Dataset's `.rdd` is a fresh DERIVED RDD, so the
+    * releaser must reach the wrapped `LogicalRDD` (private[sql]). None
+    * when `df` is not a checkpoint result. */
   def checkpointedRdd(df: org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical match {

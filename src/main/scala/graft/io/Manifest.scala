@@ -1470,16 +1470,13 @@ object Manifest {
     * completed delete retried is a no-op — distinct delete operations
     * MUST use distinct segment ids, the same contract as every appender.
     *
-    * The key frame is deduplicated and snapshotted (localCheckpoint)
-    * before use: it feeds two separate evaluations (the envelope prune
-    * and the anti-join), which a nondeterministic key plan would
-    * otherwise be free to disagree between — callers whose key plan is
-    * deterministic AND deduplicated (a read of just-written parquet, the
-    * upsert path) pass `keysDeterministic = true` to skip that
-    * materialization job. Null keys fail loud — a null has no deletion
-    * semantics. `keyCol` must be a manifested stats column (without
-    * envelopes there is nothing to prune — declare it in `statsCols` at
-    * write time).
+    * The key frame feeds two evaluations (the envelope prune and the
+    * anti-join): one that re-evaluates identically
+    * (`Bridge.reEvaluatesIdentically`: a parquet read, a local relation)
+    * is used directly, any other is deduplicated and snapshotted first.
+    * Null keys fail loud — a null has no deletion semantics. `keyCol`
+    * must be a manifested stats column (without envelopes there is
+    * nothing to prune — declare it in `statsCols` at write time).
     *
     * Economics, measured (scaling/lake_upsert_{2m,8m}.json): a narrow
     * band on the clustered key rewrites 1-2 of 64 files and beats the
@@ -1492,7 +1489,6 @@ object Manifest {
   def deleteKeys(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame, segment: String,
       excludeSegments: Set[String] = Set.empty,
-      keysDeterministic: Boolean = false,
       retainFiles: Boolean = false,
       commitOverride: Option[Long] = None): Int = {
     requireSafeSegment(segment, "deleteKeys")
@@ -1516,17 +1512,13 @@ object Manifest {
             s"$keyType) — nulls have no deletion semantics; filter or " +
             "coalesce explicitly first")).isNull,
         casted).as("__k"))
-    // `keysDeterministic = true` is the caller's promise that the key
-    // plan re-evaluates identically (and deduplicated) — e.g. a read of
-    // just-written parquet, the upsert path — so the envelope prune and
-    // the anti-join may each evaluate it directly, skipping one
-    // distinct+materialization job per mutation
     // handle-exact release at method end (every consumer below executes
     // eagerly inside this call): a streaming upsert runs this per batch,
     // and without the release each trigger would accrete one key-set
     // block for the session's lifetime
-    val (k, releaseK) = if (keysDeterministic) (kBase, () => ())
-      else graft.Scratch.snapshotManaged(kBase.distinct())
+    val (k, releaseK) =
+      if (Bridge.reEvaluatesIdentically(keys)) (kBase, () => ())
+      else Bridge.snapshotManaged(kBase.distinct())
     try {
     // candidate files: envelope overlaps some key, and never this
     // operation's own rewrite segment (retry self-exclusion) or a
@@ -1723,7 +1715,6 @@ object Manifest {
     deleteKeys(spark, path, keyCol,
       spark.read.parquet(appended: _*).select(kc), s"rw_$segment",
       excludeSegments = Set(segment),
-      keysDeterministic = true, // durable parquet, validated unique
       retainFiles = retainFiles,
       commitOverride = Some(commit))
   }

@@ -990,7 +990,10 @@ object Dedup {
           F.size(F.array_union(F.col("ish"), F.col("bsh"))))
       .filter(F.col("jaccard") >= threshold)
       .select(F.col("bid").as("__loser")).distinct()
-    df.join(losers, asLongId(id) === F.col("__loser"), "left_anti")
+    // an outer join, not `left_anti`: the optimizer pushes an anti-join
+    // below a Union `df`, planning the losers once per union branch
+    df.join(losers, asLongId(id) === F.col("__loser"), "left_outer")
+      .filter(F.col("__loser").isNull).drop("__loser")
   }
 
   /** Append newly-accepted docs to a persisted [[writeMinhashIndex]] index —

@@ -296,19 +296,11 @@ object Similarity {
         .filter(F.col("cell").isin(probed.cells.map(Int.box): _*))
         .join(F.broadcast(probed.frame), Seq("cell"))
     } else {
-      // materialize the probed frame ONCE before anything reads it: the
-      // cell-id collect below and the candidate join are two separate
-      // evaluations, and a nondeterministic query plan (sample/rand-
-      // derived — the same hazard collectProbes pins for the localized
-      // path) could assign probes to different cells in each, leaving the
-      // IN-filter stale and silently dropping those cells' index rows.
-      // localCheckpoint is executor-distributed storage bounded by
-      // |queries|·nprobe rows — the price of a consistent snapshot on the
-      // arbitrarily-large-batch path this flag exists for. Scratch
-      // registers the exact RDD handle with the caller's scope (the
-      // ingest stream's per-batch scope), so release never touches a
-      // concurrent session user's blocks.
-      val probed = graft.Scratch.snapshot(
+      // the cell-id collect and the candidate join evaluate the probed
+      // frame twice; a sample/rand-derived one could probe different
+      // cells in each, leaving the IN-filter stale and silently dropping
+      // those cells' index rows, so it is snapshotted once
+      val probed = evaluatedOnce(
         probedFrame(index.centroids, queries, queryId, queryVec, nprobe))
       val cells = probed.select("cell").distinct().collect()
         .map(_.getInt(0)).sorted
@@ -359,10 +351,9 @@ object Similarity {
     * quantized ranking EAGERLY inside the verb call — on the localized
     * path the candidate top k·factor, the query vectors, and the
     * coverage guard are driver-collected jobs (each bounded by the
-    * small-queries contract); with `localizeQueries = false` the
-    * candidates snapshot executor-side instead and only the two
-    * bounded guard probes run eagerly — no query-scale collect
-    * anywhere (see [[rescoreExactDistributed]]). */
+    * small-queries contract); with `localizeQueries = false` only one
+    * bounded guard job runs eagerly — no query-scale collect anywhere
+    * (see [[rescoreExactDistributed]]). */
   final case class RescoreSource(source: DataFrame, id: Column,
       vec: Column, factor: Int = 4) {
     require(factor >= 1, s"rescore factor must be >= 1, got $factor")
@@ -425,57 +416,43 @@ object Similarity {
 
   /** The rescore for query sets declared NOT driver-small
     * (`localizeQueries = false` — r15 verdict #2): nothing query-scale
-    * ever collects. The quantized top-`k·factor` is snapshotted
-    * executor-side (`localCheckpoint`, bounded by |queries|·k·factor —
-    * the same consistent-snapshot price the distributed probe path
-    * already pays), candidate ids semi-join-prune the full-precision
+    * ever collects. Candidate ids semi-join-prune the full-precision
     * source (a shuffle/broadcast prune the size estimator orients — the
     * distributed trade for the localized path's pushed-`In` scan
     * filter), the queries re-enter as a distributed join side, and the
     * exact cosine re-ranks per query in the same window as every search
-    * verb. The coverage and duplicate guards run as bounded `limit(1)`
-    * probes over candidate-scale frames — two cheap jobs, never a
-    * query-scale collect. Eager like the localized rescore: the guards
-    * execute inside the verb call. The two snapshots back the RETURNED
-    * frame, so their blocks stay pinned until the caller is done with
-    * it — they register with the caller's [[graft.Scratch]] scope (the
-    * ingest stream's per-batch scope releases them by exact handle once
-    * the batch's writes land); scope-less one-shot callers leave them
-    * to their own lifecycle (Verify/Bench sweep per query from their
-    * single-tenant sessions) or session teardown. */
+    * verb. The duplicate and coverage guards are ONE eager, bounded job
+    * (candidate ids joined to per-id source counts). It and the re-rank
+    * both evaluate the candidates (the quantized search runs twice);
+    * frames that could differ between the two are snapshotted. */
   private def rescoreExactDistributed(quantTop: DataFrame,
       queries: DataFrame, queryId: Column, queryVec: Column,
       rs: RescoreSource, k: Int): DataFrame = {
-    // one consistent snapshot: the guards and the re-rank join must see
-    // the SAME candidate set (a sample/rand-derived upstream would
-    // otherwise disagree between evaluations), and the quantized
-    // search should not re-run once per consumer
-    val cand = graft.Scratch.snapshot(
-      quantTop.select("query_id", "corpus_id"))
+    // the guard and the re-rank join must see the SAME candidate set
+    val cand = evaluatedOnce(quantTop.select("query_id", "corpus_id"))
     val ids = cand.select("corpus_id").distinct()
-    val pruned = graft.Scratch.snapshot(
+    val pruned = evaluatedOnce(
       rs.source.select(rs.id.as("corpus_id"), rs.vec.as("__rv"))
         .filter(F.col("__rv").isNotNull)
         .join(ids, Seq("corpus_id"), "left_semi"))
     // same fail-loud contracts as the localized rescore, distributed:
-    // a non-covering source silently drops candidates from the re-rank;
-    // a duplicated one double-lists a candidate at two ranks
-    val dup = pruned.groupBy("corpus_id")
-      .agg(F.count(F.lit(1)).as("__n")).filter(F.col("__n") > 1)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"rescore: the full-precision source holds ${dup.head.getLong(1)} " +
-        s"rows for candidate id ${dup.head.get(0)} — duplicate ids " +
-        "would double-list a candidate at two ranks; dedup the source " +
-        "first")
-    val miss = ids.join(pruned, Seq("corpus_id"), "left_anti")
-      .limit(1).collect()
-    require(miss.isEmpty,
-      s"rescore: the full-precision source does not cover candidate " +
-        s"id ${miss.headOption.map(_.get(0)).orNull} — a stale or " +
-        "wrong source would silently drop the missing candidates from " +
-        "the re-ranked top-k; pass the same corpus the index was " +
-        "built/appended from")
+    // a duplicated source double-lists a candidate at two ranks; a
+    // non-covering one silently drops candidates from the re-rank.
+    // Duplicates sort first, so they are reported before gaps.
+    val bad = ids
+      .join(pruned.groupBy("corpus_id").agg(F.count(F.lit(1)).as("__n")),
+        Seq("corpus_id"), "left_outer")
+      .filter(F.col("__n").isNull || F.col("__n") > 1)
+      .orderBy(F.col("__n").isNull).limit(1).collect()
+    bad.headOption.foreach { r =>
+      require(r.isNullAt(1), s"rescore: the full-precision source holds " +
+        s"${r.getLong(1)} rows for candidate id ${r.get(0)} — duplicate " +
+        "ids would double-list a candidate at two ranks; dedup the source")
+      throw new IllegalArgumentException("rescore: the full-precision " +
+        s"source does not cover candidate id ${r.get(0)} — a stale or " +
+        "wrong source would silently drop the missing candidates from the " +
+        "re-ranked top-k; pass the corpus the index was built/appended from")
+    }
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
     topKByQuery(cand
       .join(pruned, Seq("corpus_id"))
@@ -602,14 +579,14 @@ object Similarity {
         .withColumn("__ba",
           F.explode(F.sequence(F.lit(0), F.col("__bb"))))
         .drop("__B")
-      val losers = graft.Scratch.snapshot(a
+      // the anti-join runs lazily, after `assigned` is unpersisted: a
+      // loser set that could differ by then is materialized here
+      val losers = evaluatedOnce(a
         .join(b, Seq("cell", "__ba", "__bb"))
         .filter(F.col("__ba") =!= F.col("__bb") ||
           F.col("__a_id") < F.col("__b_id"))
         .filter(dot(F.col("__a_v"), F.col("__b_v")) >= threshold)
         .select(F.greatest(F.col("__a_id"), F.col("__b_id")).as("__loser"))
-        // materialize the loser set BEFORE unpersist: the anti-join below
-        // executes lazily, after this method returns
         .distinct())
       df.join(losers, id === F.col("__loser"), "left_anti")
     } finally assigned.unpersist(false)
@@ -641,7 +618,8 @@ object Similarity {
   //    [[graft.operators.Embeddings.writeWhitenedIvfIndex]] layout whose
   //    centroids live in PCA-whitened space — raw-vector appends/searches
   //    against it refuse loudly (at pcaK == d the dim guard alone cannot
-  //    catch them, and the index would silently corrupt)
+  //    catch them, and the index would silently corrupt); sq8,
+  //    elem_bytes and id_type fix the assigned table's schema
 
   /** Everything a persisted-index reader needs from the meta +
     * centroids tables: dim, centroids-by-cell, the whitened-space stamp,
@@ -654,11 +632,24 @@ object Similarity {
     * and modeling float32 at 8 B fired the brute route one log₂ step
     * late). `elemBytes = None` marks a pre-stamp layout: width modeling
     * falls back to the conservative 8 B and appends preserve the
-    * batch's own element type (no cast target is known). */
+    * batch's own element type (no cast target is known). `idType` is
+    * the stored `corpus_id` type. */
   private[graft] final case class IvfMetaInfo(dim: Int,
       centroids: Seq[Seq[Double]], whitened: Boolean, modelFp: Long,
-      sq8: Boolean, elemBytes: Option[Int]) {
+      sq8: Boolean, elemBytes: Option[Int], idType: Option[DataType]) {
     def widthElemBytes: Int = elemBytes.getOrElse(8)
+
+    /** `assigned`'s schema; None for a layout written before the stamps. */
+    def assignedSchema: Option[StructType] = {
+      val payload =
+        if (sq8) Some(Seq(StructField("scale", DoubleType),
+          StructField("q", ArrayType(ByteType))))
+        else elemBytes.map(w => Seq(StructField("cv",
+          ArrayType(if (w == 4) FloatType else DoubleType))))
+      for (id <- idType; p <- payload) yield StructType(
+        StructField("corpus_id", id) +: p :+ StructField("seg", StringType)
+          :+ StructField("cell", IntegerType))
+    }
   }
 
   private val ivfMetaCache =
@@ -697,13 +688,24 @@ object Similarity {
         metaRow.getAs[Boolean]("sq8")
       val elemBytes = if (meta.columns.contains("elem_bytes"))
         Some(metaRow.getAs[Int]("elem_bytes")) else None
+      val idType = if (meta.columns.contains("id_type"))
+        Some(DataType.fromJson(metaRow.getAs[String]("id_type"))) else None
       val cents = spark.read.parquet(s"$path/centroids").collect()
         .map(r => r.getAs[Int]("cell") -> r.getSeq[Double](
           r.fieldIndex("centroid")))
         .sortBy(_._1).map(_._2.toSeq).toSeq
-      IvfMetaInfo(dim, cents, whitened, modelFp, sq8, elemBytes)
+      IvfMetaInfo(dim, cents, whitened, modelFp, sq8, elemBytes, idType)
     })
   }
+
+  /** THE reader of an index's `assigned` table, under the schema its meta
+    * stamps: no inference job, a segment label stays a string, and a
+    * table of other types fails at scan time. A layout written before
+    * the stamps is read with inference. */
+  private def readAssigned(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: IvfMetaInfo): DataFrame =
+    meta.assignedSchema.fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$path/assigned")
 
   /** The loud space-mismatch guard every persisted-index entry point
     * routes through: an operation declaring `expectWhitened = false`
@@ -894,10 +896,12 @@ object Similarity {
         StructField("whitened", BooleanType, nullable = false),
         StructField("model_fp", LongType, nullable = false),
         StructField("sq8", BooleanType, nullable = false),
-        StructField("elem_bytes", IntegerType, nullable = false))),
+        StructField("elem_bytes", IntegerType, nullable = false),
+        StructField("id_type", StringType, nullable = false))),
       Seq(org.apache.spark.sql.Row(idx.centroids.length,
         idx.centroids.head.length, iters, trainSample, seed, whitened,
-        modelFp, sq8, elemBytes)),
+        modelFp, sq8, elemBytes,
+        idx.assigned.schema("corpus_id").dataType.json)),
       s"$path/meta")
   }
 
@@ -1070,7 +1074,7 @@ object Similarity {
     // refines off driver-collected candidates (pushed-`In` source scan),
     // distributed refines with a semi-join prune and a per-query window
     // — no query-scale collect anywhere on that path
-    var assigned = spark.read.parquet(s"$path/assigned")
+    var assigned = readAssigned(spark, path, meta)
     excludeSegment.foreach(sg =>
       assigned = assigned.filter(F.col("seg") =!= sg))
     // an SQ8 layout dequantizes SCAN-SIDE, fused into the candidate read
@@ -1147,7 +1151,7 @@ object Similarity {
     // vectors that exist — the ~0.3%-error quantization round trip is
     // part of the documented SQ8 trade) and re-quantizes on write
     val meta = readIvfMeta(spark, path)
-    var stored = spark.read.parquet(s"$path/assigned")
+    var stored = readAssigned(spark, path, meta)
     if (meta.sq8)
       stored = stored.withColumn("cv",
         dequantizeInt8(F.struct(F.col("scale").as("scale"),
@@ -1351,7 +1355,7 @@ object Similarity {
         (512L << 20) / candidateWidthBytes(readIvfMeta(spark, path)))
     (fold, stage) => {
       val staged = new org.apache.hadoop.fs.Path(stage, "assigned")
-      val folded = spark.read.parquet(s"$path/assigned")
+      val folded = readAssigned(spark, path, readIvfMeta(spark, path))
         .filter(F.col("seg").isin(fold.sources: _*)).drop("seg")
       val (writable, fileCap) = cellBalancedFold(folded, cap)
       var writer = writable.write.mode("overwrite")
@@ -1470,6 +1474,15 @@ object Similarity {
       java.util.Arrays.asList(rows: _*), probed.schema)
     Probes(local, rows.map(_.getAs[Int]("cell")).distinct.sorted.toSeq)
   }
+
+  /** `df` itself when every evaluation yields the same rows
+    * (`Bridge.reEvaluatesIdentically`), else a plain `localCheckpoint`
+    * taken now, whose blocks fall to the caller's lifecycle (Verify/Bench
+    * sweep per query; session teardown). Ingest triggers hand down frames
+    * that pass, so none is taken inside them. */
+  private def evaluatedOnce(df: DataFrame): DataFrame =
+    if (org.apache.spark.sql.graftbridge.Bridge.reEvaluatesIdentically(df)) df
+    else df.localCheckpoint()
 
   private def topKByQuery(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")

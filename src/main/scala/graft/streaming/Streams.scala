@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 
@@ -232,7 +233,10 @@ object Streams {
     * the index append ([[graft.operators.Similarity.appendToIvfIndex]])
     * reads the written files back, so the probe runs once per trigger
     * without a survivor cache. The batch itself stays cached: it feeds
-    * the probe and the row count that picks the probe's shape.
+    * the probe and the row count that picks the probe's shape. A stream
+    * that is not a file source, or whose `id`/`vec` are nondeterministic
+    * (`Bridge.reEvaluatesIdentically`, asked once per run), has each
+    * batch snapshotted instead, released when the trigger ends.
     *
     * Exactly-once: same contract as [[ingestDedupStream]] — SHA-256
     * checkpoint-derived segment prefix, per-batch dynamic-overwrite
@@ -296,29 +300,28 @@ object Streams {
       if (graft.operators.Similarity.ivfIndexIsWhitened(spark, indexPath))
         Some(graft.operators.Embeddings.readPcaModel(spark, indexPath))
       else None
-    val step: (DataFrame, Long) => Unit = (batchDf, batchId) =>
-        graft.Scratch.scoped {
+    // a batch frame hides its origin's expressions, so the stream's own
+    // plan is asked; every frame derived from a passing (file-source)
+    // batch passes too, so no site below snapshots
+    val stable = Bridge.reEvaluatesIdentically(
+      stream.select(id.as("__vid"), vec.as("__v")))
+    val step: (DataFrame, Long) => Unit = (batchDf, batchId) => {
       val seg = s"${prefix}_b$batchId"
-      // every batch-scoped localCheckpoint — the distributed probe's
-      // snapshot, the distributed rescore's candidate/pruned snapshots —
-      // registers its exact RDD handle with this scope and is released
-      // when the batch's writes are done ([[graft.Scratch]]).
-      // localCheckpoint blocks live OUTSIDE the CacheManager, so the
-      // scope is the only release path; without it a 24/7 stream on the
-      // distributed posture accretes candidate-scale blocks per trigger.
-      // Handle-exact release replaced the r16 getPersistentRDDs diff,
-      // which could free CONCURRENT session users' blocks — fatal for a
-      // victim's localCheckpoint, whose lineage cannot recompute.
-      val batch = batchDf.select(id.as("__vid"), vec.as("__v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cols = batchDf.select(id.as("__vid"), vec.as("__v"))
+      val (batch, release) =
+        if (stable) {
+          val b = cols.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (b, () => { b.unpersist(false); () })
+        } else Bridge.snapshotManaged(cols)
       try {
         val probes = nprobe.getOrElse(Int.MaxValue) // min'd to nlist inside
         // adaptive probe shape: the localized IVF path driver-collects
         // batch × nprobe vector rows before broadcasting — the fast
         // shape for trigger-sized batches (one local relation, no
         // query-side shuffles), a driver OOM for a backlog-replay batch.
-        // The batch is already persisted, so counting it is one cheap
-        // cached pass; past the bound the distributed path collects only
+        // The batch is already cached or snapshotted, so counting it is
+        // one cheap pass; past the bound the distributed path collects only
         // the probed cell ids (≤ nlist)
         val batchRows = batch.count()
         val probeVec = pcaModel match {
@@ -406,10 +409,7 @@ object Streams {
               graft.operators.Similarity.compactIvfIndex(spark, indexPath,
                 excludeSegment = Some(seg))
           }
-      } finally {
-        batch.unpersist(false)
-        ()
-      }
+      } finally release()
     }
     drain(stream.writeStream.foreachBatch(step), ckpt,
       temp = checkpoint.isEmpty)

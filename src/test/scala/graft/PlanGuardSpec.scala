@@ -479,6 +479,56 @@ class PlanGuardSpec extends SparkSpec {
     }
     assert(col1[Long](spark.read.parquet(s"$d/out").orderBy("vec_id"),
       "vec_id") === Seq(1L, 3L, 5L))
+    // an assigned table whose vectors are strings: the schema the meta
+    // stamps does not coerce it, the scan refuses it
+    Seq((7L, Seq("a", "b"))).toDF("corpus_id", "cv")
+      .withColumn("seg", F.lit("base")).withColumn("cell", F.lit(0))
+      .write.mode("overwrite").partitionBy("seg", "cell")
+      .parquet(s"$idx/assigned")
+    val e = intercept[org.apache.spark.SparkException](
+      Similarity.searchIvfIndex(spark, idx, batches.head, F.col("vec_id"),
+        F.col("embedding"), k = 1).collect())
+    assert(e.getMessage.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH"),
+      e.getMessage)
+  }
+
+  test("dedupAgainstIndex over a union batch (d51's shape) verifies its " +
+      "candidates once, not once per union branch") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.{DataFrame, functions => F}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text")
+    val idx = java.nio.file.Files.createTempDirectory("graft_union_probe")
+      .toString
+    Dedup.writeMinhashIndex(docs.filter(F.col("doc_id") % 2 === 0),
+      F.col("doc_id"), F.col("text"), idx, shingleSize = 3, numHashes = 64,
+      bands = 8)
+    val odd = docs.filter(F.col("doc_id") % 2 === 1)
+    val union = odd.unionAll(docs
+      .filter(F.col("doc_id") % 2 === 0 && F.col("doc_id") < 50)
+      .select((F.col("doc_id") + 1000000L).as("doc_id"), F.col("text")))
+    // executed nodes computing the Jaccard: each query stage counted
+    // once, reused exchanges not followed
+    def verifications(batch: DataFrame): Int = {
+      val df = Dedup.dedupAgainstIndex(batch, F.col("doc_id"),
+        F.col("text"), idx, threshold = 0.8)
+      assert(df.collect().nonEmpty)
+      val stages = scala.collection.mutable.Set.empty[Int]
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case s: QueryStageExec => if (stages.add(s.id)) nodes(s.plan) else Nil
+        case _: ReusedExchangeExec => Nil
+        case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+      }
+      nodes(df.queryExecution.executedPlan).count(
+        _.expressions.exists(_.toString.contains("array_intersect")))
+    }
+    val once = verifications(odd)
+    assert(once >= 1)
+    assert(verifications(union) == once)
   }
 
   /** Description and start-time plan of every SQL execution `body` starts
