@@ -69,13 +69,19 @@ object Manifest {
   // [[compactManifest]] folds them back to one, the same economics as
   // every compactor here.
   //
-  // Crash safety per mutation: the part (live rows AND tombstones, ONE
-  // dynamic-overwrite write — they commit atomically) lands BEFORE the
-  // retired data files are deleted. A crash before the part leaves the
-  // mutation invisible (orphans for [[vacuum]]); after it, only
-  // not-yet-deleted retired files linger as orphans. The manifest is
-  // readable at every prefix and never lists a missing file, never
-  // loses a row.
+  // Crash safety: ONE part-commit rule ([[commitPart]]) for every part
+  // write — mutations and both compaction folds. List the files already
+  // in `seg=<segment>`, write the new part file beside them, then delete
+  // only the listed files (a fold records its floor between the two). No
+  // part is deleted before its replacement is in place, and the view
+  // needs nothing more: live rows dedup by file and every tombstone
+  // applies, so old and new parts may coexist at any crash prefix. A
+  // mutation's part (live rows AND tombstones in one file — they commit
+  // atomically) lands BEFORE its retired data files are deleted: a crash
+  // before the part leaves the mutation invisible (orphans for
+  // [[vacuum]]); after it, only not-yet-deleted retired files linger as
+  // orphans. The manifest is readable at every prefix and never loses a
+  // row.
   private def partsPath(url: String) = url + "/_manifest/parts"
 
   /** Parts up to this many bytes of parquet are replayed on the driver
@@ -132,29 +138,43 @@ object Manifest {
       finally pool.shutdown()
     }
 
-  /** Write one manifest part for `segment` — a retried mutation REPLACES
-    * its earlier part, same contract as every data-segment appender.
-    * `rows` is (file, rows, min_*, max_*), with null `rows` marking
-    * tombstones; every row is stamped with the mutation's `commit` number
-    * (the time-travel axis — see [[manifestAsOf]]), and `__commit`
-    * records `dataSchema` (see above).
-    *
-    * Written DIRECTLY into the `seg=<segment>` directory (mode overwrite)
-    * rather than via dynamic partition overwrite: the two are equivalent
-    * for a non-empty single-segment frame, but a ZERO-row dynamic
-    * overwrite creates no directory at all — which is exactly how an
-    * all-rows-deleted compaction used to DESTROY the manifest (the empty
-    * compact part vanished, then the old parts were deleted, and every
-    * later read failed "no manifest" on a table that logically still
-    * exists, empty). A direct write lands a schema-only parquet file even
-    * at zero rows, so the layout stays readable. */
+  /** THE part-commit rule (see the layout note above): list the part
+    * files already in `seg=<segment>` — an earlier attempt of a retried
+    * mutation or fold — let `write` land the new part file beside them
+    * in that directory, then delete only the listed files. A retried
+    * mutation or fold thereby REPLACES its earlier part (the contract of
+    * every data-segment appender) without a window in which the segment
+    * holds neither. A compaction fold passes its stamp as `floor`: the
+    * floor lands between the write and the delete, so no part is deleted
+    * before the floor refuses the history that part held. */
+  private def commitPart(spark: SparkSession, url: String, segment: String,
+      floor: Option[Long])(write: String => Unit): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"${partsPath(url)}/seg=$segment")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val older =
+      if (fs.exists(dir)) fs.listStatus(dir).filter(isDataFile).toSeq
+      else Seq.empty
+    write(dir.toString)
+    floor.foreach(writeFloor(spark, url, _))
+    older.foreach(st => fs.delete(st.getPath, false))
+  }
+
+  /** Write one manifest part for `segment` through [[commitPart]], as a
+    * Spark append of one file. `rows` is (file, rows, min_*, max_*), with
+    * null `rows` marking tombstones; every row is stamped with the
+    * mutation's `commit` number (the time-travel axis — see
+    * [[manifestAsOf]]), and `__commit` records `dataSchema` (see above).
+    * The append lands a schema-only parquet file even at zero rows, so an
+    * all-rows-deleted table keeps a readable, empty manifest. */
   private def writePart(rows: DataFrame, url: String,
-      segment: String, commit: Long, dataSchema: Option[StructType]): Unit =
-    rows.coalesce(1)
-      .withColumn("__commit", F.lit(commit))
-      .withMetadata("__commit", commitMetadata(dataSchema))
-      .write.mode("overwrite")
-      .parquet(s"${partsPath(url)}/seg=$segment")
+      segment: String, commit: Long, dataSchema: Option[StructType],
+      floor: Option[Long] = None): Unit =
+    commitPart(rows.sparkSession, url, segment, floor) { dir =>
+      rows.coalesce(1)
+        .withColumn("__commit", F.lit(commit))
+        .withMetadata("__commit", commitMetadata(dataSchema))
+        .write.mode("append").parquet(dir)
+    }
 
   /** The next commit number: max stamped commit + 1 (0 for a fresh
     * layout). Race-free under the single-writer contract; a crash-retry
@@ -262,41 +282,14 @@ object Manifest {
         F.lit(null).cast(byName(n)).as(n)): _*)
   }
 
-  /** Non-empty child `seg=` directories of the parts root — one bounded
-    * listing. The SAME listing also validates the distributed fold's
-    * rename-aside protocol (r14 ADVICE): a `.seg_<s>_old` aside WITHOUT
-    * its `seg=<s>` twin means a compaction crashed between the
-    * move-aside and swap-in renames — and when OTHER parts survive (a
-    * retried keepLast fold whose prior attempt already deleted some old
-    * segments), the remaining parts would otherwise read as a silently
-    * PARTIAL manifest. Fail loud and name the recovery rename instead.
-    * A stale aside WITH its twin (crash after swap-in, before the aside
-    * drop) is harmless — the twin is the committed fold — and the next
-    * compaction clears it. */
+  /** Child `seg=` directories of the parts root — one bounded listing. */
   private def segDirs(spark: SparkSession, root: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
-    else {
-      val children = fs.listStatus(p).toSeq
-      val segs = children
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg="))
-        .map(_.getPath.getName.stripPrefix("seg=")).toSet
-      children.map(_.getPath.getName)
-        .filter(n => n.startsWith(".seg_") && n.endsWith("_old"))
-        .foreach { n =>
-          val sg = n.stripPrefix(".seg_").stripSuffix("_old")
-          require(segs.contains(sg),
-            s"manifest at $root holds a compaction aside '$n' with no " +
-              s"live 'seg=$sg' — a compaction crashed between its " +
-              "renames; rename the aside back (or the staged fold in) " +
-              "before reading, or the surviving parts would serve a " +
-              "silently partial manifest")
-        }
-      children
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg="))
-        .map(_.getPath.toString)
-    }
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg="))
+      .map(_.getPath.toString)
   }
 
   /** All part rows (live + tombstones) as a distributed read — the view
@@ -622,20 +615,23 @@ object Manifest {
   }
 
   /** [[writePart]] for DRIVER-LOCAL part rows (mutation-scale metadata:
-    * per-file stats, tombstones) — written through Spark's own parquet
-    * write support with zero Spark jobs and no committer round
+    * per-file stats, tombstones, the driver fold) — written through
+    * Spark's own parquet write support with zero Spark jobs and no
+    * committer round
     * ([[org.apache.spark.sql.graftbridge.Bridge.writeParquetDriverSide]]).
-    * Same layout contract as [[writePart]]: one file, direct into
-    * `seg=<segment>` (a retried mutation REPLACES its part), readable
-    * even at zero rows, `__commit` recording `dataSchema`. */
+    * Same contract as [[writePart]]: one file committed by
+    * [[commitPart]], readable even at zero rows, `__commit` recording
+    * `dataSchema`. */
   private def writePartRows(spark: SparkSession, rows: Seq[Row],
       schema: StructType, url: String, segment: String, commit: Long,
-      dataSchema: Option[StructType]): Unit = {
+      dataSchema: Option[StructType], floor: Option[Long] = None): Unit = {
     val full = schema.add("__commit", org.apache.spark.sql.types.LongType,
       nullable = false, commitMetadata(dataSchema))
     val stamped = rows.map(r => Row.fromSeq(r.toSeq :+ commit))
-    Bridge.writeParquetDriverSide(spark, full, stamped,
-      s"${partsPath(url)}/seg=$segment", overwriteDir = true)
+    commitPart(spark, url, segment, floor) { dir =>
+      Bridge.writeParquetDriverSide(spark, full, stamped, dir,
+        overwriteDir = false)
+    }
   }
 
   /** Write `df` at `path` (overwrite), optionally range-clustered by
@@ -1078,17 +1074,21 @@ object Manifest {
     * crash that deletes only SOME old parts can never serve a silently
     * partial as-of view: everything below the floor is refused loud.
     *
-    * Crash ordering: compacted part FIRST, then the floor marker, then
-    * old parts deleted, then data tombstone-files deleted LAST — a crash
-    * leaves duplicates (the same file in the compact part and a
-    * not-yet-deleted old part: healed by [[manifest]]'s dedup-by-file,
-    * since manifest rows for one immutable file path are identical) or
-    * still-applied tombstones naming already-unlisted files (a no-op),
-    * never resurrection (the compact part carries every still-lethal
-    * folded tombstone, so old parts delete in any order) and never a
-    * partial as-of (the floor refuses commits the surviving parts can no
-    * longer faithfully reconstruct). An ALL-ROWS-DELETED table compacts
-    * to an empty-but-present part (see [[writePart]]) — the layout stays
+    * Both folds commit through [[commitPart]]: the compact part lands
+    * beside any earlier attempt's part in `seg=<segment>`, then the floor,
+    * then that earlier part is deleted, then the folded segments' parts
+    * are swept. A crash leaves duplicates (the same file in the compact
+    * part and a not-yet-deleted old part: healed by [[manifest]]'s
+    * dedup-by-file, since manifest rows for one immutable file path are
+    * identical) or still-applied tombstones naming already-unlisted
+    * files (a no-op) — never absence (no part is deleted before its
+    * replacement is in place), never resurrection (the compact part
+    * carries every still-lethal folded tombstone, so old parts delete in
+    * any order) and never a partial as-of (the floor refuses commits the
+    * surviving parts can no longer faithfully reconstruct). A retry under
+    * the same `segment` folds whatever the crash left and converges on
+    * the same view. An ALL-ROWS-DELETED table compacts to an
+    * empty-but-present part (see [[writePart]]) — the layout stays
     * readable and appendable, never "no manifest".
     *
     * The fold is size-routed by [[parts]], the route every manifest
@@ -1109,7 +1109,7 @@ object Manifest {
     // big manifests fold DISTRIBUTED — scaling/manifest_fold.json at 1M
     // rows: driver fold ~9 s at ~2 GB of collect-inflated heap vs
     // distributed ~3.9 s with the driver doing only O(parts) footer
-    // reads + renames. ONE listing feeds both the route decision and (on
+    // reads. ONE listing feeds both the route decision and (on
     // the distributed path) the footer commit reads — object-storage
     // LIST economics, the module's own discipline
     val p = parts(spark, url, driverFoldMaxBytes)
@@ -1185,78 +1185,25 @@ object Manifest {
     // committer round) was pure overhead; the in-line streaming
     // compaction (s10's compactEvery) pays this per cadence
     writePartRows(spark, outRows, outSchema, url, segment, commit = stamp,
-      replayed.dataSchema)
-    writeFloor(spark, url, stamp)
-    val fs = new org.apache.hadoop.fs.Path(url)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepFoldedSegs(fs, partsPath(url),
-      segDirs(spark, partsPath(url)), segment, keptSegs)
+      replayed.dataSchema, floor = Some(stamp))
+    sweepFoldedSegs(spark, url, segment, keptSegs)
     liveCount
   }
 
-  /** End-of-fold cleanup shared by both folds: delete every folded-away
-    * `seg=` dir — and, BEFORE each, any `.seg_<sg>_old` compaction
-    * aside a previous distributed fold's crash left next to it (the
-    * documented crash-after-swap-in state, harmless while its twin
-    * lives). Deleting only the twin would orphan the aside, and
-    * [[segDirs]]' aside guard would then fail every subsequent read of
-    * a healthy table — with recovery advice (rename the aside back)
-    * that would RESURRECT stale pre-fold parts beside the committed
-    * fold. The ORDER is load-bearing (r15 ADVICE): aside first, twin
-    * second — a crash between the two deletes then leaves a live twin
-    * with no aside (a plain not-yet-folded segment, re-folded next
-    * time), never the orphan-aside state the guard bricks reads on.
-    * Any-order deletion of the old PARTS themselves is already safe
-    * per the carried-tombstone contract; only the aside/twin pairing
-    * is ordered. The fold's own output segment and every kept segment
-    * also get their stale asides swept (their twins are live and
-    * committed; the aside is pure leftover). One listing of the parts
-    * root identifies which asides actually exist, so the per-segment
-    * delete RPC is paid only for them — at thousands of folded
-    * segments a blind delete-per-segment doubles the sweep's RPC
-    * count for nothing. */
-  private def sweepFoldedSegs(fs: org.apache.hadoop.fs.FileSystem,
-      partsRoot: String, dirs: Seq[String], segment: String,
-      keptSegs: Set[String]): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(partsRoot)
-    val asides =
-      if (!fs.exists(rootPath)) Set.empty[String]
-      else fs.listStatus(rootPath).map(_.getPath.getName)
-        .filter(n => n.startsWith(".seg_") && n.endsWith("_old")).toSet
-    dirs.foreach { d =>
+  /** The last step of both folds: delete every folded-away `seg=` part
+    * dir — all but the fold's own and the kept ones. Any order is safe:
+    * the compact part carries every still-lethal folded tombstone. */
+  private def sweepFoldedSegs(spark: SparkSession, url: String,
+      segment: String, keptSegs: Set[String]): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(url)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    segDirs(spark, partsPath(url)).foreach { d =>
       val sg = d.substring(d.lastIndexOf("/seg=") + 5)
-      // aside first (see ordering note above); skip the RPC when the
-      // listing already shows none exists
-      if (asides.contains(s".seg_${sg}_old"))
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$partsRoot/.seg_${sg}_old"), true)
       if (sg != segment && !keptSegs.contains(sg))
         fs.delete(new org.apache.hadoop.fs.Path(d), true)
-      ()
     }
   }
 
-  /** The big-manifest fold: same semantics as [[compactDriverFold]]
-    * (same live/tombstone/carry/stamp rules, same crash ordering) with
-    * the manifest never materialized on the driver — the fold is a
-    * dedup + two anti/semi joins over the parts DataFrame, staged to
-    * `_manifest/stage_compact` and committed into `parts/seg=<segment>`
-    * by rename-aside (prior part aside, staged fold in, aside dropped —
-    * writing the fold's own input root directly would race the read;
-    * the stage dir is invisible to readers until the renames, and no
-    * live part is deleted before its replacement is durably staged).
-    * Per-part commit stamps come from the parts' parquet footer
-    * statistics (the [[nextCommit]] discipline — zero Spark jobs;
-    * `__commit` is constant per part), falling back to one distributed
-    * DISTINCT for foreign-written parts without statistics. The
-    * keep-first duplicate choice of the driver fold degrades to
-    * dropDuplicates' arbitrary winner here, which is already the read
-    * path's contract — manifest rows for one immutable file path are
-    * identical (see [[manifest]]). Live count is read from the written
-    * part's own footer (row count minus the carried tombstones' null
-    * count) on the full-fold path; a retention fold pays one count job.
-    * scaling/manifest_fold.json at 1M rows: ~3.9 s here vs the driver fold's
-    * ~9 s, with no row-bound driver materialization. */
   /** (segment, commit) per part from parquet footer stats — zero Spark
     * jobs, over the FileStatuses the routing pass already listed. The
     * per-file footer opens run in a BOUNDED thread pool (r14 verdict
@@ -1325,6 +1272,26 @@ object Manifest {
     (segCommits, fallback)
   }
 
+  /** The big-manifest fold: same semantics as [[compactDriverFold]]
+    * (same live/tombstone/carry/stamp rules, same commit through
+    * [[commitPart]]) with the manifest never materialized on the driver —
+    * the fold is a dedup + two anti/semi joins over the parts DataFrame,
+    * appended as one part file beside any earlier attempt's part (the
+    * parts read's file listing is pinned before the write, so the new
+    * file never feeds its own fold). Per-part commit stamps come from the
+    * parts' parquet footer statistics (the [[nextCommit]] discipline —
+    * zero Spark jobs; `__commit` is constant per part), falling back to
+    * one distributed DISTINCT for parts holding several commits (foreign
+    * writers, or an earlier attempt's part beside its replacement) or
+    * without statistics. The keep-first duplicate choice of the driver
+    * fold degrades to dropDuplicates' arbitrary winner here, which is
+    * already the read path's contract — manifest rows for one immutable
+    * file path are identical (see [[manifest]]). Live count is read from
+    * the written part's own footer (row count minus the carried
+    * tombstones' null count) on the full-fold path; a retention fold
+    * pays one count job. scaling/manifest_fold.json at 1M rows: ~3.9 s
+    * here vs the driver fold's ~9 s, with no row-bound driver
+    * materialization. */
   private def compactDistributedFold(spark: SparkSession, url: String,
       raw: DataFrame, segment: String, keepLast: Int,
       partFiles: Seq[(String, Array[FileStatus])],
@@ -1364,43 +1331,15 @@ object Manifest {
       .filterNot(n => n == "__commit" || n == "seg").toSeq
     val out = liveOut.select(outCols.map(GraftIO.qcol): _*)
       .unionAll(carried.select(outCols.map(GraftIO.qcol): _*))
-    val stagePath = new org.apache.hadoop.fs.Path(
-      url + "/_manifest/stage_compact")
-    val fs = stagePath.getFileSystem(hconf)
-    fs.delete(stagePath, true) // a crashed prior attempt's leftovers
-    out.coalesce(1).withColumn("__commit", F.lit(stamp))
-      .withMetadata("__commit", commitMetadata(dataSchema))
-      .write.mode("overwrite").parquet(stagePath.toString)
     // the retention fold's live count needs the kept parts too — one
-    // distributed count, taken BEFORE any rename/delete (raw's file
-    // listing is already pinned; re-executing it later would read files
-    // a retried compaction just replaced)
+    // distributed count, taken BEFORE the commit (raw's file listing is
+    // pinned; re-executing it later would read the earlier attempt's
+    // part the commit deletes)
     val liveCountKept = if (keepLast > 0) liveCountNow() else -1L
+    writePart(out, url, segment, stamp, dataSchema, floor = Some(stamp))
     val target = new org.apache.hadoop.fs.Path(
       s"${partsPath(url)}/seg=$segment")
-    // a RETRIED compaction replaces its own output — but never by
-    // deleting the (possibly only) live part before its replacement is
-    // in place: the old part moves ASIDE to a dot-prefixed sibling
-    // (invisible to Spark's listing), the staged fold renames in, then
-    // the aside drops. A crash between the renames leaves BOTH the
-    // aside and the staged fold intact — rename either back to recover
-    // — and readers fail loud in that window even when OTHER parts
-    // survive it (a retried keepLast fold whose prior attempt already
-    // deleted old segments): segDirs refuses an aside with no `seg=`
-    // twin, so the kept parts can never serve a silently partial
-    // manifest (r14 ADVICE).
-    val aside = new org.apache.hadoop.fs.Path(
-      s"${partsPath(url)}/.seg_${segment}_old")
-    fs.delete(aside, true)
-    if (fs.exists(target))
-      require(fs.rename(target, aside),
-        s"compactManifest: move-aside failed for $target")
-    require(fs.rename(stagePath, target),
-      s"compactManifest: staged part swap-in failed for $target — the " +
-        s"staged fold is intact at $stagePath and the prior part " +
-        s"(if any) at $aside; rename either back to recover")
-    fs.delete(aside, true)
-    writeFloor(spark, url, stamp)
+    val fs = target.getFileSystem(hconf)
     // live count on the full-fold path: from the written part's footer
     // (its live rows ARE the table; carried tombstones are the null-rows
     // rows) — zero jobs
@@ -1410,31 +1349,28 @@ object Manifest {
         var total = 0L
         var nulls = 0L
         var haveNulls = true
-        fs.listStatus(target)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .foreach { st =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(st, hconf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try {
-              r.getFooter.getBlocks.forEach { b =>
-                total += b.getRowCount
-                b.getColumns.forEach { c =>
-                  if (c.getPath.toDotString == "rows") {
-                    val stats = c.getStatistics
-                    // parquet-mr returns an EMPTY Statistics (numNulls
-                    // == -1) when the count is unset — not null; both
-                    // shapes must take the recount fallback or the
-                    // count silently inflates by -1 per block
-                    if (stats == null || !stats.isNumNullsSet)
-                      haveNulls = false
-                    else nulls += stats.getNumNulls
-                  }
+        fs.listStatus(target).filter(isDataFile).foreach { st =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, hconf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try {
+            r.getFooter.getBlocks.forEach { b =>
+              total += b.getRowCount
+              b.getColumns.forEach { c =>
+                if (c.getPath.toDotString == "rows") {
+                  val stats = c.getStatistics
+                  // parquet-mr returns an EMPTY Statistics (numNulls
+                  // == -1) when the count is unset — not null; both
+                  // shapes must take the recount fallback or the
+                  // count silently inflates by -1 per block
+                  if (stats == null || !stats.isNumNullsSet)
+                    haveNulls = false
+                  else nulls += stats.getNumNulls
                 }
               }
-            } finally r.close()
-          }
+            }
+          } finally r.close()
+        }
         if (haveNulls) total - nulls
         else {
           // stat-less footer (shouldn't happen for our own writer): a
@@ -1446,8 +1382,7 @@ object Manifest {
               .distinct(), Seq("file"), "left_anti").count()
         }
       }
-    sweepFoldedSegs(fs, partsPath(url),
-      segDirs(spark, partsPath(url)), segment, keptSegs)
+    sweepFoldedSegs(spark, url, segment, keptSegs)
     liveCount
   }
 

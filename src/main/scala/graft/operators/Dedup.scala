@@ -816,7 +816,7 @@ object Dedup {
     // DISJOINT bucket space and every near-dup sails through silently
     // (exactly the failure the meta reader's field-name check warns
     // about, reachable without any version skew). The commit is ONE
-    // whole-layout directory swap (Similarity.swapLayout): the staged
+    // whole-layout directory swap (TierCompact.swapLayout): the staged
     // sibling holds the complete new layout, so no crash point can ever
     // expose features/postings/meta from two builds — the per-table swap
     // this replaced had exactly that window between table renames.
@@ -825,8 +825,8 @@ object Dedup {
       val p = new org.apache.hadoop.fs.Path(s"$path/meta")
       p.getFileSystem(hconf).exists(p)
     }
-    val target = if (hasLayout) Similarity.stageDir(spark, path, "__rebuild")
-      else path
+    val target =
+      if (hasLayout) TierCompact.stageDir(spark, path, "__rebuild") else path
     // seg=base: both tables are SEGMENT-partitioned so incremental appends
     // ([[appendToMinhashIndex]]) land as their own dynamically-overwritten
     // partitions — a retried ingest batch rewrites its segment instead of
@@ -848,7 +848,7 @@ object Dedup {
         maxBucket)),
       s"$target/meta")
     if (hasLayout)
-      Similarity.swapLayout(spark, path, target, "rebuild")
+      TierCompact.swapLayout(spark, path, target, "rebuild")
   }
 
   /** Schema of a written `features` segment. */

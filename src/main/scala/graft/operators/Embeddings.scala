@@ -798,7 +798,7 @@ object Embeddings {
     if (Similarity.ivfLayoutExists(spark, path)) {
       // atomic in-place REBUILD: model + tables land COMPLETE under a
       // sibling staging dir and the whole layout swaps in as ONE unit
-      // (Similarity.swapLayout). Writing the new model over the live one
+      // (TierCompact.swapLayout). Writing the new model over the live one
       // first (the fresh-build order) would mis-project every search
       // between the model write and the table write — and the per-table
       // swap this replaced could crash between renames and leave that
@@ -807,12 +807,12 @@ object Embeddings {
       // place through the same swap (the staged layout carries the
       // model; nothing stale can linger — the old layout is retired
       // wholesale).
-      val staged = Similarity.stageDir(spark, path, "__rebuild")
+      val staged = TierCompact.stageDir(spark, path, "__rebuild")
       writePcaModel(spark, model, staged)
       Similarity.writeIvfIndexImpl(projected, id, F.col("__wv"), staged,
         nlist, iters, trainSample, seed, whitened = true,
         modelFp = model.fingerprint, sq8 = sq8)
-      Similarity.swapLayout(spark, path, staged, "rebuild")
+      TierCompact.swapLayout(spark, path, staged, "rebuild")
     } else {
       // fresh build: the model lands BEFORE the tables, so a readable
       // index always has its model (a crash between leaves a model with

@@ -23,7 +23,7 @@ import org.apache.spark.sql.{functions => F}
   * Reads combine segments on the fly (sum-of-counts, sum-of-sums,
   * min-of-mins, max-of-maxes) — segment count only grows the tiny
   * partials scan, and [[compactRollup]] folds cold segments into `base`
-  * with the rename-aside swap when file-count economics say so (see
+  * with the whole-layout swap when file-count economics say so (see
   * SCALING.md's mh_segments / lake_compact studies for when that is).
   */
 object Rollup {
@@ -101,31 +101,23 @@ object Rollup {
   }
 
   /** Fold all segments into `base` (pure layout maintenance — the
-    * combined view is unchanged by construction, and the rename-aside
-    * swap keeps readers atomic-safe). Run it between batches, never
-    * concurrently with an appender: a retried batch's dynamic overwrite
-    * targets its own segment, which no longer exists after folding. */
+    * combined view is unchanged by construction). The fold is staged
+    * complete at `<path>__compact` and committed by the whole-layout swap
+    * ([[TierCompact.swapLayout]]), so readers see the old layout or the
+    * new one; a directory at either sibling name that is not a crashed
+    * stage/aside of this layout is refused, never deleted. Run it between
+    * batches, never concurrently with an appender: a retried batch's
+    * dynamic overwrite targets its own segment, which no longer exists
+    * after folding. */
   def compactRollup(spark: SparkSession, path: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // Path normalizes trailing slashes; siblings built from parent+name
-    // (raw "path + suffix" on "/r/" would nest them INSIDE the layout
-    // and the move-aside rename would try to rename a dir into its own
-    // child)
-    val dir = new org.apache.hadoop.fs.Path(graft.io.GraftIO.resolveUrl(path))
-    val tmp = new org.apache.hadoop.fs.Path(dir.getParent,
-      dir.getName + "__compact")
-    val old = new org.apache.hadoop.fs.Path(dir.getParent,
-      dir.getName + "__old")
-    val fs = dir.getFileSystem(hconf)
-    val folded = readRollup(spark, path)
+    val url = graft.io.GraftIO.resolveUrl(path)
+    val staged = TierCompact.stageDir(spark, url, "__compact")
+    readRollup(spark, path)
       .withColumnRenamed("day", "__pdate")
       .withColumn("seg", F.lit("base"))
       .repartition(F.col("__pdate"))
-    folded.write.mode("overwrite").partitionBy("seg", "__pdate")
-      .parquet(tmp.toString) // materializes BEFORE the source moves aside
-    fs.delete(old, true)
-    require(fs.rename(dir, old), "compactRollup: move-aside failed")
-    require(fs.rename(tmp, dir), "compactRollup: swap-in failed")
-    fs.delete(old, true)
+      .write.partitionBy("seg", "__pdate")
+      .parquet(staged) // materializes BEFORE the layout moves aside
+    TierCompact.swapLayout(spark, url, staged, "compactRollup")
   }
 }

@@ -767,10 +767,10 @@ object Similarity {
     *
     * On a path that ALREADY holds an index this is an atomic in-place
     * rebuild: the new layout lands COMPLETE under a sibling staging dir
-    * and swaps in as one unit ([[swapLayout]]) — readers never see
-    * tables from two builds, and a crash leaves either the old layout,
-    * the new one, or a loud missing-meta window, never a silent mix of
-    * new `assigned` cells against old `centroids`.
+    * and swaps in as one unit ([[TierCompact.swapLayout]]) — readers
+    * never see tables from two builds, and a crash leaves either the old
+    * layout, the new one, or a loud missing-meta window, never a silent
+    * mix of new `assigned` cells against old `centroids`.
     *
     * A raw rebuild over a WHITENED layout is a space DOWNGRADE and is
     * refused unless `convertWhitened = true`: the caller is almost
@@ -827,10 +827,10 @@ object Similarity {
             "convertWhitened = true to convert deliberately")
       val idx = ivfIndex(corpus, corpusId, corpusVec, nlist, iters,
         trainSample, seed)
-      val staged = stageDir(spark, path, "__rebuild")
+      val staged = TierCompact.stageDir(spark, path, "__rebuild")
       writeIvfTables(spark, idx, staged, iters, trainSample, seed,
         whitened, modelFp, sq8)
-      swapLayout(spark, path, staged, "rebuild")
+      TierCompact.swapLayout(spark, path, staged, "rebuild")
     } else {
       val idx = ivfIndex(corpus, corpusId, corpusVec, nlist, iters,
         trainSample, seed)
@@ -1138,9 +1138,10 @@ object Similarity {
     * deterministic pipeline as [[writeIvfIndex]] (same ids + same seed ⇒
     * identical sample, identical centroids — spec-pinned), folds all
     * segments into `base`, and commits the complete new layout as ONE
-    * whole-directory swap ([[swapLayout]] — a whitened layout's PCA
-    * model is byte-copied into the stage first, so the swapped-in
-    * layout is complete and the model's fingerprint is unchanged). */
+    * whole-directory swap ([[TierCompact.swapLayout]] — a whitened
+    * layout's PCA model is byte-copied into the stage first, so the
+    * swapped-in layout is complete and the model's fingerprint is
+    * unchanged). */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, nlist: Int = 16, iters: Int = 5,
       trainSample: Int = 10000, seed: Long = 42): Unit = {
@@ -1159,7 +1160,7 @@ object Similarity {
     stored = stored.select("corpus_id", "cv")
     val idx = ivfIndex(stored, F.col("corpus_id"), F.col("cv"), nlist,
       iters, trainSample, seed)
-    val staged = stageDir(spark, path, "__retrain")
+    val staged = TierCompact.stageDir(spark, path, "__retrain")
     writeIvfTables(spark, idx, staged, iters, trainSample, seed,
       meta.whitened, meta.modelFp, meta.sq8)
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -1169,7 +1170,7 @@ object Similarity {
       require(org.apache.hadoop.fs.FileUtil.copy(fs, pcaSrc, fs,
           new org.apache.hadoop.fs.Path(s"$staged/pca"), false, hconf),
         "retrain: copying the PCA model into the staged layout failed")
-    swapLayout(spark, path, staged, "retrain")
+    TierCompact.swapLayout(spark, path, staged, "retrain")
   }
 
   /** Is the persisted index a whitened layout? (One cached meta read —
@@ -1184,91 +1185,6 @@ object Similarity {
   private[graft] def ivfIndexNlist(
       spark: org.apache.spark.sql.SparkSession, path: String): Int =
     readIvfMeta(spark, path).centroids.length
-
-  /** Strip trailing slashes so sibling names (`<path>__rebuild`,
-    * `<path>__old`) attach to the directory name, not an empty
-    * trailing segment. */
-  private def normPath(path: String): String = {
-    var p = path
-    while (p.length > 1 && p.endsWith("/")) p = p.substring(0, p.length - 1)
-    p
-  }
-
-  /** Recursive-delete `p` ONLY if it is absent, empty, or every child
-    * is a recognizable index table (meta/assigned/centroids/pca/
-    * postings/features) or hidden — i.e. a crashed prior stage/aside of
-    * OUR own making. The stage and aside live in a SIBLING namespace
-    * (`<path>__rebuild`, `<path>__old`), so a user's unrelated
-    * directory that happens to sit at that name must refuse loudly,
-    * never be silently destroyed. The known set is the UNION of every
-    * layout family routed through [[stageDir]]/[[swapLayout]] — the
-    * MinHash index ([[graft.operators.Dedup.writeMinhashIndex]]) stages
-    * features+postings+meta here, so omitting `features` broke its
-    * documented crash-retry (r14 ADVICE: a crashed minhash rebuild's
-    * leftovers read as "foreign data" and the retry refused). */
-  private def clearOwnedDir(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, what: String): Unit = {
-    if (!fs.exists(p)) return
-    val known =
-      Set("meta", "assigned", "centroids", "pca", "postings", "features")
-    val foreign = fs.listStatus(p).map(_.getPath.getName)
-      .filterNot(n => known.contains(n) ||
-        n.startsWith("_") || n.startsWith("."))
-    require(foreign.isEmpty,
-      s"$what: $p exists and does not look like a crashed index " +
-        s"stage/aside (unrecognized entries: ${foreign.mkString(", ")})" +
-        " — move it out of the way; refusing to delete foreign data")
-    fs.delete(p, true)
-    ()
-  }
-
-  /** Sibling staging dir for [[swapLayout]], cleared of any crashed prior
-    * attempt's leftovers. A SIBLING of `path`, not a child: the
-    * whole-directory swap could not otherwise move `path` aside without
-    * dragging the stage along with it. */
-  private[graft] def stageDir(spark: org.apache.spark.sql.SparkSession,
-      path: String, tag: String): String = {
-    val staged = normPath(path) + tag
-    val sp = new org.apache.hadoop.fs.Path(staged)
-    clearOwnedDir(
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration), sp,
-      "stageDir")
-    staged
-  }
-
-  /** Whole-layout atomic swap — the commit step every multi-table
-    * rebuild/retrain routes through (r13 ADVICE, medium). The new layout
-    * is staged COMPLETE at a sibling dir ([[stageDir]]) and replaces
-    * `path` wholesale: `path` → `<path>__old`, `staged` → `path`, drop
-    * the aside. Readers therefore never observe tables from two builds —
-    * the per-table sequential swap this replaces could crash between
-    * table renames and PERMANENTLY leave e.g. new MinHash postings under
-    * old meta (probes band-hash with the old (numHashes, bands) into a
-    * disjoint bucket space; near-dups silently pass) or new IVF
-    * `assigned` under old `centroids` (silent mis-probing the model_fp
-    * stamp only catches for the whitened family). The one remaining
-    * crash window — between the two directory renames — leaves NO live
-    * layout: readers fail LOUD on the missing meta, and both the old
-    * layout (at the aside) and the staged one survive intact; rename
-    * either back to recover. Fail-loud-recoverable, never silently
-    * mixed. On a rename-less object store this maps to writing a new
-    * index GENERATION and swapping a version pointer — same commit
-    * discipline, different primitive. */
-  private[graft] def swapLayout(spark: org.apache.spark.sql.SparkSession,
-      path: String, staged: String, what: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(normPath(path))
-    val tmp = new org.apache.hadoop.fs.Path(normPath(staged))
-    val old = new org.apache.hadoop.fs.Path(normPath(path) + "__old")
-    val fs = dir.getFileSystem(hconf)
-    clearOwnedDir(fs, old, what)
-    require(!fs.exists(dir) || fs.rename(dir, old),
-      s"$what: move-aside failed for $dir")
-    require(fs.rename(tmp, dir),
-      s"$what: swap-in failed for $dir — the old layout is preserved " +
-        s"at $old and the staged one at $tmp; rename one back to recover")
-    fs.delete(old, true)
-  }
 
   /** Fold every append segment into `base` WITHOUT retraining — a FULL
     * rewrite of the assigned table, O(index) per call (for a 24/7
@@ -1329,7 +1245,7 @@ object Similarity {
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, excludeSegment: Option[String] = None,
       maxCellRowsPerFile: Long = 0L): TierCompact.Report = {
-    val root = new org.apache.hadoop.fs.Path(normPath(path))
+    val root = new org.apache.hadoop.fs.Path(TierCompact.normPath(path))
     TierCompact.compactBase(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
       Seq("assigned"), excludeSegment)(
@@ -1441,7 +1357,7 @@ object Similarity {
       path: String, excludeSegment: Option[String] = None,
       fanout: Int = 4, baseFoldRatio: Double = 0.25,
       maxCellRowsPerFile: Long = 0L): TierCompact.Report = {
-    val root = new org.apache.hadoop.fs.Path(normPath(path))
+    val root = new org.apache.hadoop.fs.Path(TierCompact.normPath(path))
     TierCompact.compact(
       root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
       Seq("assigned"), excludeSegment, fanout, baseFoldRatio)(

@@ -28,7 +28,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * This object owns the INDEX-AGNOSTIC parts: the segment-label rule,
   * byte-size listing, the fold plan, deterministic tier naming, and the
   * intent-marker commit protocol that makes every fold crash-recoverable
-  * ([[commitFold]] around the index's own staging write, a [[Stage]]):
+  * ([[commitFold]] around the index's own staging write, a [[Stage]]),
+  * plus the whole-layout swap ([[swapLayout]]) that rebuild, retrain and
+  * the rollup fold commit through. The fold protocol:
   *
   *  1. stage each table's fold content COMPLETE at
   *     `__tierstage_<tier>/<table>` (index-specific write),
@@ -268,5 +270,92 @@ private[graft] object TierCompact {
     fs.delete(markerPath(root, fold.tier), false)
     fs.delete(dir, true)
     ()
+  }
+
+  // ---- whole-layout commit ------------------------------------------------
+  // Rebuild and retrain replace a layout's meta with its tables, and the
+  // rollup fold replaces every segment at once: those commit as ONE
+  // directory swap, not as a fold.
+
+  /** Strip trailing slashes so sibling names (`<path>__rebuild`,
+    * `<path>__old`) attach to the directory name, not an empty
+    * trailing segment. */
+  def normPath(path: String): String = {
+    var p = path
+    while (p.length > 1 && p.endsWith("/")) p = p.substring(0, p.length - 1)
+    p
+  }
+
+  /** Recursive-delete `p` ONLY if it is absent, empty, or every child
+    * is a recognizable layout table (meta/assigned/centroids/pca/
+    * postings/features, or a rollup's `seg=` segments) or hidden — i.e.
+    * a crashed prior stage/aside of OUR own making. The stage and aside
+    * live in a SIBLING namespace (`<path>__rebuild`, `<path>__old`), so
+    * a user's unrelated directory that happens to sit at that name must
+    * refuse loudly, never be silently destroyed. The known set is the
+    * UNION of every layout family routed through [[stageDir]]/
+    * [[swapLayout]] — the MinHash index stages features+postings+meta
+    * here, so omitting `features` broke its documented crash-retry (a
+    * crashed minhash rebuild's leftovers read as "foreign data" and the
+    * retry refused). */
+  private def clearOwnedDir(fs: FileSystem, p: Path, what: String): Unit = {
+    if (!fs.exists(p)) return
+    val known =
+      Set("meta", "assigned", "centroids", "pca", "postings", "features")
+    val foreign = fs.listStatus(p).map(_.getPath.getName)
+      .filterNot(n => known.contains(n) || n.startsWith("seg=") ||
+        n.startsWith("_") || n.startsWith("."))
+    require(foreign.isEmpty,
+      s"$what: $p exists and does not look like a crashed layout " +
+        s"stage/aside (unrecognized entries: ${foreign.mkString(", ")})" +
+        " — move it out of the way; refusing to delete foreign data")
+    fs.delete(p, true)
+    ()
+  }
+
+  /** Sibling staging dir for [[swapLayout]], cleared of any crashed prior
+    * attempt's leftovers. A SIBLING of `path`, not a child: the
+    * whole-directory swap could not otherwise move `path` aside without
+    * dragging the stage along with it. */
+  def stageDir(spark: org.apache.spark.sql.SparkSession, path: String,
+      tag: String): String = {
+    val staged = normPath(path) + tag
+    val sp = new Path(staged)
+    clearOwnedDir(sp.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      sp, "stageDir")
+    staged
+  }
+
+  /** Whole-layout atomic swap — the commit step every multi-table
+    * rebuild/retrain and the rollup fold route through. The new layout
+    * is staged COMPLETE at a sibling dir ([[stageDir]]) and replaces
+    * `path` wholesale: `path` → `<path>__old`, `staged` → `path`, drop
+    * the aside. Readers therefore never observe tables from two builds —
+    * a per-table sequential swap could crash between table renames and
+    * PERMANENTLY leave e.g. new MinHash postings under old meta (probes
+    * band-hash with the old (numHashes, bands) into a disjoint bucket
+    * space; near-dups silently pass) or new IVF `assigned` under old
+    * `centroids` (silent mis-probing the model_fp stamp only catches for
+    * the whitened family). The one remaining crash window — between the
+    * two directory renames — leaves NO live layout: readers fail LOUD on
+    * the missing meta, and both the old layout (at the aside) and the
+    * staged one survive intact; rename either back to recover.
+    * Fail-loud-recoverable, never silently mixed. On a rename-less
+    * object store this maps to writing a new layout GENERATION and
+    * swapping a version pointer — same commit discipline, different
+    * primitive. */
+  def swapLayout(spark: org.apache.spark.sql.SparkSession, path: String,
+      staged: String, what: String): Unit = {
+    val dir = new Path(normPath(path))
+    val tmp = new Path(normPath(staged))
+    val old = new Path(normPath(path) + "__old")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    clearOwnedDir(fs, old, what)
+    require(!fs.exists(dir) || fs.rename(dir, old),
+      s"$what: move-aside failed for $dir")
+    require(fs.rename(tmp, dir),
+      s"$what: swap-in failed for $dir — the old layout is preserved " +
+        s"at $old and the staged one at $tmp; rename one back to recover")
+    fs.delete(old, true)
   }
 }

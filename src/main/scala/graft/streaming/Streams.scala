@@ -523,10 +523,14 @@ object Streams {
     * every n-th batch (inside foreachBatch — the sink IS the single
     * writer between triggers), keeping the manifest read a bounded
     * handful of parts in the steady state. The compaction segment id is
-    * derived from the batch id, so a replayed batch re-compacts
-    * idempotently; a batch part replayed AFTER its rows were folded is
-    * also safe — the live view dedups by file, and the delete step's
-    * self-exclusion matches DATA paths, not part locations.
+    * derived from the batch id, so a replayed batch re-folds under the
+    * same label: the manifest's one part-commit rule writes the new
+    * compact part beside the earlier attempt's and deletes that one only
+    * afterwards, so a replay that crashes mid-fold never drops the folded
+    * table, and the next replay converges on the same view. A batch part
+    * replayed AFTER its rows were folded is also safe — the live view
+    * dedups by file, and the delete step's self-exclusion matches DATA
+    * paths, not part locations.
     * `retainFiles = true` keeps each batch's retired files for
     * [[graft.io.Manifest.manifestAsOf]] time travel; `keepHistory = n`
     * is the retention knob that stops `compactEvery` from collapsing the

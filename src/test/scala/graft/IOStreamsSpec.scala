@@ -1606,16 +1606,17 @@ class IOStreamsSpec extends SparkSpec {
     Manifest.deleteKeys(spark, dir + "/t", "id",
       (30L until 35L).toDF("id"), segment = "d2",
       retainFiles = true) // commit 3
-    def ids(asOf: Option[Long] = None): Seq[Long] = col1[Long](
-      Manifest.readSkipping(spark, dir + "/t", "id", 0L, 5000L,
+    def ids(asOf: Option[Long] = None, t: String = "/t"): Seq[Long] =
+      col1[Long](Manifest.readSkipping(spark, dir + t, "id", 0L, 5000L,
         asOf = asOf).orderBy("id"), "id")
     val expect = (0L until 450L)
       .filterNot(i => (i >= 10 && i < 20) || (i >= 30 && i < 35))
     assert(ids() == expect)
     val manBefore = Manifest.manifest(spark, dir + "/t")
       .orderBy("file").collect().toSeq
-    def partDirs(): Set[String] = new java.io.File(dir + "/t/_manifest/parts")
-      .listFiles().filter(_.isDirectory).map(_.getName).toSet
+    def partDirs(t: String = "/t"): Set[String] =
+      new java.io.File(dir + t + "/_manifest/parts")
+        .listFiles().filter(_.isDirectory).map(_.getName).toSet
     // keepLast = 1 through the DISTRIBUTED path: commit 3 stays
     // servable, the fold's stamp is commit 2, older is refused
     val live = Manifest.compactManifest(spark, dir + "/t", "c1",
@@ -1629,21 +1630,29 @@ class IOStreamsSpec extends SparkSpec {
     assert(ids(Some(3L)) == expect)
     assert(partDirs() == Set("seg=c1", "seg=d2"), partDirs().toString)
     intercept[IllegalArgumentException] { ids(Some(1L)) }
-    // full distributed fold, then an identical RETRY: converges, drops
-    // targetless carried tombstones, view stays equal
-    val n2 = Manifest.compactManifest(spark, dir + "/t", "c2",
-      driverFoldMaxBytes = 0L)
-    assert(n2 == manBefore.size)
-    assert(Manifest.compactManifest(spark, dir + "/t", "c2",
-      driverFoldMaxBytes = 0L) == n2)
-    assert(partDirs() == Set("seg=c2"), partDirs().toString)
-    assert(Manifest.manifest(spark, dir + "/t")
-      .orderBy("file").collect().toSeq == manBefore)
-    assert(spark.read.parquet(dir + "/t/_manifest/parts")
-      .filter("rows is null").count() == 0) // self-cleaned
-    assert(ids() == expect)
-    // no stage leftovers after a committed fold
-    assert(!new java.io.File(dir + "/t/_manifest/stage_compact").exists())
+    // full fold, then an identical RETRY — distributed on the layout,
+    // and on the driver route over a copy of the same parts (its rows
+    // name the same data files): converges, drops targetless carried
+    // tombstones, view stays equal, one part file and nothing else left
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(dir + "/t"), new java.io.File(dir + "/tDriver"))
+    for ((t, thr) <- Seq(("/t", 0L), ("/tDriver", Long.MaxValue))) {
+      val n2 = Manifest.compactManifest(spark, dir + t, "c2",
+        driverFoldMaxBytes = thr)
+      assert(n2 == manBefore.size, t)
+      assert(Manifest.compactManifest(spark, dir + t, "c2",
+        driverFoldMaxBytes = thr) == n2, t)
+      assert(partDirs(t) == Set("seg=c2"), partDirs(t).toString)
+      def visible(p: String) = new java.io.File(dir + t + p).list().toSeq
+        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      assert(visible("/_manifest/parts/seg=c2").size == 1, t)
+      assert(visible("/_manifest").toSet == Set("parts", "floor"), t)
+      assert(Manifest.manifest(spark, dir + t)
+        .orderBy("file").collect().toSeq == manBefore, t)
+      assert(spark.read.parquet(dir + t + "/_manifest/parts")
+        .filter("rows is null").count() == 0, t) // self-cleaned
+      assert(ids(t = t) == expect, t)
+    }
     // post-fold mutations still work
     Manifest.upsert(Seq((15L, "back"), (600L, "new")).toDF("id", "payload"),
       dir + "/t", "id", segment = "b2")
@@ -1657,65 +1666,6 @@ class IOStreamsSpec extends SparkSpec {
     assert(Manifest.compactManifest(spark, dir + "/t", "c3",
       driverFoldMaxBytes = 0L) == 0L)
     assert(Manifest.manifest(spark, dir + "/t").count() == 0)
-  }
-
-  test("manifest compaction aside: an orphaned .seg_*_old (crash between " +
-      "the fold's renames) fails loud at read time instead of serving a " +
-      "partial manifest; a stale aside WITH its twin is harmless") {
-    val dir = tmp("graft_man_aside")
-    Manifest.writeWithManifest((0L until 100L).map(i => (i, s"r$i"))
-      .toDF("id", "payload"), dir + "/t", statsCols = Seq("id"),
-      clusterCols = Seq("id"), targetFiles = 2) // commit 0
-    Manifest.appendWithManifest((100L until 120L).map(i => (i, s"a$i"))
-      .toDF("id", "payload"), dir + "/t", segment = "b1") // commit 1
-    Manifest.compactManifest(spark, dir + "/t", "c1", keepLast = 1,
-      driverFoldMaxBytes = 0L)
-    val parts = new java.io.File(dir + "/t/_manifest/parts")
-    assert(parts.listFiles().map(_.getName).toSet == Set("seg=c1", "seg=b1"))
-    // crash-between-renames simulation: the compact part moved aside,
-    // its replacement never swapped in — kept parts (seg=b1) survive,
-    // which is exactly the silently-partial window (r14 ADVICE)
-    val c1 = new java.io.File(parts, "seg=c1")
-    val aside = new java.io.File(parts, ".seg_c1_old")
-    assert(c1.renameTo(aside))
-    val e = intercept[IllegalArgumentException] {
-      Manifest.manifest(spark, dir + "/t").collect()
-    }
-    assert(e.getMessage.contains(".seg_c1_old"), e.getMessage)
-    // the documented recovery rename restores reads
-    assert(aside.renameTo(c1))
-    assert(Manifest.manifest(spark, dir + "/t").count() > 0)
-    // a stale aside WITH its twin (crash after swap-in, before the
-    // aside drop) reads fine, and the next compaction clears it
-    org.apache.commons.io.FileUtils.copyDirectory(c1, aside)
-    val live = Manifest.manifest(spark, dir + "/t").count()
-    assert(live > 0)
-    assert(Manifest.compactManifest(spark, dir + "/t", "c1",
-      driverFoldMaxBytes = 0L) > 0)
-    assert(!aside.exists())
-    // the orphaning hazard (r15 review): a later fold under a DIFFERENT
-    // label folds seg=c1 away — it must sweep c1's stale aside WITH the
-    // twin, or the aside guard would brick every later read of a
-    // healthy table (and its recovery advice would resurrect stale
-    // pre-fold parts). Exercised through BOTH folds.
-    for ((label, thr) <- Seq(("c2", 0L), ("c3", Long.MaxValue))) {
-      Manifest.appendWithManifest(
-        (200L until 210L).map(i => (i, s"x$i")).toDF("id", "payload"),
-        dir + "/t", segment = s"b_$label")
-      val prior = parts.listFiles().map(_.getName)
-        .filter(_.startsWith("seg=")).toSeq
-      assert(prior.nonEmpty)
-      val victim = prior.head.stripPrefix("seg=")
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(parts, s"seg=$victim"),
-        new java.io.File(parts, s".seg_${victim}_old"))
-      assert(Manifest.compactManifest(spark, dir + "/t", label,
-        driverFoldMaxBytes = thr) > 0)
-      assert(!new java.io.File(parts, s"seg=$victim").exists())
-      assert(!new java.io.File(parts, s".seg_${victim}_old").exists(),
-        s"orphaned aside survived the $label fold")
-      assert(Manifest.manifest(spark, dir + "/t").count() > 0)
-    }
   }
 
   test("distributed fold detects a multi-commit foreign part via footer " +
