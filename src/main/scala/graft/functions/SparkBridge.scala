@@ -446,18 +446,22 @@ object Bridge {
     }
   }
 
-  /** The Spark schema a Spark writer recorded in a parquet footer (the
+  /** The schema of one parquet file as a file-source read reports it:
+    * the Spark schema a Spark writer recorded in its footer (the
     * `org.apache.spark.sql.parquet.row.metadata` key schema inference
-    * itself prefers), with every field nullable as a file-source read
-    * reports it — one footer read, zero Spark jobs. None for a file
-    * without the key (a foreign writer). */
-  def parquetSparkSchema(conf: org.apache.hadoop.conf.Configuration,
+    * itself prefers), every field nullable — one footer read, zero Spark
+    * jobs. A file without the key (a foreign writer) falls back to one
+    * inference read, which runs a Spark job. */
+  def parquetSchema(session: org.apache.spark.sql.SparkSession,
       st: org.apache.hadoop.fs.FileStatus)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : org.apache.spark.sql.types.StructType = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try sparkSchemaOf(r.getFooter.getFileMetaData.getKeyValueMetaData)
-    finally r.close()
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+        session.sparkContext.hadoopConfiguration))
+    val stamped =
+      try sparkSchemaOf(r.getFooter.getFileMetaData.getKeyValueMetaData)
+      finally r.close()
+    stamped.getOrElse(session.read.parquet(st.getPath.toString).schema)
   }
 
   private def sparkSchemaOf(kv: java.util.Map[String, String])
@@ -472,7 +476,7 @@ object Bridge {
     * [[org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport]]
     * — the read-side twin of [[writeParquetDriverSide]]: same type
     * mapping and rebase handling as an executor scan, ZERO Spark jobs.
-    * The schema is the footer's Spark schema ([[parquetSparkSchema]]);
+    * The schema is the footer's Spark schema ([[parquetSchema]]);
     * rows are copied out of the reader's reused buffer. None when the
     * footer carries no Spark schema (a foreign writer — the caller keeps
     * its distributed read). Only for BOUNDED files (mutation-scale

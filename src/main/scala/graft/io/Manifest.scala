@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * posture, the only full-manifest materialization left).
   *
   * Small manifests are REPLAYED on the driver, as Delta replays a small
-  * transaction log: when the parts total at most 8 MiB of parquet (the
-  * `driverFoldMaxBytes` bound [[compactManifest]] already routes by),
+  * transaction log: when the parts total at most 8 MiB of parquet
+  * ([[graft.DriverMaxBytes]], the bound connected components shares;
+  * [[compactManifest]]'s `driverFoldMaxBytes` defaults to it),
   * every reader — [[manifest]], [[manifestAsOf]], [[readSkipping]],
   * [[deleteKeys]], [[vacuum]], the compaction fold — reads the parts
   * with the driver-side parquet reader and composes them in memory, with
@@ -83,11 +84,6 @@ object Manifest {
   // orphans. The manifest is readable at every prefix and never loses a
   // row.
   private def partsPath(url: String) = url + "/_manifest/parts"
-
-  /** Parts up to this many bytes of parquet are replayed on the driver
-    * (see the object doc); [[compactManifest]]'s `driverFoldMaxBytes`
-    * defaults to it. */
-  private val DriverReplayMaxBytes = 8L << 20
 
   // ---- recorded data schema -------------------------------------------------
   // Every part's `__commit` field carries the layout's DATA schema (the
@@ -334,7 +330,7 @@ object Manifest {
     * the distributed read keeps today's inference there. Loud when no
     * manifest exists. */
   private def parts(spark: SparkSession, url: String,
-      driverMaxBytes: Long = DriverReplayMaxBytes): Parts = {
+      driverMaxBytes: Long = graft.DriverMaxBytes): Parts = {
     val files = partFiles(spark, url)
     require(files.nonEmpty,
       s"no manifest at $url — write the layout with writeWithManifest")
@@ -389,10 +385,7 @@ object Manifest {
       .flatMap(d => fs.listStatus(d.getPath).toSeq.filter(isDataFile)
         .sortBy(_.getPath.getName).headOption)
       .nextOption()
-      .map(st => Bridge.parquetSparkSchema(hconf, st)
-        // a foreign writer's file: infer, as a read would
-        .getOrElse(spark.read.parquet(st.getPath.toString).schema)
-        .fieldNames.toSeq)
+      .map(st => Bridge.parquetSchema(spark, st).fieldNames.toSeq)
   }
 
   /** A batch whose COLUMN SET drifted from the table's (renamed, missing,
@@ -1093,7 +1086,7 @@ object Manifest {
     *
     * The fold is size-routed by [[parts]], the route every manifest
     * reader shares: manifests up to `driverFoldMaxBytes` of parquet
-    * (default: the 8 MiB replay bound) fold on the driver over the
+    * (default: [[graft.DriverMaxBytes]], 8 MiB) fold on the driver over the
     * replayed rows ([[compactDriverFold]] — zero read jobs, measured flat
     * to 300k rows), bigger ones fold distributed
     * ([[compactDistributedFold]] — never materialized on the driver; the
@@ -1102,7 +1095,7 @@ object Manifest {
     * the threshold; specs pin equality. */
   def compactManifest(spark: SparkSession, path: String,
       segment: String, keepLast: Int = 0,
-      driverFoldMaxBytes: Long = DriverReplayMaxBytes): Long = {
+      driverFoldMaxBytes: Long = graft.DriverMaxBytes): Long = {
     requireSafeSegment(segment, "compactManifest")
     require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
     val url = GraftIO.resolveUrl(path)

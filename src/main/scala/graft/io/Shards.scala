@@ -1,7 +1,9 @@
 package graft.io
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import org.apache.spark.sql.{functions => F}
 
@@ -130,7 +132,7 @@ object Shards {
     // below get explicit FILE paths, so their FileIndex never re-lists a
     // directory
     val byShard = scala.collection.mutable.SortedMap
-      .empty[Long, Vector[String]]
+      .empty[Long, Vector[FileStatus]]
     val iter = fs.listFiles(root, true)
     while (iter.hasNext) {
       val st = iter.next()
@@ -139,28 +141,13 @@ object Shards {
       if (st.isFile && !p.getName.startsWith("_") &&
           !p.getName.startsWith(".") && dir.startsWith("shard="))
         byShard.updateWith(dir.stripPrefix("shard=").toLong)(
-          v => Some(v.getOrElse(Vector.empty) :+ p.toString))
+          v => Some(v.getOrElse(Vector.empty) :+ st))
     }
     require(byShard.nonEmpty,
       s"readShards: no shard=N directories under $path — not a " +
         "writeShards layout")
-    // schema read ONCE, driver-side, from the first file's parquet
-    // FOOTER (the Manifest commit-stamp pattern — zero Spark jobs, no
-    // relation built just to infer): Spark writers stamp the exact
-    // StructType into the footer's key-value metadata; a foreign file
-    // without the stamp falls back to one relation-based inference
-    val firstFile = new org.apache.hadoop.fs.Path(byShard.head._2.head)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(firstFile, hconf))
-    val stamped =
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      finally reader.close()
-    val schema = stamped.getOrElse(
-      spark.read.parquet(firstFile.toString).schema)
+    // schema read ONCE, from the first file's footer
+    val schema = Bridge.parquetSchema(spark, byShard.head._2.head)
     // one explicit-file read per shard: coalesce(1) fuses any
     // maxPartitionBytes splits of the shard file back into ONE partition
     // (a shuffle-free concatenation — the unit of trainer consumption is
@@ -191,7 +178,7 @@ object Shards {
         case Seq(a) => a
       }.toSeq)
     fold(byShard.toSeq.map { case (sid, files) =>
-      spark.read.schema(schema).parquet(files: _*)
+      spark.read.schema(schema).parquet(files.map(_.getPath.toString): _*)
         .coalesce(1)
         .withColumn("shard", F.lit(sid))
         .sortWithinPartitions(F.col("pos"))
@@ -232,9 +219,11 @@ object Shards {
     val files = fs.listStatus(dir)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
+      .sortBy(_.getPath.toString)
     require(files.nonEmpty, s"readShard: shard=$shardId is empty on disk")
-    spark.read.parquet(files: _*)
+    // the schema from the first file's footer: no inference job
+    spark.read.schema(Bridge.parquetSchema(spark, files.head))
+      .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
       .coalesce(1)
       .withColumn("shard", F.lit(shardId))
       .sortWithinPartitions(F.col("pos"))

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Gdf
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Deduplication operators for large-scale text corpora — beyond the
@@ -12,8 +13,11 @@ import org.apache.spark.sql.types._
   * family: exact, MinHash+LSH, SimHash, and n-gram Jaccard.
   *
   * Scale design: every variant is expressed as hash → shuffle-on-key →
-  * per-key reduction, the shape that survives 100 TB (no driver collects,
-  * no cross joins; candidate generation is always bucket-local).
+  * per-key reduction, the shape that survives 100 TB (no cross joins;
+  * candidate generation is always bucket-local). The one driver collect
+  * is bounded: connected components finish on the driver only when their
+  * edges fit under [[graft.DriverMaxBytes]] (8 MiB), and larger graphs
+  * keep the distributed rounds ([[duplicateClusters]]).
   */
 object Dedup {
 
@@ -362,23 +366,31 @@ object Dedup {
     * large-star / small-star rounds (Kiveris et al., "Connected Components
     * in MapReduce and Beyond"), which converge in O(log² n) rounds on ANY
     * graph shape — chains included, where one-hop label propagation would
-    * need O(diameter) rounds. Each round is two aggregate+join passes over
-    * the edge table (always pairs-scale, monotonically shrinking toward
-    * one star edge per non-root node):
+    * need O(diameter) rounds. Each round:
     *  - large-star: every node attaches its LARGER neighbors to the
     *    minimum of its neighborhood (including itself);
     *  - small-star: every node attaches its smaller-or-equal neighbors
     *    (and itself) to that minimum.
     * Edges stay canonically (hi, lo); a fixed point is exactly the star
     * forest whose centers are the component minima, detected IN the round
-    * that produces it (see the in-loop comment). A graph that has not
+    * that produces it (see [[distributedStars]]). A graph that has not
     * reached it within `maxIterations` rounds throws rather than return
     * wrong labels.
     *
     * The pair input is read ONCE, in the job that checkpoints its
     * canonical edges, so an expensive pair pipeline (LSH + verification)
-    * runs once with no cache; per-round `localCheckpoint` cuts lineage
-    * like every iterative operator here. */
+    * runs once with no cache. The same job counts the edges, and the
+    * count picks the route under the driver bound the manifest replay
+    * uses ([[graft.DriverMaxBytes]], 8 MiB):
+    *  - edges that fit at 16 B per (hi, lo) row, with bigint ids (every
+    *    pair operator here emits them), are collected in ONE job and the
+    *    rounds run in memory; the labels come back as a local relation;
+    *  - larger graphs run each round distributed: two aggregate+join
+    *    passes over the edge table (pairs-scale, monotonically shrinking
+    *    toward one star edge per non-root node), a `localCheckpoint` to
+    *    cut lineage and one job for the star-forest test.
+    * Both routes run the same rounds, so they return the same labels
+    * under the same schema and fail on the same budget. */
   def duplicateClusters(pairs: DataFrame, maxIterations: Int = 20): DataFrame =
     duplicateClustersStar(pairs, maxIterations)
 
@@ -386,45 +398,74 @@ object Dedup {
     * (large-star/small-star, same output contract, same loud failure),
     * with a 30-round default budget; `duplicateClusters` calls it. */
   def duplicateClustersStar(pairs: DataFrame,
-      maxIterations: Int = 30): DataFrame = {
-    // canonical (hi, lo), deduped, in ONE pass over the pairs; the same
-    // job counts the non-self-loop rows (`observe`: the metric fills
-    // during the eager checkpoint and is read back from its executed plan)
+      maxIterations: Int = 30): DataFrame =
+    starClusters(pairs, maxIterations, graft.DriverMaxBytes)
+
+  /** [[duplicateClustersStar]] with the driver bound as a parameter, so
+    * specs can force a route: `0L` distributed, `Long.MaxValue` driver. */
+  private[graft] def starClusters(pairs: DataFrame, maxIterations: Int,
+      driverMaxBytes: Long): DataFrame = {
+    // canonical (hi, lo) in ONE pass over the pairs, with no dedup
+    // shuffle: every round's output is a set (its min-aggregates and
+    // closing distinct ignore repeated rows), so duplicate pairs change
+    // nothing from the first round on. The same job counts the rows and
+    // the non-self-loop rows (`observe`: the metrics fill during the eager
+    // checkpoint and are read back from its executed plan)
     val canon = pairs
       .filter(F.col("id_a").isNotNull && F.col("id_b").isNotNull)
       .select(F.greatest(F.col("id_a"), F.col("id_b")).as("hi"),
         F.least(F.col("id_a"), F.col("id_b")).as("lo"))
-      .distinct()
-      .observe("cc_edges", F.count_if(F.col("hi") =!= F.col("lo")).as("n"))
-    val ck = canon.localCheckpoint()
+      .observe("cc_edges", F.count_if(F.col("hi") =!= F.col("lo")).as("n"),
+        F.count(F.lit(1)).as("rows"))
+    val (ck, release) = Bridge.snapshotManaged(canon)
+    val seen = canon.queryExecution.observedMetrics("cc_edges")
     val selfNodes = ck.filter(F.col("hi") === F.col("lo"))
-    var edges = ck.filter(F.col("hi") =!= F.col("lo"))
+    val edges = ck.filter(F.col("hi") =!= F.col("lo"))
+    val noEdges = seen.getLong(0) == 0L
+    if (ck.schema("hi").dataType != LongType ||
+        seen.getLong(1) >= driverMaxBytes / 16L)
+      distributedStars(edges, selfNodes, noEdges, maxIterations)
+    else {
+      // one job packs each partition's rows into one primitive array
+      val flat = ck.queryExecution.toRdd.mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator(b.result())
+      }.collect().flatten
+      release()
+      val (ids, label) = localStars(flat, maxIterations)
+      val out = new java.util.ArrayList[Row](ids.length)
+      ids.indices.foreach(i => out.add(Row(ids(i), ids(label(i)))))
+      // the schema the distributed route returns, whose nullability
+      // follows whether any round ran (analysis only, no job)
+      val last = if (noEdges) edges else starRound(edges)
+      ck.sparkSession.createDataFrame(out, starLabels(last, selfNodes).schema)
+    }
+  }
+
+  private def notConverged(maxIterations: Int) =
+    new IllegalStateException(
+      s"duplicateClusters did not converge within $maxIterations " +
+        "rounds — raise maxIterations (bound is O(log² n) star rounds).")
+
+  /** Fixed point = star forest (child, root) with lo < hi: children label
+    * to their root, roots and self-loop nodes to themselves. A self-loop
+    * node that is also a child keeps its root, the smaller label. */
+  private def starLabels(edges: DataFrame, selfNodes: DataFrame): DataFrame =
+    edges.select(F.col("hi").as("id"), F.col("lo").as("cluster"))
+      .unionAll(edges.select(F.col("lo").as("id"), F.col("lo").as("cluster")))
+      .unionAll(selfNodes.select(F.col("hi").as("id"), F.col("hi").as("cluster")))
+      .groupBy("id").agg(F.min("cluster").as("cluster"))
+
+  /** The star rounds as Spark jobs, each round cut by a `localCheckpoint`
+    * and followed by one job for the star-forest test. */
+  private def distributedStars(edges0: DataFrame, selfNodes: DataFrame,
+      noEdges: Boolean, maxIterations: Int): DataFrame = {
+    var edges = edges0
+    var done = noEdges
     var iter = 0
-    var converged =
-      canon.queryExecution.observedMetrics("cc_edges").getLong(0) == 0L
-    while (!converged && iter < maxIterations) {
-      // ---- large-star: attach strictly-larger neighbors to the
-      // neighborhood minimum m(u) = min(Γ(u) ∪ {u}). NO intra-round
-      // distinct: the only consumers are min-aggregates and `next`'s own
-      // distinct, neither of which a duplicate row can perturb, and the
-      // duplicate volume is bounded by |bidir| = 2|E| — dropping the
-      // dedup shuffle saves two stages per round.
-      val bidir = edges.select(F.col("hi").as("u"), F.col("lo").as("v"))
-        .unionAll(edges.select(F.col("lo").as("u"), F.col("hi").as("v")))
-      val mLarge = bidir.groupBy("u")
-        .agg(F.least(F.col("u"), F.min("v")).as("m"))
-      val large = bidir.join(mLarge, "u")
-        .filter(F.col("v") > F.col("u") && F.col("v") =!= F.col("m"))
-        .select(F.col("v").as("hi"), F.col("m").as("lo"))
-      // ---- small-star: attach every ≤ neighbor (and the node itself) to
-      // m(hi) = min(Γ≤(hi) ∪ {hi}) — all los are < hi, so m = min(lo)
-      val mSmall = large.groupBy("hi").agg(F.min("lo").as("m"))
-      val next = large.join(mSmall, "hi")
-        .filter(F.col("lo") =!= F.col("m"))
-        .select(F.col("lo").as("hi"), F.col("m").as("lo"))
-        .unionAll(mSmall.select(F.col("hi"), F.col("m").as("lo")))
-        .distinct()
-        .localCheckpoint()
+    while (!done && iter < maxIterations) {
+      val next = starRound(edges).localCheckpoint()
       // IN-ROUND fixed-point detection. Both star ops preserve the
       // invariant lo < hi, so the alternation's fixed point — each
       // component one star centered on its minimum — is EXACTLY "the edge
@@ -437,7 +478,7 @@ object Dedup {
       // (count, xor) signature screen needed one more identity round to
       // see the signature repeat, plus an exceptAll confirmation against
       // hash collisions; this test is exact and a round cheaper.
-      converged = next
+      done = next
         .select(F.col("hi").as("n"), F.lit(1L).as("h"), F.lit(0L).as("r"))
         .unionAll(next
           .select(F.col("lo").as("n"), F.lit(0L).as("h"), F.lit(1L).as("r")))
@@ -447,17 +488,99 @@ object Dedup {
       edges = next
       iter += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"duplicateClusters did not converge within $maxIterations " +
-          "rounds — raise maxIterations (bound is O(log² n) star rounds).")
-    // fixed point = star forest (child, root) with lo < hi: children label
-    // to their root, roots and self-loop nodes to themselves. A self-loop
-    // node that is also a child keeps its root, the smaller label.
-    edges.select(F.col("hi").as("id"), F.col("lo").as("cluster"))
-      .unionAll(edges.select(F.col("lo").as("id"), F.col("lo").as("cluster")))
-      .unionAll(selfNodes.select(F.col("hi").as("id"), F.col("hi").as("cluster")))
-      .groupBy("id").agg(F.min("cluster").as("cluster"))
+    if (!done) throw notConverged(maxIterations)
+    starLabels(edges, selfNodes)
+  }
+
+  /** One large-star + small-star round over canonical (hi, lo) edges. */
+  private def starRound(edges: DataFrame): DataFrame = {
+    // ---- large-star: attach strictly-larger neighbors to the
+    // neighborhood minimum m(u) = min(Γ(u) ∪ {u}). NO intra-round
+    // distinct: the only consumers are min-aggregates and the round's
+    // closing distinct, neither of which a duplicate row can perturb, and the
+    // duplicate volume is bounded by |bidir| = 2|E| — dropping the
+    // dedup shuffle saves two stages per round.
+    val bidir = edges.select(F.col("hi").as("u"), F.col("lo").as("v"))
+      .unionAll(edges.select(F.col("lo").as("u"), F.col("hi").as("v")))
+    val mLarge = bidir.groupBy("u")
+      .agg(F.least(F.col("u"), F.min("v")).as("m"))
+    val large = bidir.join(mLarge, "u")
+      .filter(F.col("v") > F.col("u") && F.col("v") =!= F.col("m"))
+      .select(F.col("v").as("hi"), F.col("m").as("lo"))
+    // ---- small-star: attach every ≤ neighbor (and the node itself) to
+    // m(hi) = min(Γ≤(hi) ∪ {hi}) — all los are < hi, so m = min(lo)
+    val mSmall = large.groupBy("hi").agg(F.min("lo").as("m"))
+    large.join(mSmall, "hi")
+      .filter(F.col("lo") =!= F.col("m"))
+      .select(F.col("lo").as("hi"), F.col("m").as("lo"))
+      .unionAll(mSmall.select(F.col("hi"), F.col("m").as("lo")))
+      .distinct()
+  }
+
+  /** The rounds of [[distributedStars]] in memory over collected
+    * canonical rows (`flat` = hi, lo, hi, lo, ...; self-loops included),
+    * on dense int node indices in id order, so every round yields the
+    * same edge set as its distributed twin, the same star-forest test
+    * decides the same round, and the budget fails the same way. Returns
+    * the sorted node ids and, per node, the index of its label. */
+  private def localStars(flat: Array[Long],
+      maxIterations: Int): (Array[Long], Array[Int]) = {
+    val ids = sortedUnique(flat.clone())
+    val nodes = ids.length
+    val hiB = Array.newBuilder[Int]
+    val loB = Array.newBuilder[Int]
+    (0 until flat.length by 2).foreach { k =>
+      val h = java.util.Arrays.binarySearch(ids, flat(k))
+      val l = java.util.Arrays.binarySearch(ids, flat(k + 1))
+      if (h != l) { hiB += h; loB += l }
+    }
+    var hi = hiB.result()
+    var lo = loB.result()
+    var done = hi.isEmpty
+    var iter = 0
+    while (!done && iter < maxIterations) {
+      // large-star: m(u) = min(Γ(u) ∪ {u}) = min(u, its edges' los), and
+      // every edge (hi, lo) becomes (hi, m(lo)) — the larger neighbor hi
+      // attached to its lower end's neighborhood minimum
+      val m = Array.range(0, nodes)
+      hi.indices.foreach(e => if (lo(e) < m(hi(e))) m(hi(e)) = lo(e))
+      val largeLo = lo.map(l => m(l))
+      // small-star: ms(h) = min lo over h's large edges; every lo ≠ ms(h)
+      // attaches to ms(h), and so does h itself; then dedup
+      val ms = Array.fill(nodes)(Int.MaxValue)
+      hi.indices.foreach(e =>
+        if (largeLo(e) < ms(hi(e))) ms(hi(e)) = largeLo(e))
+      val next = Array.newBuilder[Long]
+      hi.indices.foreach { e =>
+        val r = ms(hi(e))
+        if (largeLo(e) != r) next += (largeLo(e).toLong << 32) | r
+      }
+      ms.indices.foreach(h =>
+        if (ms(h) != Int.MaxValue) next += (h.toLong << 32) | ms(h))
+      val keys = sortedUnique(next.result())
+      hi = keys.map(k => (k >>> 32).toInt)
+      lo = keys.map(_.toInt)
+      // the star-forest test: no hi repeats, no node both hi and lo
+      val hs = new Array[Int](nodes)
+      val isRoot = new Array[Boolean](nodes)
+      hi.indices.foreach { e => hs(hi(e)) += 1; isRoot(lo(e)) = true }
+      done = hs.indices.forall(v => hs(v) <= 1 && !(hs(v) > 0 && isRoot(v)))
+      iter += 1
+    }
+    if (!done) throw notConverged(maxIterations)
+    // star forest: a child labels to its root; roots and self-loop-only
+    // nodes to themselves (no index is both, see the test above)
+    val label = Array.range(0, nodes)
+    hi.indices.foreach(e => label(hi(e)) = lo(e))
+    (ids, label)
+  }
+
+  /** `a` sorted ascending without repeats (sorts `a` in place). */
+  private def sortedUnique(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    a.indices.foreach(i => if (i == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 })
+    java.util.Arrays.copyOf(a, n)
   }
 
   /** End-to-end near-dedup: MinHash-LSH pairs → connected components →

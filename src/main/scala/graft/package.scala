@@ -13,6 +13,12 @@ package object graft {
 
   def glit(v: Any): Series = Series(F.lit(v))
 
+  /** The one bound on data a route brings to the driver instead of
+    * running distributed: manifest parts up to it replay on the driver
+    * ([[graft.io.Manifest]]), and connected components whose edges fit
+    * under it finish there ([[graft.operators.Dedup.duplicateClusters]]). */
+  private[graft] val DriverMaxBytes: Long = 8L << 20
+
   implicit class RichDataFrame(private val df: DataFrame) extends AnyVal {
     def graft: Gdf = Gdf(df)
   }

@@ -1959,4 +1959,35 @@ class IOStreamsSpec extends SparkSpec {
       Shards.readShard(spark, dir + "/t", -1L)
     }
   }
+
+  test("shard reads take the schema from the parquet footer: " +
+      "readShard(...).count() runs one job; a file without Spark's " +
+      "footer schema falls back to inference") {
+    val dir = Files.createTempDirectory("graft_shard_footer").toString
+    val corpus = (0L until 60L).map(i => (i, s"doc $i")).toDF("id", "text")
+    Shards.writeShards(corpus, F.col("id"), 3, dir + "/t")
+    val shard1 = Shards.readShard(spark, dir + "/t", 1L)
+    assert(jobsDuring(shard1.count()) == 1)
+    assert(shard1.columns.toSeq == Seq("id", "text", "pos", "shard"))
+    // a foreign writer's shard file (no Spark schema in its footer)
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val fschema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 id; required int64 pos; }")
+    val f = new java.io.File(dir + "/f/shard=0")
+    assert(f.mkdirs() && new java.io.File(dir + "/f/_SUCCESS").createNewFile())
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(f.getPath + "/part-0.parquet"))
+      .withType(fschema).build()
+    val groups = new SimpleGroupFactory(fschema)
+    try Seq(7L -> 2L, 5L -> 1L).foreach { case (id, pos) =>
+      w.write(groups.newGroup().append("id", id).append("pos", pos)) }
+    finally w.close()
+    Seq(Shards.readShard(spark, dir + "/f", 0L),
+        Shards.readShards(spark, dir + "/f")).foreach { rd =>
+      assert(rd.select(F.col("id"), F.col("pos"), F.col("shard").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq == Seq((5L, 1L, 0L), (7L, 2L, 0L)))
+    }
+  }
 }

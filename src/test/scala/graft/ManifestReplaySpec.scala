@@ -111,36 +111,6 @@ class ManifestReplaySpec extends SparkSpec {
       Seq("id" -> "bigint", "s" -> "string", "v" -> "double"))
   }
 
-  /** Spark jobs started while `body` runs, bracketed by sentinel jobs so
-    * queued events of earlier work are not counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descs.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.job.description")).orNull))
-    }
-    def sentinel(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.range(1).collect()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!descs.contains(name) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(descs.contains(name), "listener events never arrived")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      sentinel("__jobs_before")
-      body
-      sentinel("__jobs_after")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val seen = descs.asScala.toSeq
-    seen.indexOf("__jobs_after") - seen.indexOf("__jobs_before") - 1
-  }
-
   test("a small manifest replays with zero Spark jobs: readSkipping " +
       "before its result is consumed, manifest / manifestAsOf collects, " +
       "vacuum; deleteKeys pays no metadata job") {

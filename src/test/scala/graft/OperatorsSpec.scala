@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import graft.operators._
@@ -145,15 +146,15 @@ class OperatorsSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
-  test("duplicateClusters evaluates its pair input once per pair row, " +
-      "however often the cluster table is consumed") {
-    // the pair frame is the expensive LSH + verification pipeline in
-    // dedupNear; a counting UDF stands in for it
+  /** The pair frame is the expensive LSH + verification pipeline in
+    * dedupNear; a counting UDF stands in for it. `cc` must evaluate it
+    * once per pair row, however often its cluster table is consumed. */
+  private def evaluatesPairsOnce(cc: DataFrame => DataFrame): Unit = {
     val evals = spark.sparkContext.longAccumulator("cc_pair_evals")
     val counted = F.udf { (x: Long) => evals.add(1L); x }.asNondeterministic()
     val pairs = Seq((2L, 1L), (2L, 3L), (9L, 7L), (4L, 4L))
       .toDF("id_a", "id_b").withColumn("id_a", counted(F.col("id_a")))
-    val clusters = Dedup.duplicateClusters(pairs)
+    val clusters = cc(pairs)
     // two consumers, as dedupNearKeepBest uses its cluster table: the
     // winner election over members, then the loser anti-join
     val members = Seq(1L, 2L, 3L, 4L, 7L, 9L).toDF("id").join(clusters, "id")
@@ -164,6 +165,30 @@ class OperatorsSpec extends SparkSpec {
     assert(losers == Seq(1L, 2L, 7L))
     assert(evals.value == 4L,
       s"pair input evaluated ${evals.value} times for 4 pair rows")
+  }
+
+  test("duplicateClusters evaluates its pair input once per pair row, " +
+      "however often the cluster table is consumed") {
+    evaluatesPairsOnce(Dedup.duplicateClusters(_))
+  }
+
+  // each route forced through the driver bound (0 bytes: distributed
+  // rounds; Long.MaxValue: the driver finish)
+  for ((route, bound) <- Seq("distributed" -> 0L, "driver" -> Long.MaxValue))
+    test(s"connected components on the $route route evaluate their pair " +
+        "input once") {
+      evaluatesPairsOnce(Dedup.starClusters(_, 30, bound))
+    }
+
+  test("a small pair graph finishes on the driver: the edge checkpoint " +
+      "and one collect, returned as a local relation") {
+    val pairs = Seq((2L, 1L), (2L, 3L), (9L, 7L), (4L, 4L)).toDF("id_a", "id_b")
+    var clusters: DataFrame = null
+    val jobs = jobsDuring { clusters = Dedup.duplicateClusters(pairs) }
+    assert(jobs <= 2, s"$jobs jobs for a 4-pair graph")
+    assert(clusters.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(jobsDuring(clusters.collect()) == 0)
   }
 
   test("dedupNear keeps one canonical doc per near-dup family") {

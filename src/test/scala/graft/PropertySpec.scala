@@ -135,29 +135,41 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // ---- connected components: random pair graphs against a local
+  // union-find, plus the fixed shapes below
+  private val ccEdgesGen = Gen.nonEmptyListOf(for {
+    a <- Gen.chooseNum(0L, 25L)
+    d <- Gen.chooseNum(1L, 5L)
+  } yield (a, a + d)).map(_.take(40))
+
+  private def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  private def pairFrame(es: Seq[(Long, Long)]) =
+    df(schema("id_a" -> LongType, "id_b" -> LongType),
+      es.map(e => Seq(e._1, e._2)): _*)
+
+  private def labels(clusters: org.apache.spark.sql.DataFrame) =
+    clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** A 40-edge chain (diameter 40). */
+  private val chain = (0L until 40L).map(i => (i, i + 1))
+
   test("duplicateClusters equals a local union-find on random pair graphs") {
-    import org.apache.spark.sql.{functions => F}
-    val edgesGen = Gen.nonEmptyListOf(for {
-      a <- Gen.chooseNum(0L, 25L)
-      d <- Gen.chooseNum(1L, 5L)
-    } yield (a, a + d)).map(_.take(40))
-    forAll(edgesGen, n = 6) { es =>
+    forAll(ccEdgesGen, n = 6) { es =>
       if (es.nonEmpty) {
-        val pairs = df(schema("id_a" -> LongType, "id_b" -> LongType),
-          es.map(e => Seq(e._1, e._2)): _*)
-        val got = operators.Dedup.duplicateClusters(pairs).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // local union-find reference
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val want = parent.keys.map(v => v -> find(v)).toMap
+        val got = labels(operators.Dedup.duplicateClusters(pairFrame(es)))
+        val want = unionFind(es)
         assert(got == want, s"clusters $got vs $want for edges $es")
       }
     }
@@ -165,42 +177,20 @@ class PropertySpec extends SparkSpec {
 
   test("duplicateClustersStar equals union-find on random graphs and chains") {
     import org.apache.spark.sql.{functions => F}
-    val edgesGen = Gen.nonEmptyListOf(for {
-      a <- Gen.chooseNum(0L, 25L)
-      d <- Gen.chooseNum(1L, 5L)
-    } yield (a, a + d)).map(_.take(40))
-    def unionFind(es: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keys.map(v => v -> find(v)).toMap
-    }
-    forAll(edgesGen, n = 4) { es =>
+    forAll(ccEdgesGen, n = 4) { es =>
       if (es.nonEmpty) {
-        val pairs = df(schema("id_a" -> LongType, "id_b" -> LongType),
-          es.map(e => Seq(e._1, e._2)): _*)
-        val got = operators.Dedup.duplicateClustersStar(pairs).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val got = labels(operators.Dedup.duplicateClustersStar(pairFrame(es)))
         assert(got == unionFind(es), s"star clusters differ for $es")
       }
     }
     // a 40-edge chain (diameter 40): star rounds collapse it in O(log² n),
     // well inside both names' default budgets (duplicateClusters' 20
     // rounds is half the diameter)...
-    val chain = (0L until 40L).map(i => (i, i + 1))
-    val chainDf = df(schema("id_a" -> LongType, "id_b" -> LongType),
-      chain.map(e => Seq(e._1, e._2)): _*)
-    val star = operators.Dedup.duplicateClustersStar(chainDf, maxIterations = 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val chainDf = pairFrame(chain)
+    val star = labels(
+      operators.Dedup.duplicateClustersStar(chainDf, maxIterations = 8))
     assert(star == (0L to 40L).map(_ -> 0L).toMap)
-    assert(operators.Dedup.duplicateClusters(chainDf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+    assert(labels(operators.Dedup.duplicateClusters(chainDf)) ==
       (0L to 40L).map(_ -> 0L).toMap)
     // ...and a budget too small to reach the fixed point throws rather
     // than return wrong labels
@@ -214,13 +204,67 @@ class PropertySpec extends SparkSpec {
     val withSelf = df(schema("id_a" -> LongType, "id_b" -> LongType),
       Seq(1L, 2L), Seq(9L, 9L), Seq(2L, 2L), Seq(5L, null))
     val expect = Map(1L -> 1L, 2L -> 1L, 9L -> 9L)
-    assert(operators.Dedup.duplicateClustersStar(withSelf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
-    assert(operators.Dedup.duplicateClusters(withSelf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
+    assert(labels(operators.Dedup.duplicateClustersStar(withSelf)) == expect)
+    assert(labels(operators.Dedup.duplicateClusters(withSelf)) == expect)
     // no pairs (a corpus without near-dups): no clusters
     assert(operators.Dedup.duplicateClusters(
       withSelf.filter(F.col("id_a") < 0L)).collect().isEmpty)
+  }
+
+  // each route forced through the driver bound: 0 bytes sends every graph
+  // through the distributed rounds, Long.MaxValue finishes every graph on
+  // the driver
+  for ((route, bound) <- Seq("distributed" -> 0L, "driver" -> Long.MaxValue))
+    test(s"connected components on the $route route: union-find on random " +
+        "graphs, the 40-edge chain and its budget, self-loops, null sides, " +
+        "empty input") {
+      import org.apache.spark.sql.{functions => F}
+      def cc(pairs: org.apache.spark.sql.DataFrame, maxIterations: Int) =
+        operators.Dedup.starClusters(pairs, maxIterations, bound)
+      forAll(ccEdgesGen, n = 4) { es =>
+        if (es.nonEmpty)
+          assert(labels(cc(pairFrame(es), 30)) == unionFind(es),
+            s"$route clusters differ for $es")
+      }
+      // the chain at both names' default budgets, and a budget of one
+      // round throws on either route
+      val chainDf = pairFrame(chain)
+      val chainLabels = (0L to 40L).map(_ -> 0L).toMap
+      assert(labels(cc(chainDf, 30)) == chainLabels)
+      assert(labels(cc(chainDf, 20)) == chainLabels)
+      val e = intercept[IllegalStateException](cc(chainDf, 1))
+      assert(e.getMessage.contains("did not converge within 1 rounds"))
+      val withSelf = df(schema("id_a" -> LongType, "id_b" -> LongType),
+        Seq(1L, 2L), Seq(9L, 9L), Seq(2L, 2L), Seq(5L, null))
+      assert(labels(cc(withSelf, 30)) == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
+      assert(cc(withSelf.filter(F.col("id_a") < 0L), 30).collect().isEmpty)
+    }
+
+  test("connected components: both routes return the same schema and " +
+      "labels, over non-null and nullable id columns, and need the same " +
+      "number of rounds") {
+    import spark.implicits._
+    val inputs = Seq(
+      Seq((2L, 1L), (1L, 2L), (2L, 3L), (9L, 7L), (4L, 4L))
+        .toDF("id_a", "id_b"),
+      df(schema("id_a" -> LongType, "id_b" -> LongType),
+        Seq(2L, 1L), Seq(2L, 3L), Seq(9L, 7L), Seq(4L, 4L), Seq(5L, null)))
+    inputs.foreach { pairs =>
+      val Seq(dist, driver) = Seq(0L, Long.MaxValue)
+        .map(operators.Dedup.starClusters(pairs, 30, _))
+      assert(driver.schema == dist.schema)
+      assert(labels(driver) == labels(dist))
+      assert(labels(driver) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 7L -> 7L, 9L -> 7L))
+    }
+    // the fewest rounds the chain needs on the driver route is exactly
+    // the distributed route's: one round less throws there too
+    def converges(bound: Long, rounds: Int) =
+      scala.util.Try(operators.Dedup.starClusters(pairFrame(chain), rounds,
+        bound)).isSuccess
+    val fewest = (1 to 30).find(converges(Long.MaxValue, _)).get
+    assert(fewest > 1)
+    assert(converges(0L, fewest) && !converges(0L, fewest - 1))
   }
 
   test("chunk invariants: full coverage, window sizes, overlap stitching") {

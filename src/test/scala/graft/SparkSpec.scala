@@ -46,6 +46,36 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       System.currentTimeMillis() - 600000L + k * 2000L))
   }
 
+  /** Spark jobs started while `body` runs, bracketed by sentinel jobs so
+    * queued events of earlier work are not counted. */
+  def jobsDuring(body: => Unit): Int = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    def sentinel(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).collect()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!descs.contains(name) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(descs.contains(name), "listener events never arrived")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      sentinel("__jobs_before")
+      body
+      sentinel("__jobs_after")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = descs.asScala.toSeq
+    seen.indexOf("__jobs_after") - seen.indexOf("__jobs_before") - 1
+  }
+
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * math.max(1.0, math.abs(b))
 }
